@@ -35,19 +35,23 @@ Lifecycle semantics mirrored file:line by file:line:
 
 from __future__ import annotations
 
-import glob
 import hashlib
 import json
 import os
 import re
 import shutil
-from dataclasses import dataclass, field
+from collections.abc import Callable
+from dataclasses import dataclass, field, replace
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from dbt_decodable_spark.dialect import normalize
+from dbt_decodable_spark.operators import ivm_dag, ivm_join as ij, ivm_log
+from dbt_decodable_spark.operators import ivm_temporal as it
+from dbt_decodable_spark.operators.ivm import agg_spec_from_sql
 from dbt_decodable_spark.schema import StreamSchema
+from dbt_decodable_spark.streaming import changelog as cl
 
 
 class CatalogError(ValueError):
@@ -56,21 +60,13 @@ class CatalogError(ValueError):
 
 def _advance_stream_offsets(spark, src_path: str, schema, ckpt: str) -> None:
     """Commit stream offsets over ``src_path``'s current files WITHOUT
-    applying them — the bounded no-op pass both incremental arms run as the
-    FIRST init step. The caller must list/fold the source only AFTER this
+    applying them — the bounded no-op pass every raw input of a maintained
+    node runs as its FIRST init step. The caller must list/fold the source only AFTER this
     returns: every file this pass commits as consumed is then included in
     the fold's listing, and a file landing in the gap is folded AND later
     replayed, converging by the fold tolerance (the reverse order silently
     dropped gap files: committed as consumed, never folded)."""
-    q = (
-        spark.readStream.schema(schema)
-        .parquet(src_path)
-        .writeStream.foreachBatch(lambda df, bid: None)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_available_now(spark, src_path, schema, ckpt, lambda df, bid: None)
 
 
 def _write_atomic(path: str, content: str) -> None:
@@ -440,9 +436,7 @@ class Engine:
                 "to declare exactly one watermark column (its version "
                 "start) — or activate incrementally with dim_valid_from="
             )
-        import dataclasses
-
-        spec = dataclasses.replace(spec0, valid_from=wms[0])
+        spec = replace(spec0, valid_from=wms[0])
         return _enrich(
             self.spark.table(self.qualify(ftbl)),
             self.spark.table(self.qualify(dtbl)),
@@ -559,6 +553,13 @@ class Engine:
                 if sdef.path:
                     self.spark.read.parquet(sdef.path).createOrReplaceTempView(src)
 
+    # -- maintained pipelines ----------------------------------------------
+    #
+    # Every incremental entry point builds a node set and hands it to ONE
+    # runner (activate_project_incremental / _run_nodes). The runner owns
+    # the root protocol; the _KINDS table at the bottom of this module
+    # supplies what differs per node kind.
+
     def activate_pipeline_incremental(
         self,
         name: str,
@@ -567,253 +568,19 @@ class Engine:
         bucket_expr: str | None = None,
         compact_every: int = 4,
         emit_changes: bool = False,
-    ):
-        """Run the pipeline as a CONTINUOUSLY-MAINTAINED materialization —
-        the reference platform's actual execution model for an aggregate
-        model over a change stream (``handler.py:89-94`` last-after-image
-        fold on a ``primary_key``-constrained stream, ``schema.py:109-111``;
-        the behavior behind the dbt adapter's rejected ``incremental``
-        materialization, ``dbt/include/decodable/macros/materializations/
-        unsupported/incremental.sql``). Requirements: the pipeline SQL is
-        the provable GROUP BY shape (``ivm.agg_spec_from_sql``), its single
-        source declares a primary key, and ``order`` names the change-order
-        columns (default: the source's watermark column, with the primary
-        key appended as the tie-breaker).
-
-        Bounded run (availableNow): new source appends flow through
-        ``operators/ivm_log.stream_maintain_view`` — the view advances at
-        O(|batch|) append cost, never a recompute — and the sink stream is
-        re-materialized from the maintained view afterwards so catalog
-        readers see the reference-shaped result. First activation advances
-        the stream checkpoint over the current source files with a no-op
-        bounded pass BEFORE folding them into the snapshot (same init
-        protocol as the join arm: files the pass commits are listed by the
-        later fold, gap files are folded AND replayed — convergent, never
-        lost — and the real stream runs only post-init appends instead of
-        replaying the whole source through maintenance). Init completion
-        is gated on a marker written last; a crash mid-init redoes it.
-        Repeated activations resume from the stream checkpoint; any replay
-        converges because replayed images tie with the snapshot and
-        contribute nothing (the fold's replay tolerance).
-
-        ``emit_changes`` maintains the rollup's OWN change log at
-        ``_ivm_<name>/out`` (group-keyed upserts/tombstones with
-        ``__seq``/``__deleted``) — what lets a FURTHER maintained stage
-        consume this rollup, closing the aggregate-over-raw-stream
-        composition gap in :meth:`activate_project_incremental` (the
-        reference lets ANY model's sink source the next model,
-        ``impl.py:419-447``). Same protocol as the DAG arm: the init image
-        lands as the floor-seq-0 batch, every micro-batch emits its
-        group-level changes BEFORE the state append
-        (``ivm_log_batch_changes`` — crash replays converge by tag), and
-        the emission choice is persisted at init: enabling late is
-        impossible and disabling for one activation would punch a
-        permanent gap, so both raise.
-        """
-        from dbt_decodable_spark.operators import ivm_log
-        from dbt_decodable_spark.operators.ivm import agg_spec_from_sql
-        from dbt_decodable_spark.streaming.changelog import (
-            write_hash_partitioned,
+    ) -> None:
+        """Maintain a GROUP BY pipeline over a keyed raw change stream: a
+        one-node :meth:`activate_project_incremental` set (kind ``_ivm_``).
+        ``order`` defaults to the source's watermark columns; ``bucket_expr``
+        and ``compact_every`` tune the aggregate state log;
+        ``emit_changes`` keeps the rollup's change log at
+        ``_ivm_<name>/out`` (see :meth:`read_pipeline_changes`)."""
+        self._run_nodes(
+            {name: dict(order=order, delete_col=delete_col,
+                        agg_bucket_expr=bucket_expr,
+                        emit_changes=emit_changes)},
+            agg_compact_every=compact_every, shapes={name: "agg"},
         )
-
-        if not self.warehouse_dir:
-            raise CatalogError("incremental activation needs a warehouse_dir engine")
-        p = self.pipelines[self.qualify(name)]
-        spec, tbl = agg_spec_from_sql(p.sql)
-        if tbl not in p.sources:
-            raise CatalogError(
-                f"view source {tbl!r} is not a registered source of {p.name!r}"
-            )
-        sdef = self.streams[tbl]
-        keys = list(sdef.schema.primary_key)
-        if not keys:
-            raise CatalogError(
-                f"{tbl!r} declares no primary_key — not a change stream "
-                "(schema.py:109-111); incremental maintenance needs keyed "
-                "upserts"
-            )
-        if order is None:
-            if not sdef.schema.watermarks:
-                raise CatalogError(
-                    "pass order= (change-order columns): the source has no "
-                    "watermark column to default to"
-                )
-            order = [w.name for w in sdef.schema.watermarks]
-        order = list(order) + [k for k in keys if k not in order]
-        if not sdef.path:
-            raise CatalogError(f"source stream {tbl!r} is not parquet-backed")
-
-        src_schema = self.spark.read.parquet(sdef.path).schema
-        # fire-before-write (join-arm invariant): a reserved source column
-        # rejected only inside the snapshot writer or the first maintenance
-        # batch would fire AFTER the root dir and checkpoint offsets were
-        # created for a pipeline that can never activate. __bucket is the
-        # snapshot layout column; __g/__k/__gbucket/__mult are the names
-        # the ivm_log state machinery stacks onto source rows (the same
-        # set the DAG arm rejects on its sink columns).
-        bad_src = sorted(
-            set(src_schema.fieldNames())
-            & {"__bucket", "__g", "__k", "__gbucket", "__mult"}
-        )
-        if bad_src:
-            raise CatalogError(
-                f"source column(s) {bad_src} collide with reserved "
-                "maintenance-state names"
-            )
-        if emit_changes:
-            bad_out = sorted(set(spec.outputs()) & {"__seq", "__deleted"})
-            if bad_out:
-                raise CatalogError(
-                    f"view output name(s) {bad_out} collide with reserved "
-                    "change-log columns — rename the aggregate aliases"
-                )
-        root = os.path.join(self.warehouse_dir, f"_ivm_{p.name}")
-        snap_path = os.path.join(root, "snapshot")
-        out_log = os.path.join(root, "out")
-        emit_file = os.path.join(root, "_emit_changes")
-        ckpt = os.path.join(self.warehouse_dir, f"_ckpt_ivm_{p.name}")
-        # init completion is gated on a marker written LAST (r10, mirroring
-        # the join arm): gating on the root dir would let a crash between
-        # the snapshot write and ivm_log_init leave a root that later
-        # activations mistake for completed state. Every init write below
-        # is redo-safe (snapshot is mode-overwrite; ivm_log_init publishes
-        # a fresh _SUCCESS-gated generation that supersedes a partial one).
-        init_marker = os.path.join(root, "_init_done")
-        if not os.path.exists(init_marker) and glob.glob(
-            os.path.join(root, "agg", "v=*", "_SUCCESS")
-        ):
-            # pre-marker root whose init completed under the old
-            # isdir(root) gate — ADOPT it rather than re-initialize: a
-            # fresh watermark=-1 generation would re-apply the log's
-            # still-present counter deltas (folded-but-unvacuumed ones
-            # included) on top of a snapshot fold that already carries
-            # their effects — double-counted aggregates. "Completed" means
-            # EVERY state table has a published generation, not just agg:
-            # ivm_log_init publishes agg first, then the sup_<col> tables,
-            # so a crash between the publishes leaves agg committed with a
-            # support table missing — adopting THAT root wedges every later
-            # append on _latest_gen(sup_...) with a misleading
-            # FileNotFoundError. Nothing can have consumed such a root
-            # (appends fail on the missing generation before landing the
-            # agg delta), so clearing and re-initializing is the safe
-            # recovery — and the same clear covers the marker-gated path's
-            # own crash between ivm_log_init's per-table publishes, which
-            # ivm_log_init alone cannot redo (it refuses a root with
-            # committed agg generations).
-            from dbt_decodable_spark.streaming.changelog import (
-                list_deltas as _list_deltas,
-            )
-
-            if all(
-                glob.glob(os.path.join(root, f"sup_{c}", "v=*", "_SUCCESS"))
-                for c in spec.support_cols()
-            ) and (
-                # an EMITTING init is complete only once the out log's
-                # init image committed — a crash between the state publish
-                # and that seed must re-init, or fold(out log) would
-                # permanently miss every pre-existing group
-                not emit_changes
-                or any(
-                    os.path.basename(d).endswith("-init")
-                    for d in _list_deltas(out_log)
-                )
-            ):
-                _write_atomic(init_marker, "1")
-            else:
-                shutil.rmtree(root, ignore_errors=True)
-        if os.path.exists(init_marker):
-            # the emission choice is a property of the ROOT (the
-            # _run_downstream_stage rationale, verbatim): enabling late is
-            # impossible (the out log's init image is unrecoverable), and
-            # disabling for one activation would silently punch a
-            # permanent gap in the out log
-            if os.path.exists(emit_file):
-                with open(emit_file) as fh:
-                    persisted_emit = fh.read().strip() == "1"
-            else:
-                persisted_emit = os.path.isdir(out_log + ".__deltas__")
-                _write_atomic(emit_file, "1" if persisted_emit else "0")
-            if emit_changes and not persisted_emit:
-                raise CatalogError(
-                    "change emission must be enabled from the FIRST "
-                    "activation (the out log's init image is unrecoverable "
-                    f"later) — delete {root!r} to rebuild with emit_changes"
-                )
-            if persisted_emit and not emit_changes:
-                raise CatalogError(
-                    "this pipeline maintains an emitted change log — every "
-                    "activation must keep emitting (a non-emitting one "
-                    "would punch a permanent gap in the out log); pass "
-                    f"emit_changes=True, or delete {root!r} to rebuild "
-                    "without emission"
-                )
-        if not os.path.exists(init_marker):
-            os.makedirs(root, exist_ok=True)
-            # one-time setup: commit the stream offsets over the current
-            # source files FIRST (bounded no-op pass), THEN fold the
-            # snapshot and initialize the view from it — the real stream
-            # below then runs only post-init appends instead of replaying
-            # the whole source through maintenance (the pre-r10 behavior:
-            # one-time O(|source|) maintenance + source-sized snapshot
-            # deltas for data the snapshot already carried). See
-            # _advance_stream_offsets for the race-free ordering argument.
-            _advance_stream_offsets(self.spark, sdef.path, src_schema, ckpt)
-            # the fold's listing must happen AFTER the offset capture —
-            # do not hoist this read above the advance
-            src_now = self.spark.read.parquet(sdef.path)
-            from dbt_decodable_spark.streaming.changelog import fold_last_image
-
-            snap0 = fold_last_image(src_now, keys, [F.col(c) for c in order])
-            write_hash_partitioned(snap0, snap_path, keys, n_buckets=32)
-            ivm_log.ivm_log_init(
-                self.spark, root,
-                self.spark.read.parquet(snap_path).drop("__bucket"),
-                spec, delete_col=delete_col, bucket_expr=bucket_expr,
-            )
-            if emit_changes:
-                # the change log must be self-contained: the init image is
-                # its first batch (seq 0 — strictly below every emitted
-                # batch's batch_id+1), so fold(out log) == the view from
-                # init onward. A mid-init redo may fold a LARGER source
-                # than the first attempt did, so the stale out log is
-                # cleared first — nothing can have consumed it (the marker
-                # gates completion) and the "init" tag would otherwise
-                # dedupe the redo's fresher image.
-                from dbt_decodable_spark.streaming.changelog import (
-                    append_delta as _append_delta,
-                )
-
-                shutil.rmtree(out_log + ".__deltas__", ignore_errors=True)
-                init_img = (
-                    ivm_log.ivm_log_read(self.spark, root, spec)
-                    .withColumn("__seq", F.lit(0).cast("long"))
-                    .withColumn("__deleted", F.lit(False))
-                )
-                _append_delta(self.spark, out_log, init_img, tag="init")
-            _write_atomic(emit_file, "1" if emit_changes else "0")
-            _write_atomic(init_marker, "1")
-        stream_df = self.spark.readStream.schema(src_schema).parquet(sdef.path)
-        q = (
-            ivm_log.stream_maintain_view(
-                stream_df, root, snap_path,
-                keys, [F.col(c) for c in order], spec,
-                compact_every=compact_every, snapshot_n_buckets=32,
-                emit_log=out_log if emit_changes else None,
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        # reference-shaped sink: re-materialize the sink stream from the
-        # maintained view (a projection of the view log — O(|view|), the
-        # one reference-contract step that scales with the view, not the
-        # data)
-        self._materialize(
-            self.streams[p.sink], ivm_log.ivm_log_read(self.spark, root, spec)
-        )
-        p.active = True
-        return q
 
     def activate_pipeline_join_incremental(
         self,
@@ -826,344 +593,16 @@ class Engine:
         compact: bool = True,
         compact_min_deltas: int = 4,
     ):
-        """Run a TWO-SOURCE join pipeline as a continuously-maintained
-        materialization — the enrichment twin of
-        :meth:`activate_pipeline_incremental`. The pipeline SQL must be the
-        provable lookup-join shape (``ivm_join.join_spec_from_sql``:
-        ``SELECT f.*, d.col ... FROM fact f [LEFT] JOIN dim d ON f.fk =
-        d.pk``), both sources must declare a ``primary_key`` (change
-        streams, ``schema.py:109-111``), and the ON clause's dim columns
-        must be exactly the dim's primary key.
-
-        Persistence is three merge-on-read delta logs under the warehouse
-        (fact state, dim state, view) — every micro-batch APPENDS: the raw
-        batch to its side's state log, and the view's recomputed
-        touched-key change stream (``maintain_join_with_changes``) to the
-        view log. Appends are O(|batch| + dim-fanout); nothing rewrites
-        with the state.
-
-        Crash story: the VIEW delta commits before the side's state
-        delta, so a crash between the two replays the batch against state
-        that still EXCLUDES it — the recomputation is bit-identical, and
-        within the same activation the batch tag dedupes the re-append. A
-        replay under a RESTARTED activation carries a new epoch, so its
-        tags differ and duplicate deltas can land on either log — that is
-        convergent, not exactly-once: every delta is a last-image fold
-        ordered by ``__seq`` (view) or the source order columns (state),
-        and re-folding identical or older images picks the same winners.
-        (Even a state-first commit order would converge the same way —
-        a replayed batch TIES with its own state row and ties go to the
-        batch, re-emitting identical view changes; view-first is kept
-        because it recomputes from exactly the pre-batch state instead of
-        leaning on tie semantics.) View-delta seqs are ``(epoch, side,
-        batch_id)``-ordered so later activations win and dim batches (run
-        second) win over the same activation's fact batches — matching
-        application order.
-
-        Bounded run (availableNow), one stream per source, sequential;
-        repeated activations resume from the checkpoints and stream only
-        new appends. First activation advances both stream checkpoints
-        over the current source files WITHOUT applying them (a no-op
-        bounded pass), THEN folds the sources into the state snapshots
-        and the initial view — otherwise the fresh checkpoints would
-        replay the whole source through maintenance and append
-        full-view-sized deltas for data the snapshots already carry.
-        Offsets-before-snapshots is load-bearing for concurrent appends:
-        every file the no-op pass commits as consumed is listed before
-        the snapshot fold reads the source, so the fold includes it, and
-        a file landing between the offset capture and the fold is both
-        folded and later replayed through maintenance — convergent by
-        the fold tolerance above (re-folding identical images picks the
-        same winners), never a lost or wrong answer. (The reverse order
-        would commit gap files as consumed without ever folding them —
-        silent loss.) Init completion is gated on a marker written LAST
-        (not on the view-log directory, which Spark creates before the v0
-        write commits) and every init write is mode-overwrite, so a crash
-        mid-init simply redoes it: the re-run advances only files added
-        since, and the fold reads the full source regardless. A pre-marker
-        root whose v0 committed (``view/_SUCCESS``) is adopted as-is. The bucket
-        count is persisted in the root on first activation and a
-        re-activation with a different ``n_buckets`` raises — every merge
-        and compaction must hash with the layout the writer used, and a
-        mismatched expression would strand a key's old row in its old
-        bucket directory alongside the new one. With ``compact`` a log
-        folds into its partitioned
-        snapshot afterwards once it holds at least ``compact_min_deltas``
-        pending deltas (``compact_and_vacuum`` — the LSM minor compaction
-        on its size trigger; below the threshold reads fold the pending
-        deltas anyway), and the sink stream is re-materialized from the
-        view.
-        """
-        import dataclasses
-
-        from dbt_decodable_spark.operators import ivm_join as ij
-        from dbt_decodable_spark.streaming.changelog import (
-            append_delta,
-            fold_last_image,
-            list_deltas,
-            read_merged,
-            write_hash_partitioned,
+        """Maintain a ``SELECT f.*, d.col ... FROM fact f [LEFT] JOIN dim d
+        ON f.fk = d.pk`` lookup-join pipeline over two keyed raw change
+        streams: a one-node :meth:`activate_project_incremental` set (kind
+        ``_ivmj_``)."""
+        self._run_nodes(
+            {name: dict(fact_order=fact_order, dim_order=dim_order,
+                        fact_delete_col=fact_delete_col,
+                        dim_delete_col=dim_delete_col)},
+            n_buckets, compact, compact_min_deltas, shapes={name: "join"},
         )
-
-        if not self.warehouse_dir:
-            raise CatalogError("incremental activation needs a warehouse_dir engine")
-        p = self.pipelines[self.qualify(name)]
-        spec0, ftbl, dtbl = ij.join_spec_from_sql(p.sql, ())
-        for t in (ftbl, dtbl):
-            if t not in p.sources:
-                raise CatalogError(
-                    f"view source {t!r} is not a registered source of {p.name!r}"
-                )
-        fdef, ddef = self.streams[ftbl], self.streams[dtbl]
-        fkeys = list(fdef.schema.primary_key)
-        dkeys = list(ddef.schema.primary_key)
-        if not fkeys or not dkeys:
-            raise CatalogError(
-                "both join sides must declare primary_key — incremental "
-                "maintenance needs keyed change streams (schema.py:109-111)"
-            )
-        if tuple(dkeys) != spec0.dim_keys:
-            raise CatalogError(
-                f"ON-clause dim columns {spec0.dim_keys} must be exactly "
-                f"{dtbl!r}'s primary_key {tuple(dkeys)} — the dim snapshot "
-                "is keyed by it"
-            )
-        spec = dataclasses.replace(spec0, fact_keys=tuple(fkeys))
-
-        forder = self._change_order(fact_order, fdef, fkeys, "fact")
-        dorder = self._change_order(dim_order, ddef, dkeys, "dim")
-        for sdef, t in ((fdef, ftbl), (ddef, dtbl)):
-            if not sdef.path:
-                raise CatalogError(f"source stream {t!r} is not parquet-backed")
-
-        root = os.path.join(self.warehouse_dir, f"_ivmj_{p.name}")
-        fact_log = os.path.join(root, "fact")
-        dim_log = os.path.join(root, "dim")
-        view_log = os.path.join(root, "view")
-        fordc = lambda: [F.col(c) for c in forder]  # noqa: E731
-        dordc = lambda: [F.col(c) for c in dorder]  # noqa: E731
-        fschema = self.spark.read.parquet(fdef.path).schema
-        dschema = self.spark.read.parquet(ddef.path).schema
-        # every shape error must fire BEFORE the first filesystem write —
-        # a mid-init failure after partial writes would otherwise leave a
-        # root that later activations mistake for completed state
-        for out in spec.dim_payload:
-            if out in fschema.fieldNames():
-                raise CatalogError(
-                    f"payload name {out!r} collides with a fact column"
-                )
-        for side_name, col_, sch in (
-            ("fact", fact_delete_col, fschema),
-            ("dim", dim_delete_col, dschema),
-        ):
-            if col_ is not None and col_ not in sch.fieldNames():
-                raise CatalogError(
-                    f"{side_name}_delete_col {col_!r} is not a column of "
-                    f"the {side_name} stream"
-                )
-        # names this arm stacks onto the data, which a user column or
-        # payload output would be silently destroyed by (__bucket by
-        # write_hash_partitioned, __seq/__deleted by the view log) or
-        # duplicate-select (the _round sentinels) — rejecting them only in
-        # the maintenance round would fire AFTER init wrote the root,
-        # wedging the pipeline against this function's fire-before-write
-        # invariant
-        log_cols = {"__bucket", "__seq", "__deleted"}
-        bad_fact = sorted(set(fschema.fieldNames()) & (set(ij._RESERVED) | log_cols))
-        if bad_fact:
-            raise CatalogError(
-                f"fact column(s) {bad_fact} collide with reserved "
-                "maintenance names"
-            )
-        if "__bucket" in dschema.fieldNames():
-            raise CatalogError(
-                "dim column '__bucket' collides with the bucketed snapshot "
-                "layout column"
-            )
-        bad_payload = sorted(set(spec.dim_payload) & log_cols)
-        if bad_payload:
-            raise CatalogError(
-                f"payload output name(s) {bad_payload} collide with "
-                "reserved view-log columns"
-            )
-
-        # init completion is gated on a MARKER written last, not on the
-        # view-log directory: Spark creates the directory before the v0
-        # write commits, so a crash mid-write would leave a dir that an
-        # isdir gate mistakes for completed init — with the offsets already
-        # advanced, the partial (or empty) v0 silently loses every key the
-        # crash cut off. The marker plus redo-safe init writes (all
-        # mode-overwrite) close that window, same protocol as the
-        # aggregate/DAG arms.
-        nb_file = os.path.join(root, "_n_buckets")
-        init_marker = os.path.join(root, "_init_done")
-        if not os.path.exists(init_marker) and os.path.exists(
-            os.path.join(view_log, "_SUCCESS")
-        ):
-            # pre-marker root whose v0 write COMMITTED under the old
-            # isdir(view_log) gate — adopt; re-initializing would overwrite
-            # v0 (__seq=0) under the root's still-present higher-__seq view
-            # deltas, whose stale images would then out-fold the fresher
-            # recomputed snapshot
-            _write_atomic(init_marker, "1")
-        if not os.path.exists(init_marker):
-            if any(
-                list_deltas(log) for log in (fact_log, dim_log, view_log)
-            ):
-                # deltas can only land post-init, so this root completed
-                # init WITHOUT a committed v0 — an old-code crash mid-write
-                # that later activations appended onto; the base is
-                # unrecoverable (re-init would strand the deltas' seqs over
-                # a fresh v0) but the sources still hold every row
-                raise CatalogError(
-                    f"{root!r} has appended deltas but no committed view "
-                    "base — an old-code crash mid-init; delete the root to "
-                    "rebuild from the sources"
-                )
-            os.makedirs(root, exist_ok=True)
-            # persist the bucket layout FIRST: every later merge/compaction
-            # must hash with the writer's bucket expression (the
-            # write_hash_partitioned contract), so re-activations are
-            # validated against this file below
-            _write_atomic(nb_file, str(n_buckets))
-            # offsets BEFORE snapshots (see _advance_stream_offsets: the
-            # old snapshot-then-advance order silently dropped files
-            # landing in the gap — committed as consumed, never folded)
-            _advance_stream_offsets(
-                self.spark, fdef.path, fschema,
-                os.path.join(root, "_ckpt_fact"),
-            )
-            _advance_stream_offsets(
-                self.spark, ddef.path, dschema,
-                os.path.join(root, "_ckpt_dim"),
-            )
-            # the folds' listings must happen AFTER the offset captures —
-            # do not hoist these reads above the advances
-            fsnap = fold_last_image(
-                self.spark.read.parquet(fdef.path), fkeys, fordc()
-            )
-            dsnap = fold_last_image(
-                self.spark.read.parquet(ddef.path), dkeys, dordc()
-            )
-            write_hash_partitioned(fsnap, fact_log, fkeys, n_buckets)
-            write_hash_partitioned(dsnap, dim_log, dkeys, n_buckets)
-            v0 = (
-                ij.compute_join_view(
-                    self.spark.read.parquet(fact_log).drop("__bucket"),
-                    self.spark.read.parquet(dim_log).drop("__bucket"),
-                    spec, fact_delete_col, dim_delete_col,
-                )
-                .withColumn("__seq", F.lit(0).cast("long"))
-                .withColumn("__deleted", F.lit(False))
-            )
-            write_hash_partitioned(v0, view_log, fkeys, n_buckets)
-            _write_atomic(init_marker, "1")
-        if not os.path.exists(nb_file):
-            raise CatalogError(
-                f"{root!r} has a completed view log but no _n_buckets "
-                "record — the layout's bucket count is unknown; delete the "
-                "root to re-initialize"
-            )
-        with open(nb_file) as fh:
-            raw_nb = fh.read().strip()
-        try:
-            persisted_nb = int(raw_nb)
-        except ValueError:
-            raise CatalogError(
-                f"corrupt _n_buckets record {raw_nb!r} in {root!r} — "
-                "delete the root to re-initialize"
-            ) from None
-        if persisted_nb != n_buckets:
-            raise CatalogError(
-                f"n_buckets={n_buckets} does not match the bucket layout "
-                f"this view was created with ({persisted_nb}) — merges and "
-                "compaction must hash with the writer's bucket expression; "
-                f"re-activate with n_buckets={persisted_nb} or delete "
-                f"{root!r} to re-initialize"
-            )
-        epoch_file = os.path.join(root, "_epoch")
-        epoch = 0
-        if os.path.exists(epoch_file):
-            with open(epoch_file) as fh:
-                epoch = int(fh.read().strip() or 0)
-        epoch += 1
-        _write_atomic(epoch_file, str(epoch))
-
-        def _state():
-            # prune_fold: per-batch state reads SCAN the snapshots and
-            # shuffle only the pending-delta key slices (r12 — the
-            # measured merge-on-read step slope at 20x state)
-            return ij.JoinViewState(
-                fact=read_merged(
-                    self.spark, fact_log, fkeys, fordc(),
-                    include_tombstones=True, prune_fold=True,
-                ),
-                dim=read_merged(
-                    self.spark, dim_log, dkeys, dordc(),
-                    include_tombstones=True, prune_fold=True,
-                ),
-                # the view frame only shapes the (discarded) splice plan
-                view=read_merged(
-                    self.spark, view_log, fkeys, [F.col("__seq")],
-                    delete_col="__deleted", prune_fold=True,
-                ).drop("__seq", "__deleted"),
-            )
-
-        def _run_side(side, sdef, side_log):
-            sbit = 0 if side == "fact" else 1
-
-            def handle(batch_df, batch_id):
-                seq = ((epoch * 2 + sbit) << 33) + batch_id
-                tag = f"{side}-{epoch}-{batch_id}"
-                fb = batch_df if side == "fact" else self.spark.createDataFrame(
-                    [], fschema
-                )
-                db = batch_df if side == "dim" else self.spark.createDataFrame(
-                    [], dschema
-                )
-                _st, changes = ij.maintain_join_with_changes(
-                    _state(), fb, db, fordc(), dordc(), spec, seq=seq,
-                    fact_delete_col=fact_delete_col,
-                    dim_delete_col=dim_delete_col,
-                )
-                changes = changes.localCheckpoint(eager=True)
-                # VIEW delta first (see crash story in the docstring)
-                if changes.count() > 0:
-                    append_delta(
-                        self.spark, view_log, changes, tag=f"view-{tag}"
-                    )
-                append_delta(self.spark, side_log, batch_df, tag=tag)
-
-            q = (
-                self.spark.readStream.schema(
-                    fschema if side == "fact" else dschema
-                )
-                .parquet(sdef.path)
-                .writeStream.foreachBatch(handle)
-                .option(
-                    "checkpointLocation",
-                    os.path.join(root, f"_ckpt_{side}"),
-                )
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-        _run_side("fact", fdef, fact_log)
-        _run_side("dim", ddef, dim_log)
-
-        if compact:
-            self._compact_join_pipeline_logs(
-                p, n_buckets=n_buckets,
-                compact_min_deltas=compact_min_deltas,
-                fact_order=fact_order, dim_order=dim_order,
-            )
-        live = read_merged(
-            self.spark, view_log, fkeys, [F.col("__seq")],
-            delete_col="__deleted",
-        ).drop("__seq", "__deleted")
-        self._materialize(self.streams[p.sink], live)
-        p.active = True
 
     def activate_pipeline_temporal_incremental(
         self,
@@ -1175,345 +614,15 @@ class Engine:
         compact: bool = True,
         compact_min_deltas: int = 4,
     ):
-        """Run a TEMPORAL (``FOR SYSTEM_TIME AS OF``) join pipeline as a
-        continuously-maintained materialization — the SQL front door of the
-        SCD2-temporal IVM arm (:mod:`.operators.ivm_temporal`), making the
-        reference's change-stream dimension semantics
-        (``/root/reference/README.md:104``, ``decodable/client/
-        schema.py:109-111``) a first-class node kind. The pipeline SQL must
-        be the provable shape (``ivm_temporal.temporal_spec_from_sql``):
-        ``SELECT f.*, d.<col> [AS name] FROM fact f LEFT JOIN dim FOR
-        SYSTEM_TIME AS OF f.<ts> AS d ON f.<fk> = d.<pk>``. The dim's
-        version-start column defaults to its single watermark column
-        (versioning is a property of the dim STREAM, Flink's
-        versioned-table stance); override with ``dim_valid_from``.
-
-        Persistence is three logs under ``_ivmt_<name>``: the fact state
-        (merge-on-read, folded by the fact order), the dim HISTORY
-        (append-only — every version is retained; the SCD2 table is
-        rebuilt from it per micro-batch, O(|dim history|) over a
-        change-stream-contract-small dimension), and the view log
-        (``__seq``/``__deleted`` change stream a downstream stage consumes
-        exactly like a join node's). Per-batch view work is the operator's
-        touched-slice recompute — O(|batch| + version fanout), never a
-        view recompute; the fact snapshot the maintenance probes is the
-        post-append merge-on-read read, so no extra per-batch key shuffle
-        of the fact state (the ``snapshot_after`` caller-MERGE contract).
-
-        Commit ordering per side: the FACT side lands its state delta
-        FIRST (the post-append read IS the snapshot_after), the DIM side
-        lands its state delta LAST (the SCD2 merge must pre-date the
-        batch); both orders converge under replay — recomputation against
-        unchanged inputs is bit-identical and the view append dedupes on
-        the batch tag (the join arm's crash story, adapted).
-
-        Contracts inherited from the operator (pytest-pinned there): dim
-        versions arrive in ``valid_from`` order per key; dim keys are
-        never tombstoned (a temporal dim retires by emitting a new
-        version)."""
-        import dataclasses
-
-        from dbt_decodable_spark.operators import ivm_temporal as it
-        from dbt_decodable_spark.streaming.changelog import (
-            append_delta,
-            fold_last_image,
-            list_deltas,
-            read_merged,
-            scd2_from_changelog,
-            write_hash_partitioned,
+        """Maintain a ``FOR SYSTEM_TIME AS OF`` temporal-join pipeline: a
+        one-node :meth:`activate_project_incremental` set (kind
+        ``_ivmt_``). The dim's version-start column defaults to its single
+        watermark column."""
+        self._run_nodes(
+            {name: dict(fact_order=fact_order, dim_valid_from=dim_valid_from,
+                        fact_delete_col=fact_delete_col)},
+            n_buckets, compact, compact_min_deltas, shapes={name: "temporal"},
         )
-
-        if not self.warehouse_dir:
-            raise CatalogError("incremental activation needs a warehouse_dir engine")
-        p = self.pipelines[self.qualify(name)]
-        spec0, ftbl, dtbl = it.temporal_spec_from_sql(p.sql, (), "__pending__")
-        for t in (ftbl, dtbl):
-            if t not in p.sources:
-                raise CatalogError(
-                    f"view source {t!r} is not a registered source of {p.name!r}"
-                )
-        fdef, ddef = self.streams[ftbl], self.streams[dtbl]
-        fkeys = list(fdef.schema.primary_key)
-        dkeys = list(ddef.schema.primary_key)
-        if not fkeys or not dkeys:
-            raise CatalogError(
-                "both temporal-join sides must declare primary_key — "
-                "incremental maintenance needs keyed change streams "
-                "(schema.py:109-111)"
-            )
-        if [spec0.dim_key] != dkeys:
-            raise CatalogError(
-                f"ON-clause dim column {spec0.dim_key!r} must be exactly "
-                f"{dtbl!r}'s primary_key {tuple(dkeys)} — versions are "
-                "keyed by it"
-            )
-        valid_from = dim_valid_from
-        if valid_from is None:
-            wms = [w.name for w in ddef.schema.watermarks]
-            if len(wms) != 1:
-                raise CatalogError(
-                    "pass dim_valid_from= (the dim's version-start "
-                    "column): the dim stream does not have exactly one "
-                    "watermark column to default to"
-                )
-            valid_from = wms[0]
-        spec = dataclasses.replace(
-            spec0, fact_keys=tuple(fkeys), valid_from=valid_from
-        )
-        forder = self._change_order(fact_order, fdef, fkeys, "fact")
-        for sdef, t in ((fdef, ftbl), (ddef, dtbl)):
-            if not sdef.path:
-                raise CatalogError(f"source stream {t!r} is not parquet-backed")
-        fschema = self.spark.read.parquet(fdef.path).schema
-        dschema = self.spark.read.parquet(ddef.path).schema
-        # fire-before-write (the join arm's standing invariant)
-        for out in spec.payload:
-            if out in fschema.fieldNames():
-                raise CatalogError(
-                    f"payload name {out!r} collides with a fact column"
-                )
-        for col_, sch, side in (
-            (fact_delete_col, fschema, "fact_delete_col"),
-            (spec.fact_ts, fschema, "AS OF probe column"),
-            (spec.fk_col, fschema, "ON-clause fact column"),
-            (valid_from, dschema, "dim valid_from column"),
-            *((src, dschema, "payload source column")
-              for src in spec.payload.values()),
-        ):
-            if col_ is not None and col_ not in sch.fieldNames():
-                raise CatalogError(f"{side} {col_!r} is not a source column")
-        log_cols = {"__bucket", "__seq", "__deleted"}
-        reserved = set(it._RESERVED) | log_cols
-        bad_fact = sorted(set(fschema.fieldNames()) & reserved)
-        bad_dim = sorted(set(dschema.fieldNames()) & reserved)
-        bad_payload = sorted(set(spec.payload) & reserved)
-        if bad_fact or bad_dim or bad_payload:
-            raise CatalogError(
-                f"column(s) fact={bad_fact} dim={bad_dim} "
-                f"payload={bad_payload} collide with reserved temporal "
-                "maintenance names"
-            )
-
-        root = os.path.join(self.warehouse_dir, f"_ivmt_{p.name}")
-        fact_log = os.path.join(root, "fact")
-        dim_log = os.path.join(root, "dim")
-        view_log = os.path.join(root, "view")
-        fordc = lambda: [F.col(c) for c in forder]  # noqa: E731
-        dim_hist_keys = [spec.dim_key, valid_from]
-        nb_file = os.path.join(root, "_n_buckets")
-        init_marker = os.path.join(root, "_init_done")
-        if not os.path.exists(init_marker):
-            if any(list_deltas(log) for log in (fact_log, dim_log, view_log)):
-                raise CatalogError(
-                    f"{root!r} has appended deltas but no completed init — "
-                    "delete the root to rebuild from the sources"
-                )
-            os.makedirs(root, exist_ok=True)
-            _write_atomic(nb_file, str(n_buckets))
-            # offsets BEFORE snapshots (the join arm's race-free ordering)
-            _advance_stream_offsets(
-                self.spark, fdef.path, fschema,
-                os.path.join(root, "_ckpt_fact"),
-            )
-            _advance_stream_offsets(
-                self.spark, ddef.path, dschema,
-                os.path.join(root, "_ckpt_dim"),
-            )
-            fsnap = fold_last_image(
-                self.spark.read.parquet(fdef.path), fkeys, fordc()
-            )
-            write_hash_partitioned(fsnap, fact_log, fkeys, n_buckets)
-            # the dim log keeps EVERY version — keyed (dim key, valid_from)
-            # the fold is duplicate-elimination only, never version loss
-            write_hash_partitioned(
-                fold_last_image(
-                    self.spark.read.parquet(ddef.path),
-                    dim_hist_keys, [F.col(valid_from)],
-                ),
-                dim_log, dim_hist_keys, n_buckets,
-            )
-            v0 = (
-                it.recompute_temporal_view(
-                    self.spark.read.parquet(fact_log).drop("__bucket"),
-                    self.spark.read.parquet(dim_log).drop("__bucket"),
-                    spec, fordc(), fact_delete_col=fact_delete_col,
-                )
-                .withColumn("__seq", F.lit(0).cast("long"))
-                .withColumn("__deleted", F.lit(False))
-            )
-            write_hash_partitioned(v0, view_log, fkeys, n_buckets)
-            _write_atomic(init_marker, "1")
-        with open(nb_file) as fh:
-            raw_nb = fh.read().strip()
-        try:
-            persisted_nb = int(raw_nb)
-        except ValueError:
-            raise CatalogError(
-                f"corrupt _n_buckets record {raw_nb!r} in {root!r} — "
-                "delete the root to re-initialize"
-            ) from None
-        if persisted_nb != n_buckets:
-            raise CatalogError(
-                f"n_buckets={n_buckets} does not match the bucket layout "
-                f"this view was created with ({persisted_nb}) — re-activate "
-                f"with n_buckets={persisted_nb} or delete {root!r}"
-            )
-        epoch_file = os.path.join(root, "_epoch")
-        epoch = 0
-        if os.path.exists(epoch_file):
-            with open(epoch_file) as fh:
-                epoch = int(fh.read().strip() or 0)
-        epoch += 1
-        _write_atomic(epoch_file, str(epoch))
-
-        def _dim_rows():
-            # merge-on-read keyed by (dim key, valid_from): the fold is
-            # duplicate-elimination of replayed version rows only — every
-            # distinct version survives (the history is the state)
-            return read_merged(
-                self.spark, dim_log, dim_hist_keys, [F.col(valid_from)],
-                include_tombstones=True, prune_fold=True,
-            )
-
-        def _view():
-            return read_merged(
-                self.spark, view_log, fkeys, [F.col("__seq")],
-                delete_col="__deleted", prune_fold=True,
-            ).drop("__seq", "__deleted")
-
-        def _run_side(side, sdef, sschema):
-            sbit = 0 if side == "fact" else 1
-
-            def handle(batch_df, batch_id):
-                seq = ((epoch * 2 + sbit) << 33) + batch_id
-                tag = f"{side}-{epoch}-{batch_id}"
-                if side == "fact":
-                    # state FIRST: the post-append merge-on-read read IS
-                    # the snapshot_after (no extra per-batch fold)
-                    append_delta(self.spark, fact_log, batch_df, tag=tag)
-                fact_now = read_merged(
-                    self.spark, fact_log, fkeys, fordc(),
-                    include_tombstones=True, prune_fold=True,
-                )
-                # the maintenance only ever consumes versions of the
-                # batch's touched dim keys (fact side: its fks; dim side:
-                # its dks — the affected facts all carry those fks), so
-                # the SCD2 window folds a broadcast-semi-pruned slice of
-                # the history, not all of it: per-batch dim cost is
-                # O(touched keys' history), not O(|dim history|) — the
-                # large-dim scale path. Exact because SCD2 is a per-key
-                # computation; the operator's returned dim state is
-                # discarded (the next batch re-reads the logs).
-                if side == "fact":
-                    # The re-enrichment consumes the POST-MERGE WINNING
-                    # images of the batch's keys, and a stale/out-of-order
-                    # batch row can LOSE the merge to a snapshot image
-                    # carrying a DIFFERENT fk — so the winners' fks must
-                    # be in the pruned history too, or the LEFT as-of
-                    # re-enriches against a version set missing them and
-                    # emits a NULL-payload upsert over the correct view
-                    # row. Both arms stay batch-bounded (≤ 2·|batch| keys
-                    # broadcast): the batch's own fks ∪ the current
-                    # winning images' fks for the batch's pks.
-                    winner_fks = fact_now.join(
-                        F.broadcast(batch_df.select(*fkeys).distinct()),
-                        on=fkeys, how="left_semi",
-                    ).select(F.col(spec.fk_col).alias(spec.dim_key))
-                    touch_dk = (
-                        batch_df.select(
-                            F.col(spec.fk_col).alias(spec.dim_key)
-                        )
-                        .unionByName(winner_fks)
-                        .distinct()
-                    )
-                else:
-                    touch_dk = batch_df.select(spec.dim_key).distinct()
-                hist = _dim_rows().join(
-                    F.broadcast(touch_dk), on=spec.dim_key, how="left_semi"
-                )
-                state = it.TemporalJoinState(
-                    fact=fact_now,
-                    dim_versions=scd2_from_changelog(
-                        hist, [spec.dim_key], valid_from
-                    ),
-                    view=_view(),
-                )
-                fb = batch_df if side == "fact" else None
-                db = batch_df if side == "dim" else None
-                _st, changes = it.maintain_temporal_join_with_changes(
-                    state, fb, db, fordc(), spec, seq=seq,
-                    fact_delete_col=fact_delete_col,
-                    snapshot_after=fact_now,
-                )
-                changes = changes.localCheckpoint(eager=True)
-                if changes.count() > 0:
-                    append_delta(
-                        self.spark, view_log, changes, tag=f"view-{tag}"
-                    )
-                if side == "dim":
-                    # dim state LAST: the SCD2 merge must pre-date the batch
-                    append_delta(self.spark, dim_log, batch_df, tag=tag)
-
-            q = (
-                self.spark.readStream.schema(sschema)
-                .parquet(sdef.path)
-                .writeStream.foreachBatch(handle)
-                .option(
-                    "checkpointLocation", os.path.join(root, f"_ckpt_{side}")
-                )
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-        _run_side("fact", fdef, fschema)
-        _run_side("dim", ddef, dschema)
-
-        if compact:
-            self._compact_temporal_pipeline_logs(
-                p, n_buckets=n_buckets,
-                compact_min_deltas=compact_min_deltas,
-                fact_order=fact_order, dim_valid_from=dim_valid_from,
-            )
-        self._materialize(self.streams[p.sink], _view())
-        p.active = True
-
-    def _compact_temporal_pipeline_logs(
-        self,
-        p,
-        n_buckets: int,
-        compact_min_deltas: int,
-        fact_order: list[str] | None,
-        dim_valid_from: str | None,
-    ) -> None:
-        """The temporal arm's LSM compaction — the inline trigger above and
-        the project graph's deferred pass share this implementation (the
-        ``_compact_join_pipeline_logs`` pattern). The dim history log is
-        keyed (dim key, valid_from): its fold deduplicates replayed
-        version rows, never drops a version."""
-        from dbt_decodable_spark.operators import ivm_temporal as it
-        from dbt_decodable_spark.streaming.changelog import (
-            compact_and_vacuum,
-            list_deltas,
-        )
-
-        spec0, ftbl, dtbl = it.temporal_spec_from_sql(p.sql, (), "__pending__")
-        fdef, ddef = self.streams[ftbl], self.streams[dtbl]
-        fkeys = list(fdef.schema.primary_key)
-        valid_from = dim_valid_from or [w.name for w in ddef.schema.watermarks][0]
-        forder = self._change_order(fact_order, fdef, fkeys, "fact")
-        root = os.path.join(self.warehouse_dir, f"_ivmt_{p.name}")
-        for log, keys_, ord_ in (
-            (os.path.join(root, "fact"), fkeys, [F.col(c) for c in forder]),
-            (
-                os.path.join(root, "dim"),
-                [spec0.dim_key, valid_from],
-                [F.col(valid_from)],
-            ),
-            (os.path.join(root, "view"), fkeys, [F.col("__seq")]),
-        ):
-            if len(list_deltas(log)) >= compact_min_deltas:
-                compact_and_vacuum(self.spark, log, keys_, ord_, n_buckets)
 
     def activate_pipeline_dag_incremental(
         self,
@@ -1530,671 +639,31 @@ class Engine:
         agg_bucket_expr: str | None = None,
         emit_changes: bool = False,
     ):
-        """Run a TWO-STAGE model DAG as continuously-maintained
-        materializations: ``upstream`` is a lookup-join pipeline (the
-        :meth:`activate_pipeline_join_incremental` shape) and ``name`` is
-        an aggregate pipeline (the :meth:`activate_pipeline_incremental`
-        GROUP BY shape) whose FROM table is the upstream's sink stream —
-        the dbt ``sources → enriched → rollup`` chain the reference
-        platform runs as a pipeline-per-model graph over shared streams
-        (each model's sink stream is the next model's source;
-        ``impl.py:419-447`` creates exactly that stream+pipeline pair).
-
-        The downstream aggregate consumes the join view's CHANGE LOG —
-        never a recompute of the view: every activation first advances the
-        join stage (micro-batches append view deltas carrying
-        ``__seq``/``__deleted``), then folds the pending slice of that log
-        into the downstream aggregate state via one
-        ``ivm_log_append`` ordered by ``__seq`` (see
-        :mod:`.operators.ivm_dag` for the watermark protocol and why
-        batching telescopes correctly). Join-log compaction runs AFTER the
-        downstream step — the one cross-stage ordering invariant
-        (compacting the view log past an unconsumed watermark would make
-        the as-of state unreconstructible; ``maintain_downstream`` guards
-        it with a base ``max(__seq)`` probe and raises
-        ``DownstreamLagError``). Several aggregate pipelines may hang off
-        one upstream: each keeps its own watermark root; activate them all
-        before the view log accumulates ``compact_min_deltas`` deltas, or
-        rebuild a lagging one (``ivm_dag.rebuild_downstream`` — O(|view|),
-        nothing upstream re-runs).
-
-        Downstream init is gated on a marker written LAST and the root is
-        CLEARED before a (re)init — no downstream delta can exist before
-        the marker, so a crash mid-init redoes it without double-counting
-        (simpler than the aggregate arm's adoption path, which exists only
-        for pre-marker legacy roots).
-
-        ``emit_changes`` maintains the ROLLUP'S OWN change log under the
-        downstream root (``out/``) — the depth-3 composition surface: the
-        init image lands as a floor-seq batch and every consumption step
-        appends its group-keyed upserts/tombstones
-        (``ivm_log_batch_changes``, emitted BEFORE the state append so
-        crash replays converge by tag), making ``fold(out log)`` equal the
-        rollup view at every point. Read it with
-        :meth:`read_pipeline_changes`."""
-        from dbt_decodable_spark.operators import ivm_dag
-        from dbt_decodable_spark.operators.ivm import agg_spec_from_sql
-        from dbt_decodable_spark.operators.ivm_log import ivm_log_read
-
+        """Maintain the two-stage chain ``upstream`` (a lookup join) →
+        ``name`` (a GROUP BY over the join's sink): a two-node
+        :meth:`activate_project_incremental` set (``_ivmj_`` →
+        ``_ivmd_``)."""
         if not self.warehouse_dir:
             raise CatalogError("incremental activation needs a warehouse_dir engine")
         p_agg = self.pipelines[self.qualify(name)]
         p_join = self.pipelines[self.qualify(upstream)]
-        agg_spec, src_tbl = agg_spec_from_sql(p_agg.sql)
+        _spec, src_tbl = agg_spec_from_sql(p_agg.sql)
         if src_tbl != p_join.sink:
             raise CatalogError(
                 f"DAG shape: {p_agg.name!r} must aggregate the upstream's "
                 f"sink stream {p_join.sink!r}, not {src_tbl!r}"
             )
-        # fire-before-write: the downstream stacks __g/__k/__gbucket onto
-        # the view image and keys its state by the fact primary key, so a
-        # view column with one of those names would be silently destroyed
-        fkeys = list(self.streams[
-            # the join arm validated these exist; resolve the fact stream
-            # through the join SQL to key the downstream by its PK
-            self._dag_fact_stream(p_join)
-        ].schema.primary_key)
-        view_reserved = {"__g", "__k", "__gbucket", "__mult"}
-        sink_cols = set(
-            f.name for f in self.streams[p_join.sink].schema.fields
+        self._run_nodes(
+            {
+                upstream: dict(fact_order=fact_order, dim_order=dim_order,
+                               fact_delete_col=fact_delete_col,
+                               dim_delete_col=dim_delete_col),
+                name: dict(agg_bucket_expr=agg_bucket_expr,
+                           emit_changes=emit_changes),
+            },
+            n_buckets, compact, compact_min_deltas, agg_compact_every,
+            shapes={upstream: "join", name: "agg"},
         )
-        bad = sorted(sink_cols & view_reserved)
-        if bad:
-            raise CatalogError(
-                f"view column(s) {bad} collide with reserved downstream "
-                "aggregate state names"
-            )
-        # stage 1: advance the join view (compaction DEFERRED — the
-        # downstream must consume the new view deltas first)
-        self.activate_pipeline_join_incremental(
-            upstream,
-            fact_order=fact_order,
-            dim_order=dim_order,
-            fact_delete_col=fact_delete_col,
-            dim_delete_col=dim_delete_col,
-            n_buckets=n_buckets,
-            compact=False,
-        )
-        jroot = os.path.join(self.warehouse_dir, f"_ivmj_{p_join.name}")
-        view_log = os.path.join(jroot, "view")
-
-        # stage 2: fold the pending view changes into the downstream state
-        self._run_downstream_stage(
-            p_agg, agg_spec, view_log, fkeys,
-            emit_changes=emit_changes,
-            agg_bucket_expr=agg_bucket_expr,
-            agg_compact_every=agg_compact_every,
-        )
-
-        # stage 3: NOW the join logs may compact (downstream watermark has
-        # caught up to every committed view delta)
-        if compact:
-            self._compact_join_pipeline_logs(
-                p_join, n_buckets=n_buckets,
-                compact_min_deltas=compact_min_deltas,
-                fact_order=fact_order, dim_order=dim_order,
-            )
-        droot = os.path.join(self.warehouse_dir, f"_ivmd_{p_agg.name}")
-        self._materialize(
-            self.streams[p_agg.sink],
-            ivm_log_read(self.spark, droot, agg_spec),
-        )
-        p_agg.active = True
-
-    def _run_downstream_stage(
-        self,
-        p_agg,
-        agg_spec,
-        view_log: str,
-        keys: list[str],
-        emit_changes: bool,
-        agg_bucket_expr: str | None,
-        agg_compact_every: int,
-    ) -> int:
-        """One maintained-aggregate stage over an upstream CHANGE LOG —
-        the init-marker/emit-flag/watermark protocol shared by the
-        two-stage DAG (:meth:`activate_pipeline_dag_incremental`, upstream
-        = a join view log) and the N-node project graph
-        (:meth:`activate_project_incremental`, upstream = a join view log
-        OR another maintained rollup's emitted out log — the deltas-only
-        shape :mod:`.operators.ivm_dag` auto-detects). Returns the stage's
-        new consumed watermark."""
-        from dbt_decodable_spark.operators import ivm_dag
-
-        droot = os.path.join(self.warehouse_dir, f"_ivmd_{p_agg.name}")
-        out_log = os.path.join(droot, "out")
-        marker = os.path.join(droot, "_init_done")
-        # the emission choice is a property of the ROOT, not of one
-        # activation — persisted at init (like the join arm's _n_buckets)
-        # and validated every re-activation. Enabling late is impossible
-        # (the out log's init image is unrecoverable), and DISABLING for
-        # one activation would be worse than an error: maintenance would
-        # consume view seqs without emitting, silently punching a
-        # permanent gap in the out log that a later emitting activation
-        # papers over — fold(out log) would return stale pre-gap images
-        # with no error ever raised.
-        emit_file = os.path.join(droot, "_emit_changes")
-        if os.path.exists(marker):
-            if os.path.exists(emit_file):
-                with open(emit_file) as fh:
-                    persisted_emit = fh.read().strip() == "1"
-            else:
-                # pre-flag root: the out-deltas dir exists iff the root was
-                # built emitting; persist the inferred answer
-                persisted_emit = os.path.isdir(out_log + ".__deltas__")
-                _write_atomic(emit_file, "1" if persisted_emit else "0")
-            if emit_changes and not persisted_emit:
-                raise CatalogError(
-                    "change emission must be enabled from the FIRST "
-                    "activation (the out log's init image is unrecoverable "
-                    f"later) — delete {droot!r} to rebuild the downstream "
-                    "with emit_changes"
-                )
-            if persisted_emit and not emit_changes:
-                raise CatalogError(
-                    "this downstream maintains an emitted change log — "
-                    "every activation must keep emitting (a non-emitting "
-                    "one would punch a permanent gap in the out log); pass "
-                    f"emit_changes=True, or delete {droot!r} to rebuild "
-                    "without emission"
-                )
-        if not os.path.exists(marker):
-            # clear-then-init is redo-safe: appends are gated on the
-            # marker, so a partial root holds no consumed delta to lose
-            # (the out log lives under the root and is cleared with it)
-            import shutil as _sh
-
-            _sh.rmtree(droot, ignore_errors=True)
-            floor = ivm_dag.init_downstream(
-                self.spark, droot, view_log, keys, agg_spec,
-                bucket_expr=agg_bucket_expr,
-            )
-            if emit_changes:
-                # the change log must be self-contained: the init image is
-                # its first batch, so fold(out log) == the view from the
-                # floor onward
-                from dbt_decodable_spark.operators.ivm_log import ivm_log_read
-                from dbt_decodable_spark.streaming.changelog import append_delta
-
-                init_img = (
-                    ivm_log_read(self.spark, droot, agg_spec)
-                    .withColumn("__seq", F.lit(floor).cast("long"))
-                    .withColumn("__deleted", F.lit(False))
-                )
-                append_delta(self.spark, out_log, init_img, tag=str(floor))
-            _write_atomic(emit_file, "1" if emit_changes else "0")
-            _write_atomic(marker, "1")
-        return ivm_dag.maintain_downstream(
-            self.spark, droot, view_log, keys, agg_spec,
-            compact_every=agg_compact_every,
-            emit_log=out_log if emit_changes else None,
-        )
-
-    def _run_downstream_join_stage(
-        self,
-        p,
-        up_log: str,
-        up_keys: list[str],
-        dim_order: list[str] | None,
-        dim_delete_col: str | None,
-        n_buckets: int,
-    ) -> int:
-        """One maintained LOOKUP-JOIN stage whose FACT side consumes an
-        upstream node's CHANGE LOG instead of a raw stream — the last
-        composition gap vs the reference platform, where ANY model's sink
-        may source the next pipeline (``/root/reference/dbt/adapters/
-        decodable/impl.py:419-447``): rollup → enrich-join → rollup.
-
-        The insight that makes this the join arm unchanged: an upstream
-        change log IS a keyed CDC stream — ``__seq`` is the change order,
-        ``__deleted`` the tombstone flag. Ingest renames them to the
-        state-only names ``__useq``/``__udel`` (the join's own view log
-        stacks fresh ``__seq``/``__deleted`` onto its outputs), then the
-        standard maintenance round runs with ``fact_order=[__useq]``,
-        ``fact_delete_col="__udel"`` and both hidden from the view
-        projection (``fact_hidden_cols``) — the view columns are exactly
-        the upstream sink's columns plus the dim payload.
-
-        Consumption is the DAG arm's watermark protocol, not a Spark
-        stream (the upstream log is a delta directory whose files
-        compaction deletes — file-based checkpoints would break): pending
-        = upstream rows with ``__seq`` past the root's floor record,
-        processed as ONE batch (correct for any batching — the keyed merge
-        telescopes intermediate images), then the floor advances. Lag
-        guards mirror :func:`~.operators.ivm_dag.maintain_downstream`:
-        an upstream base/floor past this consumer's watermark raises
-        :class:`~.operators.ivm_dag.DownstreamLagError` (delete the root
-        to re-init from the current upstream state; downstream consumers
-        of THIS join's view log must rebuild with it).
-
-        Crash story (the join arm's, one level down): per batch the VIEW
-        delta commits first, the fact STATE delta second, the floor LAST —
-        a replay before the floor write recomputes bit-identical changes
-        (state still excludes the batch, or the batch ties with its own
-        landed state rows and changes nothing) and every append dedupes on
-        its deterministic ``up<watermark>`` tag. The dim side stays a raw
-        stream with the standard epoch/batch protocol; fact-stage view
-        seqs use the same ``(epoch, side, batch)`` space so a later dim
-        batch outranks this activation's fact batch, matching application
-        order. Returns the consumed upstream watermark."""
-        import dataclasses
-
-        from dbt_decodable_spark.operators import ivm_dag
-        from dbt_decodable_spark.operators import ivm_join as ij
-        from dbt_decodable_spark.streaming.changelog import (
-            append_delta,
-            fold_last_image,
-            list_deltas,
-            read_merged,
-            write_hash_partitioned,
-        )
-
-        spec0, ftbl, dtbl = ij.join_spec_from_sql(p.sql, ())
-        ftbl, dtbl = self.qualify(ftbl), self.qualify(dtbl)
-        spec = dataclasses.replace(spec0, fact_keys=tuple(up_keys))
-        ddef = self.streams[dtbl]
-        dkeys = list(ddef.schema.primary_key)
-        if not dkeys:
-            raise CatalogError(
-                "the dim side must declare primary_key — incremental "
-                "maintenance needs keyed change streams (schema.py:109-111)"
-            )
-        if tuple(dkeys) != spec.dim_keys:
-            raise CatalogError(
-                f"ON-clause dim columns {spec.dim_keys} must be exactly "
-                f"{dtbl!r}'s primary_key {tuple(dkeys)}"
-            )
-        if not ddef.path:
-            raise CatalogError(f"source stream {dtbl!r} is not parquet-backed")
-        dorder = self._change_order(dim_order, ddef, dkeys, "dim")
-        dordc = lambda: [F.col(c) for c in dorder]  # noqa: E731
-        fordc = lambda: [F.col("__useq")]  # noqa: E731
-
-        # fire-before-write: the fact side's columns are the upstream
-        # SINK's schema; reject collisions with the state-only ingest
-        # names, the view-log columns, and the round sentinels
-        up_fields = [f.name for f in self.streams[ftbl].schema.fields]
-        bad_fact = sorted(
-            set(up_fields)
-            & (
-                set(ij._RESERVED)
-                | {"__bucket", "__seq", "__deleted", "__useq", "__udel"}
-            )
-        )
-        if bad_fact:
-            raise CatalogError(
-                f"upstream sink column(s) {bad_fact} collide with reserved "
-                "maintenance names"
-            )
-        missing_fk = sorted(set(spec.fk_cols) - set(up_fields))
-        if missing_fk:
-            raise CatalogError(
-                f"fk column(s) {missing_fk} are not columns of the "
-                f"upstream sink {ftbl!r}"
-            )
-        for out in spec.dim_payload:
-            if out in up_fields:
-                raise CatalogError(
-                    f"payload name {out!r} collides with a fact column"
-                )
-        bad_payload = sorted(
-            set(spec.dim_payload) & {"__bucket", "__seq", "__deleted"}
-        )
-        if bad_payload:
-            raise CatalogError(
-                f"payload output name(s) {bad_payload} collide with "
-                "reserved view-log columns"
-            )
-        dschema = self.spark.read.parquet(ddef.path).schema
-        if dim_delete_col is not None and dim_delete_col not in dschema.fieldNames():
-            raise CatalogError(
-                f"dim_delete_col {dim_delete_col!r} is not a column of the "
-                "dim stream"
-            )
-        if "__bucket" in dschema.fieldNames():
-            raise CatalogError(
-                "dim column '__bucket' collides with the bucketed snapshot "
-                "layout column"
-            )
-
-        root = os.path.join(self.warehouse_dir, f"_ivmjd_{p.name}")
-        fact_log = os.path.join(root, "fact")
-        dim_log = os.path.join(root, "dim")
-        view_log = os.path.join(root, "view")
-        nb_file = os.path.join(root, "_n_buckets")
-        init_marker = os.path.join(root, "_init_done")
-
-        def _ingest(rows):
-            return rows.withColumnRenamed("__seq", "__useq").withColumnRenamed(
-                "__deleted", "__udel"
-            )
-
-        if not os.path.exists(init_marker):
-            # clear-then-init is redo-safe: every append below is gated on
-            # the marker, so a partial root holds no consumed delta to lose
-            import shutil as _sh
-
-            _sh.rmtree(root, ignore_errors=True)
-            os.makedirs(root, exist_ok=True)
-            _write_atomic(nb_file, str(n_buckets))
-            # dim offsets BEFORE the dim fold (the no-op init pass both
-            # raw arms run); the fact side has no stream — its floor is
-            # captured from the same listing its fold reads
-            _advance_stream_offsets(
-                self.spark, ddef.path, dschema,
-                os.path.join(root, "_ckpt_dim"),
-            )
-            base, drows = ivm_dag._view_rows(self.spark, up_log)
-            fsnap = _ingest(
-                fold_last_image(
-                    base.unionByName(drows), list(up_keys),
-                    [F.col("__seq")],
-                ).localCheckpoint(eager=False)
-            )
-            floor_row = fsnap.agg(F.max("__useq").alias("m")).collect()[0]
-            floor = int(floor_row["m"]) if floor_row["m"] is not None else 0
-            # the fold consumed the ENTIRE listed log, so the consumed
-            # floor must also cover seqs the log no longer RETAINS rows
-            # for — a compaction fold keeps only live images, whose max
-            # seq can sit BELOW the durable compaction floor (e.g. the
-            # newest change was a group death), and a floor derived from
-            # the retained rows alone would trip this stage's own lag
-            # guard on the very next step
-            floor = max(floor, ivm_dag._log_compaction_floor(up_log))
-            if ivm_dag._has_parquet(up_log):
-                bm = ivm_dag._base_max_seq(up_log)
-                if bm is not None:
-                    floor = max(floor, int(bm))
-            dsnap = fold_last_image(
-                self.spark.read.parquet(ddef.path), dkeys, dordc()
-            )
-            write_hash_partitioned(fsnap, fact_log, list(up_keys), n_buckets)
-            write_hash_partitioned(dsnap, dim_log, dkeys, n_buckets)
-            v0 = (
-                ij.compute_join_view(
-                    self.spark.read.parquet(fact_log).drop("__bucket"),
-                    self.spark.read.parquet(dim_log).drop("__bucket"),
-                    spec, "__udel", dim_delete_col,
-                    fact_hidden_cols=("__useq",),
-                )
-                .withColumn("__seq", F.lit(0).cast("long"))
-                .withColumn("__deleted", F.lit(False))
-            )
-            write_hash_partitioned(v0, view_log, list(up_keys), n_buckets)
-            ivm_dag._write_floor(root, floor)
-            _write_atomic(init_marker, "1")
-        with open(nb_file) as fh:
-            persisted_nb = int(fh.read().strip())
-        if persisted_nb != n_buckets:
-            raise CatalogError(
-                f"n_buckets={n_buckets} does not match the bucket layout "
-                f"this view was created with ({persisted_nb}) — re-activate "
-                f"with n_buckets={persisted_nb} or delete {root!r}"
-            )
-        epoch_file = os.path.join(root, "_epoch")
-        epoch = 0
-        if os.path.exists(epoch_file):
-            with open(epoch_file) as fh:
-                epoch = int(fh.read().strip() or 0)
-        epoch += 1
-        _write_atomic(epoch_file, str(epoch))
-
-        def _state():
-            return ij.JoinViewState(
-                fact=read_merged(
-                    self.spark, fact_log, list(up_keys), fordc(),
-                    include_tombstones=True, prune_fold=True,
-                ),
-                dim=read_merged(
-                    self.spark, dim_log, dkeys, dordc(),
-                    include_tombstones=True, prune_fold=True,
-                ),
-                view=read_merged(
-                    self.spark, view_log, list(up_keys), [F.col("__seq")],
-                    delete_col="__deleted", prune_fold=True,
-                ).drop("__seq", "__deleted"),
-            )
-
-        fact_state_schema = self.spark.read.parquet(fact_log).drop(
-            "__bucket"
-        ).schema
-
-        # ---- fact stage: consume the upstream log past the floor
-        w = ivm_dag.downstream_watermark(root)
-        base, drows = ivm_dag._view_rows(self.spark, up_log)
-        from dbt_decodable_spark.operators.ivm_dag import DownstreamLagError
-
-        if ivm_dag._has_parquet(up_log):
-            base_max = ivm_dag._base_max_seq(up_log)
-            if base_max is None:
-                base_max = base.agg(F.max("__seq").alias("m")).collect()[0]["m"]
-            if base_max is not None and int(base_max) > w:
-                raise DownstreamLagError(
-                    f"upstream log {up_log!r} base snapshot holds "
-                    f"__seq={base_max} > join-stage watermark {w} — it was "
-                    f"compacted past this consumer; delete {root!r} to "
-                    "re-initialize from the current upstream state "
-                    "(downstream consumers of this join rebuild with it)"
-                )
-        else:
-            log_floor = ivm_dag._log_compaction_floor(up_log)
-            if log_floor > w:
-                raise DownstreamLagError(
-                    f"upstream log {up_log!r} was compacted to floor "
-                    f"{log_floor} > join-stage watermark {w} — tombstones "
-                    f"this consumer never saw are gone; delete {root!r} to "
-                    "re-initialize from the current upstream state "
-                    "(downstream consumers of this join rebuild with it)"
-                )
-        pending = drows.filter(F.col("__seq") > F.lit(w))
-        new_w_row = pending.agg(F.max("__seq").alias("m")).collect()[0]
-        new_w = w
-        if new_w_row["m"] is not None:
-            new_w = int(new_w_row["m"])
-            fb = _ingest(pending)
-            seq = (epoch * 2) << 33
-            _st, changes = ij.maintain_join_with_changes(
-                _state(), fb,
-                self.spark.createDataFrame([], dschema),
-                fordc(), dordc(), spec, seq=seq,
-                fact_delete_col="__udel", dim_delete_col=dim_delete_col,
-                fact_hidden_cols=("__useq",),
-            )
-            changes = changes.localCheckpoint(eager=True)
-            # VIEW delta first, state second, floor LAST (crash story)
-            if changes.count() > 0:
-                append_delta(
-                    self.spark, view_log, changes, tag=f"view-up{new_w}"
-                )
-            append_delta(self.spark, fact_log, fb, tag=f"fact-up{new_w}")
-            ivm_dag._write_floor(root, new_w)
-
-        # ---- dim stage: the raw arm's bounded stream, fact side empty
-        def handle(batch_df, batch_id):
-            seq = ((epoch * 2 + 1) << 33) + batch_id
-            tag = f"dim-{epoch}-{batch_id}"
-            _st, changes = ij.maintain_join_with_changes(
-                _state(),
-                self.spark.createDataFrame([], fact_state_schema),
-                batch_df, fordc(), dordc(), spec, seq=seq,
-                fact_delete_col="__udel", dim_delete_col=dim_delete_col,
-                fact_hidden_cols=("__useq",),
-            )
-            changes = changes.localCheckpoint(eager=True)
-            if changes.count() > 0:
-                append_delta(
-                    self.spark, view_log, changes, tag=f"view-{tag}"
-                )
-            append_delta(self.spark, dim_log, batch_df, tag=tag)
-
-        q = (
-            self.spark.readStream.schema(dschema)
-            .parquet(ddef.path)
-            .writeStream.foreachBatch(handle)
-            .option("checkpointLocation", os.path.join(root, "_ckpt_dim"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-        live = read_merged(
-            self.spark, view_log, list(up_keys), [F.col("__seq")],
-            delete_col="__deleted", prune_fold=True,
-        ).drop("__seq", "__deleted")
-        self._materialize(self.streams[p.sink], live)
-        p.active = True
-        return new_w
-
-    def _compact_downstream_join_logs(
-        self, p, up_keys: list[str], dim_order: list[str] | None,
-        n_buckets: int, compact_min_deltas: int,
-    ) -> None:
-        """LSM compaction for a mid-graph join stage's three logs — the
-        ``_ivmjd_`` twin of :meth:`_compact_join_pipeline_logs` (fact
-        folds by the ingest order column ``__useq``)."""
-        from dbt_decodable_spark.operators import ivm_join as ij
-        from dbt_decodable_spark.streaming.changelog import (
-            compact_and_vacuum,
-            list_deltas,
-        )
-
-        _, _ftbl, dtbl = ij.join_spec_from_sql(p.sql, ())
-        ddef = self.streams[self.qualify(dtbl)]
-        dkeys = list(ddef.schema.primary_key)
-        dorder = self._change_order(dim_order, ddef, dkeys, "dim")
-        root = os.path.join(self.warehouse_dir, f"_ivmjd_{p.name}")
-        for log, keys_, ord_ in (
-            (os.path.join(root, "fact"), list(up_keys), [F.col("__useq")]),
-            (os.path.join(root, "dim"), dkeys, [F.col(c) for c in dorder]),
-            (os.path.join(root, "view"), list(up_keys), [F.col("__seq")]),
-        ):
-            if len(list_deltas(log)) >= compact_min_deltas:
-                compact_and_vacuum(self.spark, log, keys_, ord_, n_buckets)
-
-    def _join_node_root(self, info: dict, nd: dict) -> str:
-        """Warehouse-relative root of a join node's state: the raw arm
-        (``_ivmj_``) when the fact side is a raw stream, the mid-graph
-        arm (``_ivmjd_``) when it consumes another node's sink — kind
-        pinned by the persisted root exactly like :meth:`_agg_node_root`
-        (a contradicting activation set raises instead of silently
-        re-initializing under the other prefix)."""
-        name, short, ftbl = nd["p"].name, nd["short"], nd["srcs"][0]
-        persisted = next(
-            (
-                prefix
-                for prefix in ("_ivmjd_", "_ivmj_")
-                if os.path.exists(
-                    os.path.join(
-                        self.warehouse_dir, f"{prefix}{name}", "_init_done"
-                    )
-                )
-            ),
-            None,
-        )
-        sinks = {d["p"].sink for d in info.values()}
-        from_set = "_ivmjd_" if ftbl in sinks else "_ivmj_"
-        if persisted == "_ivmjd_" and from_set == "_ivmj_":
-            raise CatalogError(
-                f"join {short!r} was built as a MID-GRAPH stage consuming "
-                f"the change log behind {ftbl!r}, but this activation set "
-                "does not include that producer — include it, or delete "
-                f"{os.path.join(self.warehouse_dir, f'_ivmjd_{name}')!r} "
-                "to rebuild the node over raw streams"
-            )
-        if persisted == "_ivmj_" and from_set == "_ivmjd_":
-            raise CatalogError(
-                f"join {short!r} was built over RAW streams, but this "
-                "activation set also activates a producer for its fact "
-                "source — delete "
-                f"{os.path.join(self.warehouse_dir, f'_ivmj_{name}')!r} to "
-                "rebuild the node as a mid-graph stage"
-            )
-        return f"{persisted or from_set}{name}"
-
-    def _node_view_keys(self, info: dict, nd: dict) -> list[str]:
-        """The key columns of a node's change-log view — what a consumer
-        folds/merges it by: an aggregate's group columns, a join's fact
-        keys (for a mid-graph join: its UPSTREAM's view keys, resolved
-        recursively), a temporal join's fact primary key."""
-        from dbt_decodable_spark.operators import ivm_temporal
-
-        if nd["kind"] == "agg":
-            return list(nd["aspec"].group_cols)
-        if nd["kind"] == "temporal":
-            _t, t_ftbl, _d = ivm_temporal.temporal_spec_from_sql(
-                nd["p"].sql, (), "__pending__"
-            )
-            return list(self.streams[self.qualify(t_ftbl)].schema.primary_key)
-        producers = {d["p"].sink: q for q, d in info.items()}
-        ftbl = nd["srcs"][0]
-        if ftbl in producers:
-            return self._node_view_keys(info, info[producers[ftbl]])
-        return list(
-            self.streams[self._dag_fact_stream(nd["p"])].schema.primary_key
-        )
-
-    def _upstream_change_log(self, info: dict, und: dict) -> tuple[str, list[str]]:
-        """(change-log path, key columns) of a producer node — what any
-        consumer stage (aggregate or mid-graph join) reads."""
-        if und["kind"] == "join":
-            log = os.path.join(
-                self.warehouse_dir, self._join_node_root(info, und), "view"
-            )
-        elif und["kind"] == "temporal":
-            log = os.path.join(
-                self.warehouse_dir, f"_ivmt_{und['p'].name}", "view"
-            )
-        else:
-            log = os.path.join(
-                self.warehouse_dir, self._agg_node_root(info, und), "out"
-            )
-        return log, self._node_view_keys(info, und)
-
-    def _agg_node_root(self, info: dict, nd: dict) -> str:
-        """Warehouse-relative root of an aggregate node's state: the raw
-        aggregate arm (``_ivm_``) when its source is a raw stream, the
-        downstream-stage arm (``_ivmd_``) when it consumes another node's
-        sink — both emit their change log at ``<root>/out``.
-
-        The kind is PINNED by the persisted root (init-marker-gated, the
-        ``_ivmd_``-first order :meth:`read_pipeline_changes` resolves by)
-        once one exists: re-resolving from the current activation set alone
-        would let a later run that omits the producer silently re-init the
-        node as a raw-stream aggregate over the sink parquet under the
-        other prefix — a persisted kind that contradicts the set raises
-        instead (ADVICE r12)."""
-        name, short, src = nd["p"].name, nd["short"], nd["srcs"][0]
-        persisted = next(
-            (
-                prefix
-                for prefix in ("_ivmd_", "_ivm_")
-                if os.path.exists(
-                    os.path.join(
-                        self.warehouse_dir, f"{prefix}{name}", "_init_done"
-                    )
-                )
-            ),
-            None,
-        )
-        sinks = {d["p"].sink for d in info.values()}
-        from_set = "_ivmd_" if src in sinks else "_ivm_"
-        if persisted == "_ivmd_" and from_set == "_ivm_":
-            raise CatalogError(
-                f"aggregate {short!r} was built as a DOWNSTREAM stage "
-                f"consuming the change log behind {src!r}, but this "
-                "activation set does not include that producer — include "
-                f"it, or delete {os.path.join(self.warehouse_dir, f'_ivmd_{name}')!r} "
-                "to rebuild the node as a raw-stream aggregate"
-            )
-        if persisted == "_ivm_" and from_set == "_ivmd_":
-            raise CatalogError(
-                f"aggregate {short!r} was built as a RAW-STREAM aggregate "
-                f"over {src!r}, but this activation set also activates a "
-                "producer for that sink — delete "
-                f"{os.path.join(self.warehouse_dir, f'_ivm_{name}')!r} to "
-                "rebuild the node as a downstream stage"
-            )
-        return f"{persisted or from_set}{name}"
 
     def activate_project_incremental(
         self,
@@ -2205,344 +674,381 @@ class Engine:
         agg_compact_every: int = 4,
     ) -> dict[str, int]:
         """Run an N-NODE model graph as continuously-maintained
-        materializations — the reference platform's actual project shape:
-        a stream+pipeline pair per model where any model's sink stream may
-        be the next model's source (``/root/reference/dbt/adapters/
-        decodable/impl.py:419-447`` creates exactly that pair for EVERY
-        model in the project; the functional test runs a seed→model→test
-        graph, ``tests/functional/adapter/simple/test_simple_project.py``).
-        Generalizes :meth:`activate_pipeline_dag_incremental`'s fixed
-        two-stage join→rollup chain to arbitrary depth and fan-out.
+        materializations — the reference platform's project shape: a
+        stream+pipeline pair per model where any model's sink stream may be
+        the next model's source (``impl.py:419-447``). This is the only
+        maintained-node runner; the single-pipeline entry points above
+        call it with one- or two-node sets.
 
         ``nodes`` maps pipeline name → per-node options (or a plain list
-        for all-default options): ``fact_order``/``dim_order``/
-        ``fact_delete_col``/``dim_delete_col`` for join nodes,
-        ``order``/``delete_col`` for aggregates over raw streams,
-        ``agg_bucket_expr``/``emit_changes`` for any aggregate node.
-        The graph is derived from the pipeline SQL itself (each node's
-        FROM tables vs the other nodes' sinks) and activated in
-        topological order; a cycle or a sink written twice raises before
-        any write.
+        for all-default options). The graph comes from the pipeline SQL
+        (each node's FROM tables vs the other nodes' sinks) and runs in
+        topological order; a cycle, a sink written twice, or any shape or
+        option violation raises before ANY node writes.
 
-        Node kinds and how each is maintained:
+        Node kinds (the ``_KINDS`` table; the root prefix is the kind):
 
-        - **join** (the ``f.* + d.<col>`` lookup-join shape): the join IVM
-          arm, compaction deferred. The FACT side may be a raw stream OR
-          another node's sink (r13 — the mid-graph join stage,
-          :meth:`_run_downstream_join_stage`: the upstream's change log is
-          consumed as a keyed CDC stream); the DIM side must read a raw
-          change stream (an SCD-correct maintained dim over a change log
-          is the temporal arm's semantics, not the lookup join's).
-        - **temporal join** (``FOR SYSTEM_TIME AS OF`` — the reference's
-          change-stream dim semantics): the SCD2-temporal IVM arm
-          (:meth:`activate_pipeline_temporal_incremental`); its view log
-          composes downstream exactly like a join node's. Same raw-stream
-          restriction; per-node options ``fact_order``/``fact_delete_col``/
+        - ``_ivm_`` — GROUP BY over a raw change stream. Options
+          ``order``/``delete_col``/``agg_bucket_expr``/``emit_changes``.
+        - ``_ivmd_`` — GROUP BY over another node's change log (a join's
+          ``view`` log or a rollup's emitted ``out`` log). Options
+          ``agg_bucket_expr``/``emit_changes``.
+        - ``_ivmj_`` — lookup join ``SELECT f.*, d.col FROM fact f [LEFT]
+          JOIN dim d ON f.fk = d.pk`` over raw streams. Options
+          ``fact_order``/``dim_order``/``fact_delete_col``/
+          ``dim_delete_col``.
+        - ``_ivmjd_`` — the same join whose FACT side is another node's
+          change log, ingested as a keyed CDC stream (``__seq`` →
+          ``__useq``, ``__deleted`` → ``__udel``). Options ``dim_order``/
+          ``dim_delete_col``.
+        - ``_ivmt_`` — ``FOR SYSTEM_TIME AS OF`` temporal join over raw
+          streams. Options ``fact_order``/``fact_delete_col``/
           ``dim_valid_from``.
-        - **aggregate over a raw stream**: the aggregate IVM arm
-          (:meth:`activate_pipeline_incremental`). With consumers it
-          emits its own change log (``_ivm_<name>/out``) batch-by-batch,
-          so a chain may be ROOTED at a plain GROUP-BY model — the
-          reference's ``model → model`` composition with no join anywhere
-          (``impl.py:419-447``).
-        - **aggregate over another node's sink**: a downstream stage
-          (:meth:`_run_downstream_stage`) consuming the upstream's CHANGE
-          LOG — a join node's view log, or an aggregate node's emitted
-          ``out/`` log (the deltas-only shape ``ivm_dag`` auto-detects).
-          A node with consumers emits its own change log automatically,
-          so ``join → rollup → rollup-consumer → …`` composes to any
-          depth; each edge is O(|changes|) per activation, never a view
-          recompute.
 
-        Cross-stage invariants, held by ordering inside ONE activation:
-        every consumer stage runs BEFORE its producer's log compacts
-        (join logs via the deferred :meth:`_compact_join_pipeline_logs`
-        pass; emitted out logs via ``compact_change_log(upto_seq=`` the
-        MINIMUM consumer watermark``)`` — Kafka's delete-retention floor,
-        never past a lagging consumer in this set). A consumer NOT in
-        this activation that lags a later compaction hits the
-        ``DownstreamLagError`` guard and rebuilds — the same recovery
-        contract as the two-stage method.
+        A join DIM side and both temporal sides must read raw change
+        streams. An aggregate with consumers in the set (or
+        ``emit_changes``) keeps its own change log at ``<root>/out``.
 
-        Cascade key contract: a stage consuming a rollup's change log is
-        keyed by the rollup's GROUP columns, so those must be non-null in
-        the data (the reference's primary-key-constraint stance on change
-        streams, ``decodable/client/schema.py:109-111``; a NULL group
-        would break the keyed old-image join).
+        The root protocol, identical for every kind:
 
-        Returns {pipeline name: consumed watermark} for every
-        log-consuming stage."""
-        from collections import deque
+        1. The kind is PINNED by the persisted root: a root whose
+           ``_init_done`` marker contradicts this set's classification
+           (a consuming stage activated without its producer, or the
+           reverse) raises instead of re-initializing under the other
+           prefix.
+        2. Init is gated on ``_init_done``, written LAST. A root without it
+           is cleared and re-initialized (every init write is redo-safe),
+           so a crash at any point of an init redoes it. Bounded
+           (availableNow) stream checkpoints advance over the current
+           source files BEFORE the init folds list them
+           (:func:`_advance_stream_offsets`).
+        3. Root records beside the marker: ``_n_buckets`` (join kinds; the
+           bucket layout every merge and compaction must hash with),
+           ``_emit_changes`` (aggregates; emission can be neither enabled
+           late nor skipped for one activation) and ``_epoch`` (join kinds;
+           bumped per activation so view-delta seqs
+           ``((epoch*2 + side) << 33) + batch`` order later activations
+           and dim batches after fact batches).
+        4. One maintenance step per node: raw inputs run one bounded
+           foreachBatch stream each; a change-log input is consumed past
+           the root's watermark in one batch (:mod:`.operators.ivm_dag`:
+           lag guard, footer-stats watermark). Each batch lands the VIEW
+           (or emitted) delta before the state delta, so a replay
+           converges on the delta tags.
+        5. Compaction runs in one pass AFTER every consumer in the set
+           advanced: join-family logs on the ``compact_min_deltas``
+           trigger, emitted out logs Kafka-style up to the MINIMUM
+           consumer watermark. A consumer outside the set that lags a
+           later compaction raises ``DownstreamLagError``; delete its
+           root (or :meth:`rebuild_pipeline_downstream`) to rebuild.
 
-        from dbt_decodable_spark.operators import ivm_join as ij
-        from dbt_decodable_spark.operators import ivm_temporal
-        from dbt_decodable_spark.operators.ivm import agg_spec_from_sql
-        from dbt_decodable_spark.operators.ivm_log import ivm_log_read
-        from dbt_decodable_spark.streaming.changelog import (
-            CompactionLockHeld,
-            compact_change_log,
-            list_deltas,
+        A stage consuming a rollup's change log is keyed by the rollup's
+        GROUP columns, so those must be non-null in the data
+        (``schema.py:109-111``). Returns {pipeline name: consumed
+        watermark} for every log-consuming stage."""
+        return self._run_nodes(
+            nodes, n_buckets, compact, compact_min_deltas, agg_compact_every
         )
+
+    def _run_nodes(
+        self,
+        nodes: dict[str, dict] | list[str],
+        n_buckets: int = 32,
+        compact: bool = True,
+        compact_min_deltas: int = 4,
+        agg_compact_every: int = 4,
+        shapes: dict[str, str] | None = None,
+    ) -> dict[str, int]:
+        """The runner behind :meth:`activate_project_incremental`;
+        ``shapes`` pins a node's SQL shape for the single-pipeline entry
+        points (their parse error instead of another kind)."""
+        topo = self._plan(nodes, shapes)
+        for nd in topo:
+            nd.n_buckets, nd.agg_compact_every = n_buckets, agg_compact_every
+            nd.kind.check(self, nd)
+        for nd in topo:
+            self._read_records(nd)
+        watermarks: dict[str, int] = {}
+        for nd in topo:
+            if not os.path.exists(os.path.join(nd.root, "_init_done")):
+                self._init_node(nd)
+            if "_epoch" in nd.kind.records:
+                _write_atomic(os.path.join(nd.root, "_epoch"), str(nd.epoch))
+            w = nd.kind.step(self, nd)
+            if w is not None:
+                nd.watermark = watermarks[nd.short] = w
+            self._materialize(self.streams[nd.p.sink], nd.kind.view(self, nd))
+            nd.p.active = True
+        if compact:
+            for nd in topo:
+                self._compact_node(nd, compact_min_deltas)
+        return watermarks
+
+    def _plan(
+        self,
+        nodes: dict[str, dict] | list[str],
+        shapes: dict[str, str] | None = None,
+    ) -> list[_Node]:
+        """Classify every node, order the graph and resolve each node's
+        root (with the kind pin), change log and log keys — no write."""
+        from collections import deque
 
         if not self.warehouse_dir:
             raise CatalogError("incremental activation needs a warehouse_dir engine")
         if not isinstance(nodes, dict):
             nodes = {n: {} for n in nodes}
-        info: dict[str, dict] = {}
+        info: dict[str, _Node] = {}
         for short, opts in nodes.items():
-            qn = self.qualify(short)
-            p = self.pipelines[qn]
-            try:
-                _jspec, ftbl, dtbl = ij.join_spec_from_sql(p.sql, ())
-                nd = dict(kind="join", srcs=(ftbl, dtbl), aspec=None)
-            except ValueError:
-                try:
-                    _tspec, ftbl, dtbl = ivm_temporal.temporal_spec_from_sql(
-                        p.sql, (), "__pending__"
-                    )
-                    nd = dict(kind="temporal", srcs=(ftbl, dtbl), aspec=None)
-                except ValueError:
-                    try:
-                        aspec, src = agg_spec_from_sql(p.sql)
-                        nd = dict(kind="agg", srcs=(src,), aspec=aspec)
-                    except ValueError:
-                        raise CatalogError(
-                            f"pipeline {short!r} is none of the "
-                            "maintainable shapes (lookup join, FOR "
-                            "SYSTEM_TIME AS OF temporal join, GROUP BY) — "
-                            "see join_spec_from_sql / "
-                            "temporal_spec_from_sql / agg_spec_from_sql"
-                        ) from None
-            nd.update(p=p, short=short, opts=dict(opts or {}))
-            info[qn] = nd
-        producers: dict[str, str] = {}
-        for qn, nd in info.items():
-            if nd["p"].sink in producers:
+            p = self.pipelines[self.qualify(short)]
+            shape, parsed = _classify(p.sql, (shapes or {}).get(short), short)
+            info[p.name] = _Node(
+                p=p, short=short, opts=dict(opts or {}), shape=shape,
+                spec=parsed[0], srcs=tuple(parsed[1:]),
+            )
+        producers: dict[str, _Node] = {}
+        for nd in info.values():
+            if nd.p.sink in producers:
                 raise CatalogError(
-                    f"two pipelines in the set write sink {nd['p'].sink!r}"
+                    f"two pipelines in the set write sink {nd.p.sink!r}"
                 )
-            producers[nd["p"].sink] = qn
+            producers[nd.p.sink] = nd
         indeg = {qn: 0 for qn in info}
-        consumers: dict[str, list[str]] = {qn: [] for qn in info}
         for qn, nd in info.items():
-            for s in nd["srcs"]:
-                up = producers.get(s)
-                if up is not None:
+            for s in nd.srcs:
+                if s in producers:
                     indeg[qn] += 1
-                    consumers[up].append(qn)
+                    producers[s].consumers.append(nd)
         ready = deque(sorted(q for q, d in indeg.items() if d == 0))
-        topo: list[str] = []
+        topo: list[_Node] = []
         while ready:
-            qn = ready.popleft()
-            topo.append(qn)
-            for c in sorted(consumers[qn]):
-                indeg[c] -= 1
-                if indeg[c] == 0:
-                    ready.append(c)
+            nd = info[ready.popleft()]
+            topo.append(nd)
+            for c in sorted(nd.consumers, key=lambda c: c.p.name):
+                indeg[c.p.name] -= 1
+                if indeg[c.p.name] == 0:
+                    ready.append(c.p.name)
         if len(topo) != len(info):
-            cyc = sorted(info[q]["short"] for q, d in indeg.items() if d > 0)
+            cyc = sorted(info[q].short for q, d in indeg.items() if d > 0)
             raise CatalogError(f"pipeline graph has a cycle through {cyc}")
-        # fire-before-write: every shape violation raises before ANY node
-        # creates roots or advances checkpoints (the join/agg arms'
-        # standing invariant, lifted to the graph)
-        view_reserved = {"__g", "__k", "__gbucket", "__mult"}
-        for qn in topo:
-            nd = info[qn]
-            if nd["kind"] == "join":
-                # the FACT side may consume another node's change log (the
-                # mid-graph join stage); the DIM side must stay a raw
-                # stream — an SCD-correct maintained dim over a change log
-                # is the temporal arm's job, not the lookup join's
-                if nd["srcs"][1] in producers:
-                    raise CatalogError(
-                        f"join stage {nd['short']!r} reads "
-                        f"{nd['srcs'][1]!r}, another model's sink, as its "
-                        "DIM side — maintained join dims must read raw "
-                        "change streams (the fact side may consume a "
-                        "model's sink)"
-                    )
-                continue
-            if nd["kind"] == "temporal":
-                for s in nd["srcs"]:
+        for nd in topo:
+            if nd.shape == "temporal":
+                for s in nd.srcs:
                     if s in producers:
                         raise CatalogError(
-                            f"temporal stage {nd['short']!r} reads "
-                            f"{s!r}, another model's sink — maintained "
-                            "temporal joins must read raw change streams"
+                            f"temporal stage {nd.short!r} reads {s!r}, "
+                            "another model's sink — maintained temporal "
+                            "joins must read raw change streams"
                         )
-                continue
-            src = nd["srcs"][0]
-            if bool(consumers[qn]) or bool(nd["opts"].get("emit_changes")):
-                # an emitting rollup stacks __seq/__deleted onto its view
-                # outputs — raise here, before ANY graph node writes
-                bad_out = sorted(
-                    set(nd["aspec"].outputs()) & {"__seq", "__deleted"}
-                )
-                if bad_out:
-                    raise CatalogError(
-                        f"aggregate {nd['short']!r} output name(s) "
-                        f"{bad_out} collide with reserved change-log "
-                        "columns — rename the aggregate aliases"
-                    )
-            if src not in producers:
-                continue
-            bad = sorted(
-                {f.name for f in self.streams[src].schema.fields}
-                & view_reserved
-            )
-            if bad:
+            elif nd.shape == "join" and nd.srcs[1] in producers:
                 raise CatalogError(
-                    f"consumed stream {src!r} column(s) {bad} collide "
-                    "with reserved downstream aggregate state names"
+                    f"join stage {nd.short!r} reads {nd.srcs[1]!r}, another "
+                    "model's sink, as its DIM side — maintained join dims "
+                    "must read raw change streams (the fact side may "
+                    "consume a model's sink)"
                 )
-        watermarks: dict[str, int] = {}
-        for qn in topo:
-            nd = info[qn]
-            short, opts, p = nd["short"], nd["opts"], nd["p"]
-            if nd["kind"] == "join":
-                # kind pin (raises if a persisted root contradicts the set)
-                jroot = self._join_node_root(info, nd)
-                if jroot.startswith("_ivmjd_"):
-                    up = info[producers[nd["srcs"][0]]]
-                    up_log, up_keys = self._upstream_change_log(info, up)
-                    w = self._run_downstream_join_stage(
-                        p, up_log, up_keys,
-                        dim_order=opts.get("dim_order"),
-                        dim_delete_col=opts.get("dim_delete_col"),
-                        n_buckets=n_buckets,
-                    )
-                    watermarks[short] = w
-                else:
-                    self.activate_pipeline_join_incremental(
-                        short,
-                        fact_order=opts.get("fact_order"),
-                        dim_order=opts.get("dim_order"),
-                        fact_delete_col=opts.get("fact_delete_col"),
-                        dim_delete_col=opts.get("dim_delete_col"),
-                        n_buckets=n_buckets,
-                        compact=False,  # deferred past every consumer
-                    )
-                continue
-            if nd["kind"] == "temporal":
-                self.activate_pipeline_temporal_incremental(
-                    short,
-                    fact_order=opts.get("fact_order"),
-                    dim_valid_from=opts.get("dim_valid_from"),
-                    fact_delete_col=opts.get("fact_delete_col"),
-                    n_buckets=n_buckets,
-                    compact=False,  # deferred past every consumer
-                )
-                continue
-            src = nd["srcs"][0]
-            up = producers.get(src)
-            # kind pin: a persisted root that contradicts this set's
-            # classification raises here, BEFORE either arm re-inits the
-            # node's state under the other prefix
-            self._agg_node_root(info, nd)
-            if up is None:
-                self.activate_pipeline_incremental(
-                    short,
-                    order=opts.get("order"),
-                    delete_col=opts.get("delete_col"),
-                    bucket_expr=opts.get("agg_bucket_expr"),
-                    compact_every=agg_compact_every,
-                    emit_changes=bool(consumers[qn])
-                    or bool(opts.get("emit_changes")),
-                )
-                continue
-            und = info[up]
-            log, keys = self._upstream_change_log(info, und)
-            w = self._run_downstream_stage(
-                p, nd["aspec"], log, keys,
-                emit_changes=bool(consumers[qn])
-                or bool(opts.get("emit_changes")),
-                agg_bucket_expr=opts.get("agg_bucket_expr"),
-                agg_compact_every=agg_compact_every,
+            nd.up = producers.get(nd.srcs[0])
+            nd.emit = nd.shape == "agg" and (
+                bool(nd.consumers) or bool(nd.opts.get("emit_changes"))
             )
-            watermarks[short] = w
-            droot = os.path.join(self.warehouse_dir, f"_ivmd_{p.name}")
-            self._materialize(
-                self.streams[p.sink],
-                ivm_log_read(self.spark, droot, nd["aspec"]),
+            prefix = _PREFIXES[nd.shape][nd.up is None]
+            nd.root = self._node_root(
+                nd.p, nd.shape, prefix, nd.short, nd.srcs[0]
             )
-            p.active = True
-        if compact:
-            # one deferred pass, AFTER every consumer in the set advanced
-            for qn in topo:
-                nd = info[qn]
-                if nd["kind"] == "join":
-                    if nd["srcs"][0] in producers:
-                        self._compact_downstream_join_logs(
-                            nd["p"],
-                            up_keys=self._node_view_keys(info, nd),
-                            dim_order=nd["opts"].get("dim_order"),
-                            n_buckets=n_buckets,
-                            compact_min_deltas=compact_min_deltas,
-                        )
-                    else:
-                        self._compact_join_pipeline_logs(
-                            nd["p"], n_buckets=n_buckets,
-                            compact_min_deltas=compact_min_deltas,
-                            fact_order=nd["opts"].get("fact_order"),
-                            dim_order=nd["opts"].get("dim_order"),
-                        )
-                elif nd["kind"] == "temporal":
-                    self._compact_temporal_pipeline_logs(
-                        nd["p"], n_buckets=n_buckets,
-                        compact_min_deltas=compact_min_deltas,
-                        fact_order=nd["opts"].get("fact_order"),
-                        dim_valid_from=nd["opts"].get("dim_valid_from"),
+            nd.kind = _KINDS[prefix]
+            nd.log = os.path.join(nd.root, "out" if nd.shape == "agg" else "view")
+            if nd.shape == "agg":
+                nd.keys = list(nd.spec.group_cols)
+            elif nd.up is not None:
+                nd.keys = nd.up.keys
+            else:
+                fdef = self.streams[self.qualify(nd.srcs[0])]
+                nd.keys = list(fdef.schema.primary_key)
+        return topo
+
+    def _node_root(
+        self,
+        p: PipelineDef,
+        shape: str,
+        from_set: str | None = None,
+        short: str | None = None,
+        src: str | None = None,
+    ) -> str:
+        """The one root resolver: the prefix whose ``_init_done`` marker
+        exists (the persisted kind), else ``from_set`` (the activation
+        set's classification), else the shape's consuming prefix. A
+        persisted kind that contradicts ``from_set`` raises — re-resolving
+        from the set alone would silently re-initialize the node under the
+        other prefix."""
+        fam = [x for x in _PREFIXES[shape] if x]
+        persisted = next(
+            (
+                x for x in fam
+                if os.path.exists(
+                    os.path.join(self.warehouse_dir, f"{x}{p.name}", "_init_done")
+                )
+            ),
+            None,
+        )
+        root = os.path.join(
+            self.warehouse_dir, f"{persisted or from_set or fam[0]}{p.name}"
+        )
+        what = "aggregate" if shape == "agg" else shape
+        if from_set and persisted and persisted != from_set:
+            if persisted == fam[0]:
+                raise CatalogError(
+                    f"{what} {short!r} was built as a DOWNSTREAM stage "
+                    f"consuming the change log behind {src!r}, but this "
+                    "activation set does not include that producer — "
+                    f"include it, or delete {root!r} to rebuild the node "
+                    "over raw streams"
+                )
+            raise CatalogError(
+                f"{what} {short!r} was built over RAW streams ({src!r}), "
+                "but this activation set also activates a producer for "
+                f"that sink — delete {root!r} to rebuild the node as a "
+                "downstream stage"
+            )
+        return root
+
+    def _read_records(self, nd: _Node) -> None:
+        """Read and validate a completed root's records (``_n_buckets``,
+        ``_emit_changes``, ``_epoch``) against this activation — before any
+        node of the set writes. Sets the node's next epoch."""
+        nd.epoch = 1
+        if not os.path.exists(os.path.join(nd.root, "_init_done")):
+            return
+        root, recs = nd.root, nd.kind.records
+        if "_n_buckets" in recs:
+            raw = _read_record(root, "_n_buckets")
+            try:
+                persisted = int(raw)
+            except (TypeError, ValueError):
+                raise CatalogError(
+                    f"corrupt _n_buckets record {raw!r} in {root!r} — "
+                    "delete the root to re-initialize"
+                ) from None
+            if persisted != nd.n_buckets:
+                raise CatalogError(
+                    f"n_buckets={nd.n_buckets} does not match the bucket "
+                    f"layout this view was created with ({persisted}) — "
+                    "merges and compaction must hash with the writer's "
+                    f"bucket expression; re-activate with "
+                    f"n_buckets={persisted} or delete {root!r} to "
+                    "re-initialize"
+                )
+        if "_emit_changes" in recs:
+            persisted_emit = _read_record(root, "_emit_changes") == "1"
+            if nd.emit and not persisted_emit:
+                raise CatalogError(
+                    "change emission must be enabled from the FIRST "
+                    "activation (the out log's init image is unrecoverable "
+                    f"later) — delete {root!r} to rebuild with emit_changes"
+                )
+            if persisted_emit and not nd.emit:
+                raise CatalogError(
+                    "this pipeline maintains an emitted change log — every "
+                    "activation must keep emitting (a non-emitting one "
+                    "would punch a permanent gap in the out log); pass "
+                    f"emit_changes=True, or delete {root!r} to rebuild "
+                    "without emission"
+                )
+        if "_epoch" in recs:
+            nd.epoch = int(_read_record(root, "_epoch") or 0) + 1
+
+    def _init_node(self, nd: _Node) -> int | None:
+        """Clear-then-init: every write lands in a cleared root and the
+        marker goes LAST, so a crash anywhere before it redoes the whole
+        init (nothing can have consumed a root without its marker).
+        Returns the consumed floor of a log-consuming kind."""
+        shutil.rmtree(nd.root, ignore_errors=True)
+        os.makedirs(nd.root, exist_ok=True)
+        if "_n_buckets" in nd.kind.records:
+            _write_atomic(os.path.join(nd.root, "_n_buckets"), str(nd.n_buckets))
+        floor = nd.kind.init(self, nd)
+        if "_emit_changes" in nd.kind.records:
+            _write_atomic(
+                os.path.join(nd.root, "_emit_changes"), "1" if nd.emit else "0"
+            )
+        _write_atomic(os.path.join(nd.root, "_init_done"), "1")
+        return floor
+
+    def _compact_node(self, nd: _Node, min_deltas: int) -> None:
+        """The one compaction helper, run after every consumer in the set
+        advanced. LSM trigger, not every activation: folding deltas into a
+        snapshot is the amortized O(|state|) step — below
+        ``min_deltas`` reads fold the pending deltas anyway. An emitted out
+        log compacts Kafka-style, never past the slowest in-set consumer."""
+        if nd.kind.logs is None:
+            if nd.consumers and len(cl.list_deltas(nd.log)) >= min_deltas:
+                upto = min(c.watermark for c in nd.consumers)
+                try:
+                    cl.compact_change_log(self.spark, nd.log, nd.keys, upto_seq=upto)
+                except cl.CompactionLockHeld:
+                    pass  # another process compacting; next pass
+            return
+        for log, keys, order in nd.kind.logs(nd):
+            if len(cl.list_deltas(log)) >= min_deltas:
+                cl.compact_and_vacuum(
+                    self.spark, log, keys, [F.col(c) for c in order],
+                    nd.n_buckets,
+                )
+
+    def _raw_side(
+        self,
+        tbl: str,
+        side: str = "",
+        order: list[str] | None = None,
+        delete_col: str | None = None,
+        ordered: bool = True,
+    ) -> _Side:
+        """A keyed raw change-stream input, validated before any write:
+        its primary key, its change order (``order`` or its watermark
+        columns, key appended as the deterministic tiebreak — the order its
+        log's merges AND compactions fold by) and its schema."""
+        sdef = self.streams[self.qualify(tbl)]
+        keys = list(sdef.schema.primary_key)
+        opt = f"{side}_" if side else ""  # the option names: fact_order, ...
+        if not keys:
+            raise CatalogError(
+                f"{tbl!r} declares no primary_key — not a change stream "
+                "(schema.py:109-111); incremental maintenance needs keyed "
+                "upserts"
+            )
+        cols: list[str] = []
+        if ordered:
+            if order is None:
+                if not sdef.schema.watermarks:
+                    raise CatalogError(
+                        f"pass {opt}order= "
+                        "(change-order columns): the source has no watermark "
+                        "column to default to"
                     )
-                elif consumers[qn]:
-                    upto = min(
-                        watermarks[info[c]["short"]] for c in consumers[qn]
-                    )
-                    out_log = os.path.join(
-                        self.warehouse_dir,
-                        self._agg_node_root(info, nd),
-                        "out",
-                    )
-                    if len(list_deltas(out_log)) >= compact_min_deltas:
-                        try:
-                            compact_change_log(
-                                self.spark, out_log,
-                                list(nd["aspec"].group_cols),
-                                upto_seq=upto,
-                            )
-                        except CompactionLockHeld:
-                            pass  # another process compacting; next pass
-        return watermarks
+                order = [w.name for w in sdef.schema.watermarks]
+            cols = list(order) + [k for k in keys if k not in order]
+        if not sdef.path:
+            raise CatalogError(f"source stream {tbl!r} is not parquet-backed")
+        schema = self.spark.read.parquet(sdef.path).schema
+        if delete_col is not None and delete_col not in schema.fieldNames():
+            raise CatalogError(
+                f"{opt}delete_col {delete_col!r} is not a column of the "
+                f"{side or 'source'} stream"
+            )
+        return _Side(sdef.path, keys, cols, schema, delete_col)
 
     def read_pipeline_changes(self, name: str) -> DataFrame:
-        """The change stream a DAG-activated aggregate pipeline emitted
-        (``activate_pipeline_dag_incremental(..., emit_changes=True)``):
-        raw group-keyed upserts/tombstones with ``__seq``/``__deleted``,
-        in log order. A consumer folds it (``fold_last_image`` by the
-        group columns over ``__seq``) or stacks on it (SCD2, MERGE) — the
-        fold equals the rollup view at every point (pytest-pinned)."""
-        from dbt_decodable_spark.streaming.changelog import list_deltas
-
+        """The change stream a maintained aggregate emitted
+        (``emit_changes=True``, or any rollup with consumers): raw
+        group-keyed upserts/tombstones with ``__seq``/``__deleted``, in log
+        order. A consumer folds it (``fold_last_image`` by the group
+        columns over ``__seq``) or stacks on it (SCD2, MERGE) — the fold
+        equals the rollup view at every point (pytest-pinned)."""
         p = self.pipelines[self.qualify(name)]
-        # a log-consuming stage's root is _ivmd_<name>; a raw-stream
-        # aggregate's is _ivm_<name> — whichever exists holds the out log
-        droot = os.path.join(self.warehouse_dir, f"_ivmd_{p.name}")
-        if not os.path.isdir(droot) and os.path.isdir(
-            os.path.join(self.warehouse_dir, f"_ivm_{p.name}")
-        ):
-            droot = os.path.join(self.warehouse_dir, f"_ivm_{p.name}")
-        out_log = os.path.join(droot, "out")
-        deltas = list_deltas(out_log)
+        droot = self._node_root(p, "agg")
+        deltas = cl.list_deltas(os.path.join(droot, "out"))
         if not deltas:
             # distinguish "emission never enabled" from "log exists but
-            # every retained delta was compacted away" (ADVICE r10 — a
-            # fully-tombstoned fold deletes all deltas; the old error
-            # wrongly told the caller to re-activate with emit_changes)
-            emit_file = os.path.join(droot, "_emit_changes")
-            emitting = False
-            if os.path.exists(emit_file):
-                with open(emit_file) as fh:
-                    emitting = fh.read().strip() == "1"
-            if emitting:
+            # every retained delta was compacted away"
+            if _read_record(droot, "_emit_changes") == "1":
                 from pyspark.sql.types import (
                     BooleanType, LongType, StructField, StructType,
                 )
@@ -2566,24 +1072,12 @@ class Engine:
         self, name: str, upstream: str, agg_bucket_expr: str | None = None
     ) -> int:
         """The :class:`~.ivm_dag.DownstreamLagError` recovery through the
-        engine: drop the DAG downstream's root and re-initialize it from
-        the CURRENT upstream state — O(|view|), nothing upstream re-runs.
-        The upstream may be ANY producer node kind (r12): a lookup-join
-        pipeline (its view log), a temporal-join pipeline (its view log),
-        or another rollup (its emitted out log — the pure-delta shape).
-        The root's persisted emission choice is honored: an emitting
-        root's out log (which lives under the root and dies with it) is
-        re-seeded with the new floor image, so ``fold(out log) == the
-        rollup view`` holds from the new floor onward. Mid-stream
-        consumers of the old out log must re-bootstrap from the floor —
-        the lag error means history they never consumed is already
-        unreconstructible."""
-        from dbt_decodable_spark.operators import ivm_dag
-        from dbt_decodable_spark.operators import ivm_join as ij
-        from dbt_decodable_spark.operators import ivm_temporal
-        from dbt_decodable_spark.operators.ivm import agg_spec_from_sql
-        from dbt_decodable_spark.operators.ivm_log import ivm_log_read
-
+        engine: clear the aggregate ``name``'s root and re-initialize it
+        from the CURRENT state of ``upstream``'s change log (any producer
+        kind) — O(|view|), nothing upstream re-runs. The root's persisted
+        emission choice is honored: an emitting root's out log is
+        re-seeded with the new floor image. Mid-stream consumers of the old
+        out log must re-bootstrap from the floor. Returns the new floor."""
         if not self.warehouse_dir:
             raise CatalogError("incremental activation needs a warehouse_dir engine")
         p_agg = self.pipelines[self.qualify(name)]
@@ -2594,163 +1088,61 @@ class Engine:
                 f"DAG shape: {p_agg.name!r} must aggregate the upstream's "
                 f"sink stream {p_up.sink!r}, not {src_tbl!r}"
             )
-        # resolve the upstream's change log + its key, by node kind
-        try:
-            ij.join_spec_from_sql(p_up.sql, ())
-            up_log = os.path.join(
-                self.warehouse_dir, f"_ivmj_{p_up.name}", "view"
-            )
-            keys = list(
-                self.streams[self._dag_fact_stream(p_up)].schema.primary_key
-            )
-        except ValueError:
-            try:
-                _t, t_ftbl, _d = ivm_temporal.temporal_spec_from_sql(
-                    p_up.sql, (), "__pending__"
-                )
-                up_log = os.path.join(
-                    self.warehouse_dir, f"_ivmt_{p_up.name}", "view"
-                )
-                keys = list(
-                    self.streams[self.qualify(t_ftbl)].schema.primary_key
-                )
-            except ValueError:
-                up_spec, _src = agg_spec_from_sql(p_up.sql)
-                keys = list(up_spec.group_cols)
-                uproot = os.path.join(
-                    self.warehouse_dir, f"_ivmd_{p_up.name}"
-                )
-                if not os.path.isdir(uproot) and os.path.isdir(
-                    os.path.join(self.warehouse_dir, f"_ivm_{p_up.name}")
-                ):
-                    uproot = os.path.join(
-                        self.warehouse_dir, f"_ivm_{p_up.name}"
-                    )
-                up_log = os.path.join(uproot, "out")
-        droot = os.path.join(self.warehouse_dir, f"_ivmd_{p_agg.name}")
-        out_log = os.path.join(droot, "out")
-        emit_file = os.path.join(droot, "_emit_changes")
-        # read the persisted emission choice BEFORE the rebuild clears it
-        if os.path.exists(emit_file):
-            with open(emit_file) as fh:
-                emitting = fh.read().strip() == "1"
-        else:
-            emitting = os.path.isdir(out_log + ".__deltas__")
-        floor = ivm_dag.rebuild_downstream(
-            self.spark, droot, up_log, keys, agg_spec,
-            bucket_expr=agg_bucket_expr,
-            emit_log=out_log if emitting else None,
+        up_log, up_keys = self._change_log(p_up)
+        root = self._node_root(p_agg, "agg", "_ivmd_", name, src_tbl)
+        nd = _Node(
+            p=p_agg, short=name, opts=dict(agg_bucket_expr=agg_bucket_expr),
+            shape="agg", spec=agg_spec, srcs=(src_tbl,), root=root,
+            kind=_KINDS["_ivmd_"], log=os.path.join(root, "out"),
+            keys=list(agg_spec.group_cols),
+            emit=_read_record(root, "_emit_changes") == "1",
+            up=_Node(p=p_up, short=upstream, opts={}, shape="", spec=None,
+                     srcs=(), log=up_log, keys=up_keys),
         )
-        _write_atomic(emit_file, "1" if emitting else "0")
-        _write_atomic(os.path.join(droot, "_init_done"), "1")
-        self._materialize(
-            self.streams[p_agg.sink],
-            ivm_log_read(self.spark, droot, agg_spec),
-        )
+        floor = self._init_node(nd)
+        self._materialize(self.streams[p_agg.sink], nd.kind.view(self, nd))
         return floor
+
+    def _change_log(self, p: PipelineDef) -> tuple[str, list[str]]:
+        """(change-log path, key columns) of a persisted producer node."""
+        shape, parsed = _classify(p.sql, label=p.name)
+        root = self._node_root(p, shape)
+        if shape == "agg":
+            return os.path.join(root, "out"), list(parsed[0].group_cols)
+        ftbl = self.qualify(parsed[1])
+        if _root_prefix(root) == "_ivmjd_":
+            return os.path.join(root, "view"), self._change_log(
+                self._pipeline_writing(ftbl)
+            )[1]
+        return os.path.join(root, "view"), list(
+            self.streams[ftbl].schema.primary_key
+        )
 
     def compact_pipeline_changes(
         self, name: str, upto_seq: int | None = None
     ) -> dict:
-        """Kafka-style compaction of the change log a DAG-activated
-        aggregate pipeline emits (:meth:`read_pipeline_changes`): fold the
-        emitted history up to ``upto_seq`` (default: all of it) into one
-        live-rows-only floor image keyed by the group columns, dropping
-        tombstoned groups. Without this the out log grows with every
-        change ever emitted; compacted, its size is O(|groups| + changes
-        since the floor) and a fresh consumer bootstraps from the floor
-        image instead of replaying history. The caller owns the floor:
-        compact only past a sequence every mid-stream consumer has passed
-        (a consumer parked below it would miss the dropped tombstones) —
-        the same contract as the view-log/downstream watermark ordering.
-        ``fold(out log) == the rollup view`` holds unchanged after
-        compaction (pytest-pinned)."""
-        from dbt_decodable_spark.operators.ivm import agg_spec_from_sql
-        from dbt_decodable_spark.streaming.changelog import (
-            compact_change_log,
-            list_deltas,
-        )
-
+        """Kafka-style compaction of the change log a maintained aggregate
+        emits (:meth:`read_pipeline_changes`): fold the emitted history up
+        to ``upto_seq`` (default: all of it) into one live-rows-only floor
+        image keyed by the group columns, dropping tombstoned groups. Its
+        size is then O(|groups| + changes since the floor) and a fresh
+        consumer bootstraps from the floor image. The caller owns the
+        floor: compact only past a sequence every mid-stream consumer has
+        passed (a consumer parked below it would miss the dropped
+        tombstones and raises ``DownstreamLagError``). ``fold(out log) ==
+        the rollup view`` holds unchanged after compaction
+        (pytest-pinned)."""
         p = self.pipelines[self.qualify(name)]
         spec, _ = agg_spec_from_sql(p.sql)
-        # log-consuming stage roots are _ivmd_<name>; raw-stream aggregate
-        # roots are _ivm_<name> (r12) — same resolution as
-        # read_pipeline_changes
-        out_log = os.path.join(self.warehouse_dir, f"_ivmd_{p.name}", "out")
-        if not list_deltas(out_log):
-            alt = os.path.join(self.warehouse_dir, f"_ivm_{p.name}", "out")
-            if list_deltas(alt):
-                out_log = alt
-        if not list_deltas(out_log):
+        out_log = os.path.join(self._node_root(p, "agg"), "out")
+        if not cl.list_deltas(out_log):
             raise CatalogError(
                 f"pipeline {name!r} has no emitted change log — activate "
                 "with emit_changes=True"
             )
-        return compact_change_log(
+        return cl.compact_change_log(
             self.spark, out_log, list(spec.group_cols), upto_seq=upto_seq
         )
-
-    def _dag_fact_stream(self, p_join) -> str:
-        """The fact-side stream of a join pipeline (the side whose primary
-        key keys the view log)."""
-        from dbt_decodable_spark.operators import ivm_join as ij
-
-        _, ftbl, _ = ij.join_spec_from_sql(p_join.sql, ())
-        return ftbl
-
-    @staticmethod
-    def _change_order(
-        given: list[str] | None, sdef, keys: list[str], side: str
-    ) -> list[str]:
-        """Change-order columns for one side of a maintained join/aggregate:
-        the caller's list (or the side's watermark columns), with the
-        primary key appended as the deterministic tiebreak. ONE derivation
-        for the activation and compaction paths — a maintained log must be
-        compacted with the same order its merges folded by."""
-        if given is None:
-            if not sdef.schema.watermarks:
-                raise CatalogError(
-                    f"pass {side}_order= (change-order columns): the "
-                    "source has no watermark column to default to"
-                )
-            given = [w.name for w in sdef.schema.watermarks]
-        return list(given) + [k for k in keys if k not in given]
-
-    def _compact_join_pipeline_logs(
-        self,
-        p_join,
-        n_buckets: int,
-        compact_min_deltas: int,
-        fact_order: list[str] | None,
-        dim_order: list[str] | None,
-    ) -> None:
-        """The join arm's LSM compaction step — the inline trigger in
-        :meth:`activate_pipeline_join_incremental` and the DAG's deferred
-        stage-3 call share this one implementation. LSM trigger, not every
-        activation: folding deltas into the snapshot is the amortized
-        O(|state|) step — running it while only a handful of batch-sized
-        deltas are pending pays the full-state rewrite for nothing (reads
-        fold pending deltas anyway)."""
-        from dbt_decodable_spark.operators import ivm_join as ij
-        from dbt_decodable_spark.streaming.changelog import (
-            compact_and_vacuum,
-            list_deltas,
-        )
-
-        _, ftbl, dtbl = ij.join_spec_from_sql(p_join.sql, ())
-        fdef, ddef = self.streams[ftbl], self.streams[dtbl]
-        fkeys = list(fdef.schema.primary_key)
-        dkeys = list(ddef.schema.primary_key)
-        forder = self._change_order(fact_order, fdef, fkeys, "fact")
-        dorder = self._change_order(dim_order, ddef, dkeys, "dim")
-        root = os.path.join(self.warehouse_dir, f"_ivmj_{p_join.name}")
-        for log, keys_, ord_ in (
-            (os.path.join(root, "fact"), fkeys, [F.col(c) for c in forder]),
-            (os.path.join(root, "dim"), dkeys, [F.col(c) for c in dorder]),
-            (os.path.join(root, "view"), fkeys, [F.col("__seq")]),
-        ):
-            if len(list_deltas(log)) >= compact_min_deltas:
-                compact_and_vacuum(self.spark, log, keys_, ord_, n_buckets)
 
     def deactivate_pipeline(self, name: str) -> None:
         p = self.pipelines[self.qualify(name)]
@@ -3012,3 +1404,604 @@ class Engine:
             "pipelines": len(self.pipelines),
             "connections": len(self.connections),
         }
+
+
+# -- the maintained-node kind table -------------------------------------------
+#
+# Engine._run_nodes owns the root protocol (kind pin, marker-gated
+# clear-then-init, root records, one step per node, deferred compaction);
+# each _KINDS entry supplies only what differs by kind.
+
+_LOG_COLS = frozenset({"__bucket", "__seq", "__deleted"})
+#: the names the aggregate state machinery stacks onto its input rows
+_AGG_STATE_COLS = frozenset({"__g", "__k", "__gbucket", "__mult"})
+
+
+@dataclass(frozen=True)
+class _Side:
+    """One input of a maintained node as the maintenance reads it: its
+    path (None for a change-log input), merge keys, change-order columns,
+    schema, tombstone column and the state-only columns hidden from the
+    view."""
+
+    path: str | None
+    keys: list[str]
+    order: list[str]
+    schema: Any
+    delete_col: str | None = None
+    hidden: tuple[str, ...] = ()
+
+    def cols(self) -> list:
+        return [F.col(c) for c in self.order]
+
+
+@dataclass(eq=False)
+class _Node:
+    """One node of an activation set, resolved by ``Engine._plan`` and the
+    kind's ``check`` before any write."""
+
+    p: PipelineDef
+    short: str
+    opts: dict
+    shape: str  # "agg" | "join" | "temporal" — the SQL shape
+    spec: Any
+    srcs: tuple[str, ...]
+    up: _Node | None = None  # the in-set producer of srcs[0]
+    consumers: list[_Node] = field(default_factory=list)
+    root: str = ""
+    kind: _Kind | None = None
+    emit: bool = False
+    log: str = ""  # the change log consumers read
+    keys: list[str] = field(default_factory=list)  # ... and its key columns
+    n_buckets: int = 32
+    agg_compact_every: int = 4
+    epoch: int = 1
+    watermark: int | None = None
+    src: _Side | None = None  # aggregate over a raw stream
+    fact: _Side | None = None  # join kinds
+    dim: _Side | None = None
+
+
+@dataclass(frozen=True)
+class _Kind:
+    check: Callable  # (eng, nd): resolve inputs, fire-before-write checks
+    init: Callable  # (eng, nd) -> floor | None: init writes, cleared root
+    step: Callable  # (eng, nd) -> consumed watermark | None
+    logs: Callable | None  # nd -> [(log, keys, order)]; None: the out log
+    view: Callable  # (eng, nd) -> the view materialized into the sink
+    records: tuple[str, ...]  # root records beside _init_done
+
+
+#: SQL shape → (log-consuming prefix, raw-input prefix)
+_PREFIXES = {
+    "agg": ("_ivmd_", "_ivm_"),
+    "join": ("_ivmjd_", "_ivmj_"),
+    "temporal": (None, "_ivmt_"),
+}
+
+
+def _classify(
+    sql: str, shape: str | None = None, label: str = ""
+) -> tuple[str, tuple]:
+    """(shape, parsed) of a maintainable pipeline: ``parsed`` is
+    ``(spec, table)`` for an aggregate, ``(spec, fact, dim)`` for the
+    joins. A pinned ``shape`` re-raises that parser's error."""
+    parsers = {
+        "join": lambda: ij.join_spec_from_sql(sql, ()),
+        "temporal": lambda: it.temporal_spec_from_sql(sql, (), "__pending__"),
+        "agg": lambda: agg_spec_from_sql(sql),
+    }
+    for s in (shape,) if shape else parsers:
+        try:
+            return s, parsers[s]()
+        except ValueError:
+            if shape:
+                raise
+    raise CatalogError(
+        f"pipeline {label!r} is none of the maintainable shapes "
+        "(lookup join, FOR SYSTEM_TIME AS OF temporal join, GROUP BY) — see "
+        "join_spec_from_sql / temporal_spec_from_sql / agg_spec_from_sql"
+    )
+
+
+def _root_prefix(root: str) -> str:
+    return "_%s_" % os.path.basename(root).split("_")[1]
+
+
+def _read_record(root: str, name: str) -> str | None:
+    path = os.path.join(root, name)
+    if not os.path.exists(path):
+        return None
+    with open(path) as fh:
+        return fh.read().strip()
+
+
+def _run_available_now(spark, src_path: str, schema, ckpt: str, handle) -> None:
+    """The one bounded foreachBatch run: every file of ``src_path`` not
+    yet committed in ``ckpt``, then stop."""
+    (
+        spark.readStream.schema(schema)
+        .parquet(src_path)
+        .writeStream.foreachBatch(handle)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
+def _view_v0(df: DataFrame) -> DataFrame:
+    """A view log's base image: every row live at ``__seq`` 0."""
+    return df.withColumn("__seq", F.lit(0).cast("long")).withColumn(
+        "__deleted", F.lit(False)
+    )
+
+
+def _check_emit_outputs(nd: _Node) -> None:
+    # an emitting rollup stacks __seq/__deleted onto its view outputs
+    bad = sorted(set(nd.spec.outputs()) & {"__seq", "__deleted"})
+    if nd.emit and bad:
+        raise CatalogError(
+            f"aggregate {nd.short!r} output name(s) {bad} collide with "
+            "reserved change-log columns — rename the aggregate aliases"
+        )
+
+
+# ---- aggregate over a raw stream (_ivm_) and over a change log (_ivmd_)
+
+def _agg_check(eng: Engine, nd: _Node) -> None:
+    tbl = nd.srcs[0]
+    if tbl not in nd.p.sources:
+        raise CatalogError(
+            f"view source {tbl!r} is not a registered source of {nd.p.name!r}"
+        )
+    nd.src = eng._raw_side(
+        tbl, order=nd.opts.get("order"), delete_col=nd.opts.get("delete_col")
+    )
+    # __bucket is the snapshot layout column
+    bad = sorted(
+        set(nd.src.schema.fieldNames()) & (_AGG_STATE_COLS | {"__bucket"})
+    )
+    if bad:
+        raise CatalogError(
+            f"source column(s) {bad} collide with reserved maintenance-state "
+            "names"
+        )
+    _check_emit_outputs(nd)
+
+
+def _aggd_check(eng: Engine, nd: _Node) -> None:
+    src = nd.srcs[0]
+    bad = sorted(
+        {f.name for f in eng.streams[src].schema.fields} & _AGG_STATE_COLS
+    )
+    if bad:
+        raise CatalogError(
+            f"consumed stream {src!r} column(s) {bad} collide with reserved "
+            "downstream aggregate state names"
+        )
+    _check_emit_outputs(nd)
+
+
+def _agg_ckpt(eng: Engine, nd: _Node) -> str:
+    return os.path.join(eng.warehouse_dir, f"_ckpt_ivm_{nd.p.name}")
+
+
+def _agg_init(eng: Engine, nd: _Node) -> None:
+    sp, s = eng.spark, nd.src
+    snap_path = os.path.join(nd.root, "snapshot")
+    _advance_stream_offsets(sp, s.path, s.schema, _agg_ckpt(eng, nd))
+    snap0 = cl.fold_last_image(sp.read.parquet(s.path), s.keys, s.cols())
+    cl.write_hash_partitioned(snap0, snap_path, s.keys, n_buckets=32)
+    ivm_log.ivm_log_init(
+        sp, nd.root, sp.read.parquet(snap_path).drop("__bucket"), nd.spec,
+        delete_col=s.delete_col, bucket_expr=nd.opts.get("agg_bucket_expr"),
+    )
+    if nd.emit:
+        # floor seq 0: strictly below every batch's batch_id + 1
+        ivm_dag.emit_floor_image(sp, nd.root, nd.spec, nd.log, 0, "init")
+
+
+def _aggd_init(eng: Engine, nd: _Node) -> int:
+    floor = ivm_dag.init_downstream(
+        eng.spark, nd.root, nd.up.log, nd.up.keys, nd.spec,
+        bucket_expr=nd.opts.get("agg_bucket_expr"),
+    )
+    if nd.emit:
+        ivm_dag.emit_floor_image(
+            eng.spark, nd.root, nd.spec, nd.log, floor, str(floor)
+        )
+    return floor
+
+
+def _agg_step(eng: Engine, nd: _Node) -> None:
+    s = nd.src
+    handle = ivm_log.maintain_view_batch(
+        nd.root, os.path.join(nd.root, "snapshot"), s.keys, s.cols(),
+        nd.spec, compact_every=nd.agg_compact_every, snapshot_n_buckets=32,
+        emit_log=nd.log if nd.emit else None,
+    )
+    _run_available_now(eng.spark, s.path, s.schema, _agg_ckpt(eng, nd), handle)
+
+
+def _aggd_step(eng: Engine, nd: _Node) -> int:
+    return ivm_dag.maintain_downstream(
+        eng.spark, nd.root, nd.up.log, nd.up.keys, nd.spec,
+        compact_every=nd.agg_compact_every,
+        emit_log=nd.log if nd.emit else None,
+    )
+
+
+def _agg_view(eng: Engine, nd: _Node) -> DataFrame:
+    return ivm_log.ivm_log_read(eng.spark, nd.root, nd.spec)
+
+
+# ---- lookup join over raw streams (_ivmj_), over a change log (_ivmjd_),
+# ---- temporal join (_ivmt_): three logs fact/dim/view under the root
+
+def _check_join_columns(
+    nd: _Node, fact_cols, reserved, payload_reserved=_LOG_COLS
+) -> None:
+    payload = list(
+        nd.spec.payload if nd.shape == "temporal" else nd.spec.dim_payload
+    )
+    for out in payload:
+        if out in fact_cols:
+            raise CatalogError(f"payload name {out!r} collides with a fact column")
+    # names stacked onto the data (__bucket by write_hash_partitioned,
+    # __seq/__deleted by the view log, the operators' round sentinels)
+    bad_fact = sorted(set(fact_cols) & reserved)
+    if bad_fact:
+        raise CatalogError(
+            f"fact column(s) {bad_fact} collide with reserved maintenance names"
+        )
+    if "__bucket" in nd.dim.schema.fieldNames():
+        raise CatalogError(
+            "dim column '__bucket' collides with the bucketed snapshot "
+            "layout column"
+        )
+    bad_payload = sorted(set(payload) & payload_reserved)
+    if bad_payload:
+        raise CatalogError(
+            f"payload output name(s) {bad_payload} collide with reserved "
+            "view-log columns"
+        )
+
+
+def _join_dim(eng: Engine, nd: _Node) -> _Side:
+    dtbl, dim_keys = nd.srcs[1], nd.spec.dim_keys
+    dim = eng._raw_side(
+        dtbl, "dim", nd.opts.get("dim_order"), nd.opts.get("dim_delete_col")
+    )
+    if tuple(dim.keys) != tuple(dim_keys):
+        raise CatalogError(
+            f"ON-clause dim columns {tuple(dim_keys)} must be exactly "
+            f"{dtbl!r}'s primary_key {tuple(dim.keys)} — the dim snapshot "
+            "is keyed by it"
+        )
+    return dim
+
+
+def _join_check(eng: Engine, nd: _Node) -> None:
+    for t in nd.srcs:
+        if t not in nd.p.sources:
+            raise CatalogError(
+                f"view source {t!r} is not a registered source of {nd.p.name!r}"
+            )
+    nd.fact = eng._raw_side(
+        nd.srcs[0], "fact", nd.opts.get("fact_order"),
+        nd.opts.get("fact_delete_col"),
+    )
+    nd.dim = _join_dim(eng, nd)
+    nd.spec = replace(nd.spec, fact_keys=tuple(nd.fact.keys))
+    _check_join_columns(
+        nd, nd.fact.schema.fieldNames(), set(ij._RESERVED) | _LOG_COLS
+    )
+
+
+def _joind_check(eng: Engine, nd: _Node) -> None:
+    # the fact side is the upstream change log, ingested as a keyed CDC
+    # stream: __seq/__deleted become the state-only __useq/__udel (the
+    # view log stacks fresh ones), hidden from the view projection
+    up_fields = [f.name for f in eng.streams[nd.srcs[0]].schema.fields]
+    nd.dim = _join_dim(eng, nd)
+    nd.spec = replace(nd.spec, fact_keys=tuple(nd.up.keys))
+    _check_join_columns(
+        nd, up_fields, set(ij._RESERVED) | _LOG_COLS | {"__useq", "__udel"}
+    )
+    missing_fk = sorted(set(nd.spec.fk_cols) - set(up_fields))
+    if missing_fk:
+        raise CatalogError(
+            f"fk column(s) {missing_fk} are not columns of the upstream "
+            f"sink {nd.srcs[0]!r}"
+        )
+    nd.fact = _Side(None, nd.up.keys, ["__useq"], None, "__udel", ("__useq",))
+
+
+def _temporal_check(eng: Engine, nd: _Node) -> None:
+    ftbl, dtbl = nd.srcs
+    for t in nd.srcs:
+        if t not in nd.p.sources:
+            raise CatalogError(
+                f"view source {t!r} is not a registered source of {nd.p.name!r}"
+            )
+    nd.fact = eng._raw_side(
+        ftbl, "fact", nd.opts.get("fact_order"), nd.opts.get("fact_delete_col")
+    )
+    dim = eng._raw_side(dtbl, "dim", ordered=False)
+    if [nd.spec.dim_key] != dim.keys:
+        raise CatalogError(
+            f"ON-clause dim column {nd.spec.dim_key!r} must be exactly "
+            f"{dtbl!r}'s primary_key {tuple(dim.keys)} — versions are keyed "
+            "by it"
+        )
+    valid_from = nd.opts.get("dim_valid_from")
+    if valid_from is None:
+        wms = [w.name for w in eng.streams[eng.qualify(dtbl)].schema.watermarks]
+        if len(wms) != 1:
+            raise CatalogError(
+                "pass dim_valid_from= (the dim's version-start column): the "
+                "dim stream does not have exactly one watermark column to "
+                "default to"
+            )
+        valid_from = wms[0]
+    nd.spec = replace(
+        nd.spec, fact_keys=tuple(nd.fact.keys), valid_from=valid_from
+    )
+    # the dim log keeps EVERY version: keyed (dim key, valid_from), so its
+    # fold deduplicates replayed version rows and never drops a version
+    nd.dim = replace(
+        dim, keys=[nd.spec.dim_key, valid_from], order=[valid_from]
+    )
+    fcols, dcols = nd.fact.schema.fieldNames(), dim.schema.fieldNames()
+    for col_, cols, what in (
+        (nd.spec.fact_ts, fcols, "AS OF probe column"),
+        (nd.spec.fk_col, fcols, "ON-clause fact column"),
+        (valid_from, dcols, "dim valid_from column"),
+        *((src, dcols, "payload source column") for src in nd.spec.payload.values()),
+    ):
+        if col_ not in cols:
+            raise CatalogError(f"{what} {col_!r} is not a source column")
+    reserved = set(it._RESERVED) | _LOG_COLS
+    bad_dim = sorted(set(dcols) & reserved)
+    if bad_dim:
+        raise CatalogError(
+            f"dim column(s) {bad_dim} collide with reserved temporal "
+            "maintenance names"
+        )
+    _check_join_columns(nd, fcols, reserved, reserved)
+
+
+def _join_logs(nd: _Node) -> list[tuple[str, list[str], list[str]]]:
+    f, d = nd.fact, nd.dim
+    return [
+        (os.path.join(nd.root, "fact"), f.keys, f.order),
+        (os.path.join(nd.root, "dim"), d.keys, d.order),
+        (nd.log, f.keys, ["__seq"]),
+    ]
+
+
+def _write_join_base(eng: Engine, nd: _Node, fsnap: DataFrame) -> None:
+    """The fact/dim snapshots and view v0 (``__seq`` 0) of a join-family
+    node. The dim fold's listing happens here — after the offset
+    capture."""
+    sp, f, d, n = eng.spark, nd.fact, nd.dim, nd.n_buckets
+    fact_log, dim_log = (os.path.join(nd.root, x) for x in ("fact", "dim"))
+    dsnap = cl.fold_last_image(sp.read.parquet(d.path), d.keys, d.cols())
+    cl.write_hash_partitioned(fsnap, fact_log, f.keys, n)
+    cl.write_hash_partitioned(dsnap, dim_log, d.keys, n)
+    fact = sp.read.parquet(fact_log).drop("__bucket")
+    dim = sp.read.parquet(dim_log).drop("__bucket")
+    if nd.shape == "temporal":
+        v0 = it.recompute_temporal_view(
+            fact, dim, nd.spec, f.cols(), fact_delete_col=f.delete_col
+        )
+    else:
+        v0 = ij.compute_join_view(
+            fact, dim, nd.spec, f.delete_col, d.delete_col,
+            fact_hidden_cols=f.hidden,
+        )
+    cl.write_hash_partitioned(_view_v0(v0), nd.log, f.keys, n)
+
+
+def _join_init(eng: Engine, nd: _Node) -> None:
+    sp, f, d = eng.spark, nd.fact, nd.dim
+    # offsets BEFORE the folds list the sources (_advance_stream_offsets)
+    for side, s in (("fact", f), ("dim", d)):
+        _advance_stream_offsets(
+            sp, s.path, s.schema, os.path.join(nd.root, f"_ckpt_{side}")
+        )
+    _write_join_base(
+        eng, nd, cl.fold_last_image(sp.read.parquet(f.path), f.keys, f.cols())
+    )
+
+
+def _joind_init(eng: Engine, nd: _Node) -> int:
+    d = nd.dim
+    _advance_stream_offsets(
+        eng.spark, d.path, d.schema, os.path.join(nd.root, "_ckpt_dim")
+    )
+    # the fact side has no stream: its floor comes from the listing its
+    # fold reads
+    snap, floor = ivm_dag.init_view(eng.spark, nd.up.log, nd.up.keys)
+    _write_join_base(eng, nd, _ingest(snap))
+    ivm_dag._write_floor(nd.root, floor)
+    return floor
+
+
+def _ingest(rows: DataFrame) -> DataFrame:
+    return rows.withColumnRenamed("__seq", "__useq").withColumnRenamed(
+        "__deleted", "__udel"
+    )
+
+
+def _append_view_changes(
+    eng: Engine, nd: _Node, changes: DataFrame, tag: str
+) -> None:
+    changes = changes.localCheckpoint(eager=True)
+    if changes.count() > 0:
+        cl.append_delta(eng.spark, nd.log, changes, tag=tag)
+
+
+def _join_round(
+    eng: Engine, nd: _Node, side: str, batch: DataFrame, seq: int,
+    tag: str, view_tag: str,
+) -> None:
+    """One lookup-join maintenance round: recompute the view's touched
+    slice against state that still EXCLUDES the batch, land the VIEW delta
+    first and the side's STATE delta second — a crash between them
+    replays bit-identical changes, deduped by tag within an activation and
+    convergent by the last-image fold across activations."""
+    sp, f, d = eng.spark, nd.fact, nd.dim
+
+    def merged(x, s, **kw):
+        return cl.read_merged(
+            sp, os.path.join(nd.root, x), s.keys, s.cols(), prune_fold=True, **kw
+        )
+
+    state = ij.JoinViewState(
+        fact=merged("fact", f, include_tombstones=True),
+        dim=merged("dim", d, include_tombstones=True),
+        # the view frame only shapes the (discarded) splice plan
+        view=_join_view(eng, nd),
+    )
+    empty = lambda s: sp.createDataFrame([], s.schema)  # noqa: E731
+    _st, changes = ij.maintain_join_with_changes(
+        state,
+        batch if side == "fact" else empty(f),
+        batch if side == "dim" else empty(d),
+        f.cols(), d.cols(), nd.spec, seq=seq,
+        fact_delete_col=f.delete_col, dim_delete_col=d.delete_col,
+        fact_hidden_cols=f.hidden,
+    )
+    _append_view_changes(eng, nd, changes, view_tag)
+    cl.append_delta(sp, os.path.join(nd.root, side), batch, tag=tag)
+
+
+def _bounded_join_side(eng: Engine, nd: _Node, side: str, round_) -> None:
+    """A raw join input's bounded stream; view seqs are
+    ``(epoch, side, batch)``-ordered so later activations win and dim
+    batches (run second) win over the same activation's fact batches."""
+    sbit = 0 if side == "fact" else 1
+
+    def handle(batch_df, batch_id):
+        seq = ((nd.epoch * 2 + sbit) << 33) + batch_id
+        tag = f"{side}-{nd.epoch}-{batch_id}"
+        round_(eng, nd, side, batch_df, seq, tag, f"view-{tag}")
+
+    s = getattr(nd, side)
+    _run_available_now(
+        eng.spark, s.path, s.schema, os.path.join(nd.root, f"_ckpt_{side}"),
+        handle,
+    )
+
+
+def _join_step(eng: Engine, nd: _Node) -> None:
+    _bounded_join_side(eng, nd, "fact", _join_round)
+    _bounded_join_side(eng, nd, "dim", _join_round)
+
+
+def _joind_step(eng: Engine, nd: _Node) -> int:
+    # the fact side consumes the upstream log past the root's floor as ONE
+    # batch (the keyed merge telescopes intermediate images); the floor
+    # advances LAST, after the view and state deltas
+    sp = eng.spark
+    # the ingested fact state's schema shapes the dim rounds' empty batch
+    fact_state = sp.read.parquet(os.path.join(nd.root, "fact"))
+    nd.fact = replace(nd.fact, schema=fact_state.drop("__bucket").schema)
+    w, new_w, _base, drows = ivm_dag.pending_changes(sp, nd.root, nd.up.log)
+    if new_w > w:
+        pending = _ingest(drows.filter(F.col("__seq") > F.lit(w)))
+        _join_round(
+            eng, nd, "fact", pending, (nd.epoch * 2) << 33,
+            f"fact-up{new_w}", f"view-up{new_w}",
+        )
+        ivm_dag._write_floor(nd.root, new_w)
+    _bounded_join_side(eng, nd, "dim", _join_round)
+    return new_w
+
+
+def _temporal_round(
+    eng: Engine, nd: _Node, side: str, batch: DataFrame, seq: int,
+    tag: str, view_tag: str,
+) -> None:
+    """One temporal-join round. The FACT side lands its state delta FIRST
+    (the post-append merge-on-read read IS the operator's
+    ``snapshot_after``), the DIM side LAST (the SCD2 merge must pre-date
+    the batch); both replay bit-identically and dedupe on the tag."""
+    sp, f, d, spec = eng.spark, nd.fact, nd.dim, nd.spec
+    fact_log = os.path.join(nd.root, "fact")
+    if side == "fact":
+        cl.append_delta(sp, fact_log, batch, tag=tag)
+    fact_now = cl.read_merged(
+        sp, fact_log, f.keys, f.cols(), include_tombstones=True, prune_fold=True
+    )
+    # the SCD2 window folds only the versions of the batch's touched dim
+    # keys (exact: SCD2 is per key). The fact side also needs the fks of
+    # the post-merge WINNING images of its keys — a stale batch row can
+    # lose the merge to an image carrying a different fk.
+    if side == "fact":
+        winner_fks = fact_now.join(
+            F.broadcast(batch.select(*f.keys).distinct()),
+            on=f.keys, how="left_semi",
+        ).select(F.col(spec.fk_col).alias(spec.dim_key))
+        touch_dk = (
+            batch.select(F.col(spec.fk_col).alias(spec.dim_key))
+            .unionByName(winner_fks)
+            .distinct()
+        )
+    else:
+        touch_dk = batch.select(spec.dim_key).distinct()
+    hist = cl.read_merged(
+        sp, os.path.join(nd.root, "dim"), d.keys, d.cols(),
+        include_tombstones=True, prune_fold=True,
+    ).join(F.broadcast(touch_dk), on=spec.dim_key, how="left_semi")
+    state = it.TemporalJoinState(
+        fact=fact_now,
+        dim_versions=cl.scd2_from_changelog(hist, [spec.dim_key], spec.valid_from),
+        view=_join_view(eng, nd),
+    )
+    _st, changes = it.maintain_temporal_join_with_changes(
+        state,
+        batch if side == "fact" else None,
+        batch if side == "dim" else None,
+        f.cols(), spec, seq=seq, fact_delete_col=f.delete_col,
+        snapshot_after=fact_now,
+    )
+    _append_view_changes(eng, nd, changes, view_tag)
+    if side == "dim":
+        cl.append_delta(sp, os.path.join(nd.root, "dim"), batch, tag=tag)
+
+
+def _temporal_step(eng: Engine, nd: _Node) -> None:
+    _bounded_join_side(eng, nd, "fact", _temporal_round)
+    _bounded_join_side(eng, nd, "dim", _temporal_round)
+
+
+def _join_view(eng: Engine, nd: _Node) -> DataFrame:
+    return cl.read_merged(
+        eng.spark, nd.log, nd.fact.keys, [F.col("__seq")],
+        delete_col="__deleted", prune_fold=True,
+    ).drop("__seq", "__deleted")
+
+
+_KINDS: dict[str, _Kind] = {
+    "_ivm_": _Kind(
+        _agg_check, _agg_init, _agg_step, None, _agg_view, ("_emit_changes",)
+    ),
+    "_ivmd_": _Kind(
+        _aggd_check, _aggd_init, _aggd_step, None, _agg_view, ("_emit_changes",)
+    ),
+    "_ivmj_": _Kind(
+        _join_check, _join_init, _join_step, _join_logs, _join_view,
+        ("_n_buckets", "_epoch"),
+    ),
+    "_ivmjd_": _Kind(
+        _joind_check, _joind_init, _joind_step, _join_logs, _join_view,
+        ("_n_buckets", "_epoch"),
+    ),
+    "_ivmt_": _Kind(
+        _temporal_check, _join_init, _temporal_step, _join_logs, _join_view,
+        ("_n_buckets", "_epoch"),
+    ),
+}

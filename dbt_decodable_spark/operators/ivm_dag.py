@@ -42,9 +42,10 @@ Consumption protocol (the watermark dance):
 Compaction coupling (the one cross-stage invariant): reconstructing
 "as of ``W``" requires that the view log's BASE snapshot contain no row
 with ``__seq > W`` — i.e. the view log must not be compacted past the
-downstream watermark. ``catalog.activate_pipeline_dag_incremental``
-enforces the ordering (downstream step BEFORE view-log compaction in the
-same activation); :func:`maintain_downstream` independently verifies it
+downstream watermark. The catalog's node runner
+(``catalog.activate_project_incremental``) enforces the ordering (every
+consumer step BEFORE its producer's compaction in the same activation);
+:func:`pending_changes` independently verifies it
 with a cheap ``max(__seq)`` probe of the base and raises
 :class:`DownstreamLagError` instead of silently double- or under-counting
 — the honest recovery is a downstream rebuild (drop the root; init folds
@@ -342,6 +343,41 @@ def view_as_of(
     return fold_last_image(rows, list(keys), [F.col(SEQ)])
 
 
+def init_view(
+    spark: SparkSession, view_log: str, keys: Sequence[str]
+) -> tuple[DataFrame, int]:
+    """(folded current upstream state, consumed floor) — the ONE init read
+    every log consumer (a downstream aggregate, a mid-graph join's fact
+    side) starts from: base ∪ all committed deltas, tombstones included so
+    the floor state matches what :func:`view_as_of` reconstructs.
+
+    One listing feeds both the fold and the floor, so a delta landing after
+    it is simply not read and is consumed by the next maintenance step. The
+    fold is lazily checkpointed so the caller's first write materializes it
+    once. The floor comes from parquet FOOTER statistics over exactly the
+    listed files (metadata, not a column scan; the Spark aggregate is the
+    fallback for stats-less files), max-ed with the log's durable
+    compaction floor: the fold consumed the ENTIRE listed log, and a
+    compaction fold keeps only live images, whose max seq sits BELOW the
+    compaction floor when the newest folded batch only tombstoned groups —
+    a floor from the retained rows alone would trip the consumer's own lag
+    guard on its very next step."""
+    dpaths = list_deltas(view_log)
+    base, drows = _view_rows(spark, view_log, deltas=dpaths)
+    snap = fold_last_image(
+        base.unionByName(drows), list(keys), [F.col(SEQ)]
+    ).localCheckpoint(eager=False)
+    has_base = _has_parquet(view_log)
+    fmax = _deltas_max_seq(dpaths)
+    bmax = _base_max_seq(view_log) if has_base else None
+    if (fmax is None and dpaths) or (bmax is None and has_base):
+        floor_row = snap.agg(F.max(SEQ).alias("m")).collect()[0]
+        floor = int(floor_row["m"]) if floor_row["m"] is not None else 0
+    else:
+        floor = max((int(v) for v in (fmax, bmax) if v is not None), default=0)
+    return snap, max(floor, _log_compaction_floor(view_log))
+
+
 def init_downstream(
     spark: SparkSession,
     root: str,
@@ -351,48 +387,12 @@ def init_downstream(
     bucket_expr: str | None = None,
     n_buckets: int = 64,
 ) -> int:
-    """Generation 0 of the downstream state: one fold of the CURRENT view
-    (base ∪ all committed deltas — tombstones included so the floor state
-    matches what :func:`view_as_of` reconstructs), with the consumed floor
-    pinned to the max ``__seq`` present. Floor-before-read ordering makes a
-    concurrent view append safe: a delta landing after the floor capture is
-    excluded by the ``__seq`` filter and consumed by the next maintenance
-    step. Fully redo-safe — the caller gates on a marker written last and
-    clears the root before re-running (no downstream delta can exist before
-    the marker, so a re-init can never double-count)."""
-    # ONE pass over the view: list the delta set once, fold once, and
-    # take the floor from the SAME file set (the global max-__seq row is
-    # its key's latest image, so max(folded) == max(raw)). The fold is
-    # lazily checkpointed so the floor probe and ivm_log_init's full
-    # pass share the materialization instead of scanning the view twice —
-    # and the single delta listing also closes the old two-listing race
-    # (a delta landing between the floor capture and a second listing).
-    # A delta landing after THIS listing is simply not read and is
-    # consumed by the next maintenance step.
-    #
-    # r14 (guide §6 — metadata over data): the floor comes from parquet
-    # FOOTER statistics over exactly the listed base+delta files (the
-    # `_base_max_seq` pattern), not a Spark aggregate — one fewer driver
-    # action here, and at 100 TB a metadata read instead of a column scan
-    # of the whole view. The Spark aggregate remains as the fallback for
-    # stats-less files; the checkpointed fold then materializes inside
-    # ivm_log_init's publish pass either way.
-    dpaths = list_deltas(view_log)
-    base, drows = _view_rows(spark, view_log, deltas=dpaths)
-    snap = fold_last_image(
-        base.unionByName(drows), list(keys), [F.col(SEQ)]
-    ).localCheckpoint(eager=False)
-    fmax = _deltas_max_seq(dpaths)
-    bmax = _base_max_seq(view_log) if _has_parquet(view_log) else None
-    if fmax is None and dpaths:
-        floor_row = snap.agg(F.max(SEQ).alias("m")).collect()[0]
-        floor = int(floor_row["m"]) if floor_row["m"] is not None else 0
-    elif bmax is None and _has_parquet(view_log):
-        floor_row = snap.agg(F.max(SEQ).alias("m")).collect()[0]
-        floor = int(floor_row["m"]) if floor_row["m"] is not None else 0
-    else:
-        cands = [int(v) for v in (fmax, bmax) if v is not None]
-        floor = max(cands) if cands else 0
+    """Generation 0 of the downstream state from :func:`init_view`, with
+    the consumed floor pinned first. Fully redo-safe — the caller gates on
+    a marker written last and clears the root before re-running (no
+    downstream delta can exist before the marker, so a re-init can never
+    double-count)."""
+    snap, floor = init_view(spark, view_log, keys)
     os.makedirs(root, exist_ok=True)
     _write_floor(root, floor)
     ivm_log_init(
@@ -400,6 +400,28 @@ def init_downstream(
         delete_col=DEL, bucket_expr=bucket_expr, n_buckets=n_buckets,
     )
     return floor
+
+
+def emit_floor_image(
+    spark: SparkSession,
+    root: str,
+    spec: AggViewSpec,
+    emit_log: str,
+    seq: int,
+    tag: str,
+) -> None:
+    """Seed an emitting root's change log with its state image at ``seq``:
+    the log's first batch, so ``fold(out log)`` equals the rollup view from
+    that floor onward."""
+    from dbt_decodable_spark.operators.ivm_log import ivm_log_read
+    from dbt_decodable_spark.streaming.changelog import append_delta
+
+    img = (
+        ivm_log_read(spark, root, spec)
+        .withColumn(SEQ, F.lit(seq).cast("long"))
+        .withColumn(DEL, F.lit(False))
+    )
+    append_delta(spark, emit_log, img, tag=tag)
 
 
 def rebuild_downstream(
@@ -429,15 +451,7 @@ def rebuild_downstream(
         spark, root, view_log, keys, spec, bucket_expr, n_buckets
     )
     if emit_log is not None:
-        from dbt_decodable_spark.operators.ivm_log import ivm_log_read
-        from dbt_decodable_spark.streaming.changelog import append_delta
-
-        img = (
-            ivm_log_read(spark, root, spec)
-            .withColumn(SEQ, F.lit(floor).cast("long"))
-            .withColumn(DEL, F.lit(False))
-        )
-        append_delta(spark, emit_log, img, tag=str(floor))
+        emit_floor_image(spark, root, spec, emit_log, floor, str(floor))
     return floor
 
 
@@ -486,6 +500,73 @@ def _slice_rows(
     )
 
 
+def pending_changes(
+    spark: SparkSession, root: str, view_log: str
+) -> tuple[int, int, DataFrame | None, DataFrame | None]:
+    """``(w, new_w, base, drows)`` for one consumer step over an upstream
+    change log — the lag guard and the pending watermark every log consumer
+    (a downstream aggregate, a mid-graph join's fact side) runs. ``w`` is
+    the root's consumed watermark; ``new_w`` the max committed delta
+    ``__seq`` (``== w`` when nothing is pending; ``base``/``drows`` are
+    None when the log retains no delta at all).
+
+    The guard raises :class:`DownstreamLagError` when the upstream was
+    compacted past ``w``: a base row with ``__seq > w`` (the view-log
+    shape), or a committed Kafka floor above ``w`` (the pure-delta shape —
+    tombstones the consumer never saw were dropped by the fold). The
+    pending max comes from parquet footer statistics over the SAME delta
+    listing the fold reads (no Spark job, no delta-row scan at 100 TB); the
+    Spark aggregate stays as the stats-less fallback."""
+    w = downstream_watermark(root)
+    hint = (
+        f"delete the root {root!r} to re-initialize it from the current "
+        "upstream state (operators.ivm_dag.rebuild_downstream rebuilds an "
+        "aggregate root; consumers of its own change log rebuild with it)"
+    )
+    dpaths = list_deltas(view_log)
+    if _has_parquet(view_log):
+        base, drows = _view_rows(spark, view_log, deltas=dpaths)
+        base_max = _base_max_seq(view_log)
+        if base_max is None:
+            # footer stats unavailable (exotic writer) — fall back to the
+            # column scan; correctness first
+            base_max = base.agg(F.max(SEQ).alias("m")).collect()[0]["m"]
+        if base_max is not None and int(base_max) > w:
+            raise DownstreamLagError(
+                f"view log {view_log!r} base snapshot holds "
+                f"__seq={base_max} > consumer watermark {w} — it was "
+                f"compacted past this consumer; {hint}"
+            )
+    else:
+        # the durable floor record survives zero retained deltas, so the
+        # guard runs before the empty-log no-op below
+        log_floor = _log_compaction_floor(view_log)
+        if log_floor > w:
+            raise DownstreamLagError(
+                f"change log {view_log!r} was compacted to floor "
+                f"{log_floor} > consumer watermark {w} — tombstones this "
+                f"consumer never saw are gone; {hint}"
+            )
+        if not dpaths:
+            from dbt_decodable_spark.streaming.changelog import _deltas_root
+
+            if os.path.isdir(_deltas_root(view_log)):
+                # the log exists (externally swept, or compacted to zero
+                # rows before the schema-anchor fix): nothing is pending
+                return w, w, None, None
+        # raises for a log that never existed
+        base, drows = _view_rows(spark, view_log, deltas=dpaths)
+    fmax = _deltas_max_seq(dpaths)
+    if fmax is None and dpaths:
+        fmax = (
+            drows.filter(F.col(SEQ) > F.lit(w))
+            .agg(F.max(SEQ).alias("m"))
+            .collect()[0]["m"]
+        )
+    new_w = w if fmax is None or int(fmax) <= w else int(fmax)
+    return w, new_w, base, drows
+
+
 def maintain_downstream(
     spark: SparkSession,
     root: str,
@@ -497,80 +578,19 @@ def maintain_downstream(
     emit_log: str | None = None,
 ) -> int:
     """One downstream maintenance step: consume every pending view change
-    (``__seq`` past the consumed watermark) into the downstream aggregate
-    state, as ONE :func:`ivm_log_append` — correct for any batching because
-    the fold-to-last-image inside ``change_pairs`` telescopes intermediate
-    images away, and the signed old/new contributions equal the sequential
-    per-batch sum. The old-image lookup reads a pending-keys SLICE of the
-    as-of state (:func:`snapshot_slice`), never the whole view. Returns the
-    new watermark (unchanged when nothing is pending). Compaction of the
-    DOWNSTREAM log runs on the aggregate arm's pending-delta trigger
-    (``compact_every``)."""
-    w = downstream_watermark(root)
-    if not _has_parquet(view_log) and not list_deltas(view_log):
-        # pure-delta upstream that retains ZERO committed deltas. The
-        # compaction now always leaves a schema-anchor marker, so this is
-        # an externally-swept or pre-fix log — still: guard the floor
-        # FIRST (the durable record survives zero retained deltas), then
-        # no-op for a caught-up consumer instead of crashing in
-        # _view_rows (ADVICE r11).
-        from dbt_decodable_spark.streaming.changelog import _deltas_root
-
-        log_floor = _log_compaction_floor(view_log)
-        if log_floor > w:
-            raise DownstreamLagError(
-                f"change log {view_log!r} was compacted to floor "
-                f"{log_floor} > downstream watermark {w} — tombstones "
-                f"this consumer never saw are gone; rebuild the root "
-                f"{root!r} (operators.ivm_dag.rebuild_downstream)"
-            )
-        if os.path.isdir(_deltas_root(view_log)):
-            return w  # log exists, nothing was ever pending beyond w
-        # fall through for the log-never-existed error
-    dpaths = list_deltas(view_log)
-    base, drows = _view_rows(spark, view_log, deltas=dpaths)
-    if _has_parquet(view_log):
-        base_max = _base_max_seq(view_log)
-        if base_max is None:
-            # footer stats unavailable (exotic writer) — fall back to the
-            # column scan; correctness first, the fast path is an
-            # optimization
-            base_max = base.agg(F.max(SEQ).alias("m")).collect()[0]["m"]
-        if base_max is not None and int(base_max) > w:
-            raise DownstreamLagError(
-                f"view log {view_log!r} base snapshot holds "
-                f"__seq={base_max} > downstream watermark {w} — it was "
-                f"compacted past this downstream; rebuild the root "
-                f"{root!r} (operators.ivm_dag.rebuild_downstream)"
-            )
-    else:
-        # pure-delta upstream (a maintained rollup's emitted change log):
-        # the unsafe-compaction probe is the committed Kafka floor — a
-        # floor past this consumer's watermark means tombstones it never
-        # consumed were already dropped from the fold
-        log_floor = _log_compaction_floor(view_log)
-        if log_floor > w:
-            raise DownstreamLagError(
-                f"change log {view_log!r} was compacted to floor "
-                f"{log_floor} > downstream watermark {w} — tombstones "
-                f"this consumer never saw are gone; rebuild the root "
-                f"{root!r} (operators.ivm_dag.rebuild_downstream)"
-            )
-    pending = drows.filter(F.col(SEQ) > F.lit(w))
-    # r14 (guide §6): the new watermark = max pending __seq comes from
-    # parquet footer statistics over the SAME committed delta listing the
-    # fold reads (no Spark job, no delta-row scan at 100 TB); max over all
-    # delta rows > w ⟺ max over all delta rows, when that exceeds w. The
-    # Spark aggregate stays as the stats-less fallback. NOTE: the base is
-    # deliberately excluded here exactly as before — the lag guard above
-    # already proved base __seq ≤ w.
-    fmax = _deltas_max_seq(dpaths)
-    if fmax is None and dpaths:
-        new_w_row = pending.agg(F.max(SEQ).alias("m")).collect()[0]
-        fmax = new_w_row["m"]
-    if fmax is None or int(fmax) <= w:
+    (``__seq`` past the consumed watermark, :func:`pending_changes`) into
+    the downstream aggregate state, as ONE :func:`ivm_log_append` — correct
+    for any batching because the fold-to-last-image inside ``change_pairs``
+    telescopes intermediate images away, and the signed old/new
+    contributions equal the sequential per-batch sum. The old-image lookup
+    reads a pending-keys SLICE of the as-of state (:func:`snapshot_slice`),
+    never the whole view. Returns the new watermark (unchanged when nothing
+    is pending). Compaction of the DOWNSTREAM log runs on the aggregate
+    arm's pending-delta trigger (``compact_every``)."""
+    w, new_w, base, drows = pending_changes(spark, root, view_log)
+    if new_w == w:
         return w
-    new_w = int(fmax)
+    pending = drows.filter(F.col(SEQ) > F.lit(w))
     snap_before = snapshot_slice(
         base, drows.filter(F.col(SEQ) <= F.lit(w)), keys, pending,
         broadcast_keys=broadcast_keys,

@@ -371,9 +371,9 @@ def ivm_log_init(
     directories. Refuses a root that already holds committed generations:
     re-initializing would publish a fresh ``watermark=-1`` generation whose
     state already includes the retained deltas' effects, and readers would
-    then re-apply those deltas on top — double-counted counters (callers
-    that mean to adopt an existing root must gate on the generation's
-    presence, as ``catalog.activate_pipeline_incremental`` does)."""
+    then re-apply those deltas on top — double-counted counters (the
+    catalog's node runner clears a root without its init marker before
+    re-initializing it)."""
     if list_versions(_agg_root(root)):
         raise RuntimeError(
             f"{root!r} already has committed generations — re-initializing "
@@ -855,6 +855,32 @@ def stream_maintain_view(
     the state append and the emission are non-empty for exactly the same
     batches). Emitted ``__seq`` is ``batch_id + 1`` so the init image's
     floor seq 0 sorts strictly below every batch."""
+    return stream_df.writeStream.foreachBatch(
+        maintain_view_batch(
+            root, snapshot_path, keys, order, spec,
+            compact_every=compact_every,
+            vacuum_horizon_seconds=vacuum_horizon_seconds,
+            snapshot_n_buckets=snapshot_n_buckets,
+            snapshot_partition_expr=snapshot_partition_expr,
+            emit_log=emit_log,
+        )
+    )
+
+
+def maintain_view_batch(
+    root: str,
+    snapshot_path: str,
+    keys: Sequence[str],
+    order: Sequence[Column | str],
+    spec: AggViewSpec,
+    compact_every: int = 4,
+    vacuum_horizon_seconds: float = 600.0,
+    snapshot_n_buckets: int = 64,
+    snapshot_partition_expr: Column | None = None,
+    emit_log: str | None = None,
+):
+    """The ``foreachBatch`` handler behind :func:`stream_maintain_view`,
+    for callers that run the bounded stream themselves."""
     from dbt_decodable_spark.streaming.changelog import (
         CompactionLockHeld,
         compact_and_vacuum,
@@ -905,7 +931,7 @@ def stream_maintain_view(
             except CompactionLockHeld:
                 pass
 
-    return stream_df.writeStream.foreachBatch(_handle)
+    return _handle
 
 
 def ivm_log_compact(

@@ -30,22 +30,19 @@ def _stream_state_partitions() -> str:
     watermark-finalization batch), so this bounds the fixed commit cost of
     the 2-batch preview runs; it is NOT a general shuffle setting — batch
     queries keep the session default, and production streaming jobs size
-    state partitions to their key volume via the session conf — this value
-    scales with the PREVIEW'S STATE VOLUME (KB at every bench SF), not
-    with local core count (more cores would want MORE partitions, so this
-    is not a local[32] fit). Overridable via
-    ``SPARK_GRAFT_STREAM_STATE_PARTS``.
+    state partitions to their key volume via the session conf. The
+    preview state is KB-sized at every bench SF, so the count is a
+    constant; derive it from the input size once a workload's state
+    volume makes 2 the wrong answer.
 
-    Default 2 (was 8 through r13): a 4-round interleaved A/B at sf0.1
+    2 (was 8 through r13): a 4-round interleaved A/B at sf0.1
     (OPTIMIZATION_r14.md) had 2 beating 8 on every pair — the
     stream-stream interval joins, which commit 4 state stores per
     partition per side per micro-batch, ran ~2× faster; outputs
     bit-identical (xxhash64 xor) for all 5 stateful rows at sf0.1 under
     both values, and the 5-row oracle gate passes at sf0.001 AND sf0.01
     with 2 (the interval-join-outer eviction caveat stays absent)."""
-    import os
-
-    return os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTS", "2")
+    return "2"
 
 
 def _await_bounded(q, name: str, timeout: float = 300.0) -> None:

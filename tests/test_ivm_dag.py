@@ -757,9 +757,7 @@ class TestEngineDag:
             def _crash(*a, **kw):
                 raise boom
 
-            monkeypatch.setattr(
-                Engine, "_compact_join_pipeline_logs", _crash
-            )
+            monkeypatch.setattr(Engine, "_compact_node", _crash)
             with pytest.raises(RuntimeError, match="crash before join"):
                 self._activate(eng, compact_min_deltas=1)
             monkeypatch.undo()

@@ -517,73 +517,6 @@ class TestEngineIncremental:
         ) == want()
         eng.cleanup()
 
-    def test_premarker_root_adopted_not_reinitialized(self, spark, tmp_path):
-        """A root initialized before the _init_done marker existed (old
-        gate: isdir(root)) must be ADOPTED, not re-initialized: a fresh
-        watermark=-1 generation would re-apply the log's still-present
-        counter deltas on top of a snapshot fold that already carries
-        their effects — double-counted aggregates (r10 review)."""
-        import glob as _glob
-
-        from dbt_decodable_spark.catalog import Engine
-        from dbt_decodable_spark.schema import StreamSchema
-        from dbt_decodable_spark.streaming.changelog import fold_last_image
-
-        eng = Engine(spark, namespace="iv6", warehouse_dir=str(tmp_path / "wh"))
-        os.makedirs(eng.warehouse_dir, exist_ok=True)
-        ddl = "pk long, grp string, val long, ts long"
-        hist = [(i, "g", 10, 1) for i in range(4)]
-        src = spark.createDataFrame(hist, ddl)
-        eng.create_stream(
-            "src",
-            schema=StreamSchema.from_spark(src.schema, primary_key=["pk"]),
-            data=src,
-        )
-        eng.create_pipeline(
-            "agg",
-            "select grp, count(*) as n, sum(val) as sum_val "
-            "from iv6__src group by grp",
-            activate=False,
-        )
-        root = os.path.join(eng.warehouse_dir, "_ivm_iv6__agg")
-        marker = os.path.join(root, "_init_done")
-        # high threshold: deltas stay PENDING (the double-count fuel)
-        eng.activate_pipeline_incremental("agg", order=["ts"], compact_every=99)
-        batch1 = [(10, "g", 7, 2)]
-        hist += batch1
-        spark.createDataFrame(batch1, ddl).write.mode("append").parquet(
-            eng.streams["iv6__src"].path
-        )
-        eng.refresh_stream("src")
-        eng.activate_pipeline_incremental("agg", order=["ts"], compact_every=99)
-        gens_before = sorted(_glob.glob(os.path.join(root, "agg", "v=*")))
-        # simulate a pre-marker warehouse: the root is complete, the
-        # marker never existed
-        os.remove(marker)
-        batch2 = [(11, "g", 5, 3)]
-        hist += batch2
-        spark.createDataFrame(batch2, ddl).write.mode("append").parquet(
-            eng.streams["iv6__src"].path
-        )
-        eng.refresh_stream("src")
-        eng.activate_pipeline_incremental("agg", order=["ts"], compact_every=99)
-        assert os.path.exists(marker)  # adopted
-        # no re-init: generation inventory unchanged (a re-init would have
-        # published a fresh v= with watermark=-1)
-        assert sorted(_glob.glob(os.path.join(root, "agg", "v=*"))) == gens_before
-        folded = fold_last_image(
-            spark.createDataFrame(hist, ddl), ["pk"], [F.col("ts"), F.col("pk")]
-        )
-        want = sorted(
-            tuple(r)
-            for r in folded.groupBy("grp")
-            .agg(F.count(F.lit(1)).alias("n"), F.sum("val").alias("sum_val"))
-            .collect()
-        )
-        got = sorted(tuple(r) for r in eng.read_stream("agg").collect())
-        assert got == want  # no double count
-        eng.cleanup()
-
     def test_incremental_rejects_bucket_column_before_write(
         self, spark, tmp_path
     ):

@@ -373,6 +373,67 @@ class TestRawAggRootedChain:
                 break
             k += 1
 
+    def test_consumer_init_after_tombstone_compaction_catches_up(
+        self, spark, tmp_path
+    ):
+        """A compaction fold keeps only live images: when the newest
+        folded batch only tombstoned a group, the retained max ``__seq``
+        sits below the log's compaction floor. A consumer initialized
+        over that log — the documented rebuild of a lagging one, or a
+        second consumer added later — must start AT the floor, or its
+        first step trips its own lag guard and the recovery never
+        converges."""
+        ns = "pjrcf"
+        eng = self._mk(spark, tmp_path, ns, F1)
+        eng.create_pipeline(
+            "rawband3",
+            f"select fk % 3 as band3, count(*) as n_fks, "
+            f"sum(sum_qty) as total_qty from {ns}__rawroll group by band3",
+            activate=False,
+        )
+        all_nodes = dict(self.RAW_NODES, rawband3={})
+
+        def want3(roll_rows):
+            roll = spark.createDataFrame(
+                roll_rows, "fk long, n_rows long, sum_qty long"
+            )
+            return _rows(
+                roll.groupBy((F.col("fk") % 3).alias("band3")).agg(
+                    F.count(F.lit(1)).alias("n_fks"),
+                    F.sum("sum_qty").alias("total_qty"),
+                )
+            )
+
+        try:
+            eng.activate_project_incremental(self.RAW_NODES, n_buckets=4)
+            # the only member of group fk=30 dies: the batch's sole
+            # emitted change is a tombstone, which the compaction drops
+            f2 = [(4, 30, 4, 2, True)]
+            _append(spark, eng, "fact", f2, FACT_DDL)
+            eng.activate_project_incremental(self.RAW_NODES, n_buckets=4)
+            res = eng.compact_pipeline_changes("rawroll")
+            assert res["floor"] is not None
+            # (b) the rebuild starts at the compaction floor ...
+            floor = eng.rebuild_pipeline_downstream("rawband", "rawroll")
+            assert floor >= res["floor"]
+            # (a) ... and so does a consumer added after the compaction;
+            # the next activation converges at every stage
+            eng.activate_project_incremental(all_nodes, n_buckets=4)
+            roll_w, band_w = self._want(spark, F1 + f2)
+            assert _rows(eng.read_stream("rawroll")) == roll_w
+            assert _rows(eng.read_stream("rawband")) == band_w
+            assert _rows(eng.read_stream("rawband3")) == want3(roll_w)
+            # and keeps converging: group fk=30 comes back
+            f3 = [(6, 30, 3, 3, False), (1, 10, 2, 3, False)]
+            _append(spark, eng, "fact", f3, FACT_DDL)
+            eng.activate_project_incremental(all_nodes, n_buckets=4)
+            roll_w, band_w = self._want(spark, F1 + f2 + f3)
+            assert _rows(eng.read_stream("rawroll")) == roll_w
+            assert _rows(eng.read_stream("rawband")) == band_w
+            assert _rows(eng.read_stream("rawband3")) == want3(roll_w)
+        finally:
+            eng.cleanup()
+
     def test_lag_guard_and_front_door_rebuild(self, spark, tmp_path):
         """Park the band stage, compact the raw rollup's out log past it →
         DownstreamLagError; then recover through

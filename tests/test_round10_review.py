@@ -157,22 +157,6 @@ class TestEmitFlagPersisted:
         finally:
             eng.cleanup()
 
-    def test_pre_flag_root_is_inferred_and_pinned(self, spark, tmp_path):
-        """A root initialized before the flag existed carries no
-        _emit_changes record — the activation infers it from the out log's
-        presence, persists the answer, and enforces it from then on."""
-        eng = _mk_join(spark, tmp_path, "r10f", F1, D1, with_rollup=True)
-        try:
-            self._activate(eng, emit_changes=True)
-            droot = os.path.join(eng.warehouse_dir, "_ivmd_r10f__rollup")
-            os.remove(os.path.join(droot, "_emit_changes"))  # legacy root
-            with pytest.raises(CatalogError, match="keep emitting"):
-                self._activate(eng)
-            with open(os.path.join(droot, "_emit_changes")) as fh:
-                assert fh.read().strip() == "1"
-        finally:
-            eng.cleanup()
-
     def test_non_emitting_root_still_rejects_late_enable(self, spark, tmp_path):
         eng = _mk_join(spark, tmp_path, "r10g", F1, D1, with_rollup=True)
         try:
@@ -214,53 +198,6 @@ class TestJoinInitMarker:
             assert _rows(eng.read_stream("enriched")) == _join_want(spark, F1, D1)
         finally:
             eng.cleanup()
-
-    def test_committed_pre_marker_root_is_adopted(self, spark, tmp_path):
-        """A pre-marker root whose v0 COMMITTED must be adopted, not
-        re-initialized — its deltas' __seq values outrank a fresh v0, so a
-        re-init would let stale delta images out-fold the recomputed
-        snapshot."""
-        eng = _mk_join(spark, tmp_path, "r10k", F1, D1)
-        try:
-            self._activate(eng)
-            f2 = [(2, 10, 8, 2, False)]  # an update, landing as a delta
-            spark.createDataFrame(f2, FACT_DDL).write.mode("append").parquet(
-                eng.streams["r10k__fact"].path
-            )
-            eng.refresh_stream("fact")
-            self._activate(eng)
-            root = os.path.join(eng.warehouse_dir, "_ivmj_r10k__enriched")
-            os.remove(os.path.join(root, "_init_done"))  # legacy root
-            self._activate(eng)
-            assert os.path.exists(os.path.join(root, "_init_done"))
-            assert _rows(eng.read_stream("enriched")) == _join_want(
-                spark, F1 + f2, D1
-            )
-        finally:
-            eng.cleanup()
-
-    def test_uncommitted_base_with_deltas_raises(self, spark, tmp_path):
-        """Deltas over a headless base (an old-code crash that later
-        activations appended onto) are unrecoverable in place — the
-        activation must say so instead of silently re-initializing under
-        the stranded delta seqs."""
-        eng = _mk_join(spark, tmp_path, "r10l", F1, D1)
-        try:
-            self._activate(eng)
-            f2 = [(4, 10, 1, 2, False)]
-            spark.createDataFrame(f2, FACT_DDL).write.mode("append").parquet(
-                eng.streams["r10l__fact"].path
-            )
-            eng.refresh_stream("fact")
-            self._activate(eng)  # lands a fact delta + a view delta
-            root = os.path.join(eng.warehouse_dir, "_ivmj_r10l__enriched")
-            os.remove(os.path.join(root, "_init_done"))
-            os.remove(os.path.join(root, "view", "_SUCCESS"))
-            with pytest.raises(CatalogError, match="delete the root"):
-                self._activate(eng)
-        finally:
-            eng.cleanup()
-
 
 SRC_DDL = "pk long, grp string, val long, ts long"
 
@@ -325,27 +262,6 @@ class TestAggAdoptionRequiresAllTables:
             assert got == _agg_want(spark, ROWS1 + rows2)
         finally:
             eng.cleanup()
-
-    def test_complete_pre_marker_root_still_adopted(self, spark, tmp_path):
-        """A fully-published pre-marker root keeps its adoption path: no
-        re-init (the generation set is untouched), correct maintenance."""
-        import glob as _glob
-
-        eng = _mk_agg(spark, tmp_path, "r10n", ROWS1)
-        try:
-            eng.activate_pipeline_incremental("agg", order=["ts"])
-            root = os.path.join(eng.warehouse_dir, "_ivm_r10n__agg")
-            gens_before = sorted(_glob.glob(os.path.join(root, "agg", "v=*")))
-            os.remove(os.path.join(root, "_init_done"))
-            eng.activate_pipeline_incremental("agg", order=["ts"])
-            assert os.path.exists(os.path.join(root, "_init_done"))
-            assert sorted(_glob.glob(os.path.join(root, "agg", "v=*"))) == (
-                gens_before
-            ), "adoption must not republish generation 0"
-            assert _rows(eng.read_stream("agg")) == _agg_want(spark, ROWS1)
-        finally:
-            eng.cleanup()
-
 
 class SimulatedCrash(RuntimeError):
     pass

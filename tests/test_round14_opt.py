@@ -6,8 +6,8 @@
    appended log, including the committed-only filter (an uncommitted
    stage dir must not contribute).
 2. The bounded streaming preview runs' state-partition count dropped from
-   8 to 2 (``streaming_q._stream_state_partitions``) — pin the env
-   override and that the layout-sensitive stream-stream OUTER interval
+   8 to 2 (``streaming_q._stream_state_partitions``) — pin the default
+   and that the layout-sensitive stream-stream OUTER interval
    join emits the IDENTICAL row set under both values (Spark's
    swap-on-remove state eviction makes outer-null emission potentially
    layout-dependent; this is the row the caveat lives on).
@@ -173,10 +173,7 @@ class TestStreamStatePartitions:
             _stream_state_partitions,
         )
 
-        monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_PARTS", raising=False)
         assert _stream_state_partitions() == "2"
-        monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTS", "8")
-        assert _stream_state_partitions() == "8"
 
     @pytest.mark.skipif(
         not os.path.isdir(SF_DIR), reason="testdata not present"
@@ -187,12 +184,14 @@ class TestStreamStatePartitions:
         """The caveat row: outer-null emission rides per-partition state
         eviction order, so the partition-count change must be pinned to
         the exact row set, not just counts."""
-        from dbt_decodable_spark.queries import load_all
+        from dbt_decodable_spark.queries import load_all, streaming_q
 
         fn = load_all()["stream_interval_join_outer"].fn
 
         def rowset(parts: str):
-            monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTS", parts)
+            monkeypatch.setattr(
+                streaming_q, "_stream_state_partitions", lambda: parts
+            )
             df = fn(spark, SF_DIR)
             return sorted(
                 (r["id_a"], r["id_b"]) for r in df.collect()
