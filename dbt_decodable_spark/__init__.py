@@ -14,6 +14,8 @@ managed service; this package re-expresses those capabilities Spark-first:
   ``functions``), including ``grok``,
 - streaming semantics — watermarks, change-stream folding, bounded previews
   (``streaming``),
+- the one filesystem commit protocol every durable write goes through
+  (``commit``),
 - LLM-data-pipeline extensions: dedup, similarity search, text analysis,
   multimodal columns (``operators``).
 """

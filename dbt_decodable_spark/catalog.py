@@ -46,6 +46,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from dbt_decodable_spark import commit
 from dbt_decodable_spark.dialect import normalize
 from dbt_decodable_spark.operators import ivm_dag, ivm_join as ij, ivm_log
 from dbt_decodable_spark.operators import ivm_temporal as it
@@ -67,14 +68,6 @@ def _advance_stream_offsets(spark, src_path: str, schema, ckpt: str) -> None:
     replayed, converging by the fold tolerance (the reverse order silently
     dropped gap files: committed as consumed, never folded)."""
     _run_available_now(spark, src_path, schema, ckpt, lambda df, bid: None)
-
-
-def _write_atomic(path: str, content: str) -> None:
-    """tmp-write + rename: markers and tiny metadata records are either
-    fully present or absent, never truncated."""
-    with open(path + ".tmp", "w") as fh:
-        fh.write(content)
-    os.replace(path + ".tmp", path)
 
 
 @dataclass
@@ -469,21 +462,11 @@ class Engine:
             tmp = path + ".__insert_tmp__"
             old = path + ".__insert_old__"
             # crash recovery: a previous run that died between the two renames
-            # below leaves the only copy at `old` — restore it before anything
-            # else (never delete leftovers while `path` is missing).
-            if not os.path.isdir(path) and os.path.isdir(old):
-                os.rename(old, path)
-            for leftover in (tmp, old):
-                if os.path.isdir(leftover):
-                    shutil.rmtree(leftover)
+            # leaves the only copy at `old` — restore it before anything else
+            commit.restore(old, path)
+            shutil.rmtree(tmp, ignore_errors=True)
             result.write.mode("overwrite").parquet(tmp)
-            # swap via rename-aside (never rmtree the live sink before the
-            # replacement is in place): path -> old, tmp -> path, drop old.
-            if os.path.isdir(path):
-                os.rename(path, old)
-            os.rename(tmp, path)
-            if os.path.isdir(old):
-                shutil.rmtree(old)
+            commit.swap_dir(tmp, path, old)
             sdef.path = path
             self.spark.read.parquet(path).createOrReplaceTempView(sdef.name)
         else:
@@ -773,7 +756,7 @@ class Engine:
             if not os.path.exists(os.path.join(nd.root, "_init_done")):
                 self._init_node(nd)
             if "_epoch" in nd.kind.records:
-                _write_atomic(os.path.join(nd.root, "_epoch"), str(nd.epoch))
+                commit.write_atomic(os.path.join(nd.root, "_epoch"), str(nd.epoch))
             w = nd.kind.step(self, nd)
             if w is not None:
                 nd.watermark = watermarks[nd.short] = w
@@ -919,14 +902,15 @@ class Engine:
             return
         root, recs = nd.root, nd.kind.records
         if "_n_buckets" in recs:
-            raw = _read_record(root, "_n_buckets")
             try:
-                persisted = int(raw)
-            except (TypeError, ValueError):
+                persisted = commit.read_int(os.path.join(root, "_n_buckets"))
+            except ValueError:
+                persisted = 0
+            if persisted < 1:
                 raise CatalogError(
-                    f"corrupt _n_buckets record {raw!r} in {root!r} — "
+                    f"corrupt _n_buckets record in {root!r} — "
                     "delete the root to re-initialize"
-                ) from None
+                )
             if persisted != nd.n_buckets:
                 raise CatalogError(
                     f"n_buckets={nd.n_buckets} does not match the bucket "
@@ -937,7 +921,7 @@ class Engine:
                     "re-initialize"
                 )
         if "_emit_changes" in recs:
-            persisted_emit = _read_record(root, "_emit_changes") == "1"
+            persisted_emit = _emit_flag(root)
             if nd.emit and not persisted_emit:
                 raise CatalogError(
                     "change emission must be enabled from the FIRST "
@@ -953,7 +937,7 @@ class Engine:
                     "without emission"
                 )
         if "_epoch" in recs:
-            nd.epoch = int(_read_record(root, "_epoch") or 0) + 1
+            nd.epoch = commit.read_int(os.path.join(root, "_epoch")) + 1
 
     def _init_node(self, nd: _Node) -> int | None:
         """Clear-then-init: every write lands in a cleared root and the
@@ -963,13 +947,13 @@ class Engine:
         shutil.rmtree(nd.root, ignore_errors=True)
         os.makedirs(nd.root, exist_ok=True)
         if "_n_buckets" in nd.kind.records:
-            _write_atomic(os.path.join(nd.root, "_n_buckets"), str(nd.n_buckets))
+            commit.write_atomic(os.path.join(nd.root, "_n_buckets"), str(nd.n_buckets))
         floor = nd.kind.init(self, nd)
         if "_emit_changes" in nd.kind.records:
-            _write_atomic(
+            commit.write_atomic(
                 os.path.join(nd.root, "_emit_changes"), "1" if nd.emit else "0"
             )
-        _write_atomic(os.path.join(nd.root, "_init_done"), "1")
+        commit.write_atomic(os.path.join(nd.root, "_init_done"), "1")
         return floor
 
     def _compact_node(self, nd: _Node, min_deltas: int) -> None:
@@ -983,7 +967,7 @@ class Engine:
                 upto = min(c.watermark for c in nd.consumers)
                 try:
                     cl.compact_change_log(self.spark, nd.log, nd.keys, upto_seq=upto)
-                except cl.CompactionLockHeld:
+                except commit.LockHeld:
                     pass  # another process compacting; next pass
             return
         for log, keys, order in nd.kind.logs(nd):
@@ -1048,7 +1032,7 @@ class Engine:
         if not deltas:
             # distinguish "emission never enabled" from "log exists but
             # every retained delta was compacted away"
-            if _read_record(droot, "_emit_changes") == "1":
+            if _emit_flag(droot):
                 from pyspark.sql.types import (
                     BooleanType, LongType, StructField, StructType,
                 )
@@ -1095,7 +1079,7 @@ class Engine:
             shape="agg", spec=agg_spec, srcs=(src_tbl,), root=root,
             kind=_KINDS["_ivmd_"], log=os.path.join(root, "out"),
             keys=list(agg_spec.group_cols),
-            emit=_read_record(root, "_emit_changes") == "1",
+            emit=_emit_flag(root),
             up=_Node(p=p_up, short=upstream, opts={}, shape="", spec=None,
                      srcs=(), log=up_log, keys=up_keys),
         )
@@ -1508,12 +1492,8 @@ def _root_prefix(root: str) -> str:
     return "_%s_" % os.path.basename(root).split("_")[1]
 
 
-def _read_record(root: str, name: str) -> str | None:
-    path = os.path.join(root, name)
-    if not os.path.exists(path):
-        return None
-    with open(path) as fh:
-        return fh.read().strip()
+def _emit_flag(root: str) -> bool:
+    return commit.read_int(os.path.join(root, "_emit_changes")) == 1
 
 
 def _run_available_now(spark, src_path: str, schema, ckpt: str, handle) -> None:

@@ -63,6 +63,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from dbt_decodable_spark import commit
 from dbt_decodable_spark.operators.ivm import AggViewSpec
 from dbt_decodable_spark.operators.ivm_log import (
     _agg_root,
@@ -74,9 +75,9 @@ from dbt_decodable_spark.operators.ivm_log import (
 )
 from dbt_decodable_spark.operators.versions import list_versions
 from dbt_decodable_spark.streaming.changelog import (
-    CompactionLockHeld,
     fold_last_image,
     list_deltas,
+    log_compaction_floor,
 )
 
 SEQ = "__seq"
@@ -106,11 +107,10 @@ def _delta_tag(path: str) -> int | None:
 def _write_floor(root: str, floor: int) -> None:
     """Atomically advance the root's floor record (never backwards).
 
-    The read/compare/replace runs under a short mkdir mutex (the same
-    put-if-absent primitive the compaction lock uses, at the root itself):
+    The read/compare/replace runs under a short lock at the root itself:
     without it, two concurrent writers — e.g. a maintenance step racing a
     rebuild — can both read the same current floor and the SMALLER value
-    can ``os.replace`` last, regressing the floor despite the documented
+    can land last, regressing the floor despite the documented
     monotonicity contract; a regressed floor makes
     :func:`downstream_watermark` under-report and the same seqs
     re-process (ADVICE r10). The lock is held for one stat+read+rename —
@@ -118,23 +118,12 @@ def _write_floor(root: str, floor: int) -> None:
     60 s and is broken by the lock's own protocol."""
     import time
 
-    from dbt_decodable_spark.streaming.changelog import _compaction_lock
-
-    ffile = os.path.join(root, _FLOOR_FILE)
     while True:
         try:
-            with _compaction_lock(root, stale_lock_seconds=60.0):
-                cur = 0
-                if os.path.exists(ffile):
-                    with open(ffile) as fh:
-                        cur = int(fh.read().strip() or 0)
-                if floor <= cur:
-                    return
-                with open(ffile + ".tmp", "w") as fh:
-                    fh.write(str(floor))
-                os.replace(ffile + ".tmp", ffile)
+            with commit.lock(root, stale_seconds=60.0):
+                commit.advance_int(os.path.join(root, _FLOOR_FILE), floor)
                 return
-        except CompactionLockHeld:
+        except commit.LockHeld:
             time.sleep(0.02)
 
 
@@ -142,13 +131,8 @@ def downstream_watermark(root: str) -> int:
     """Highest view ``__seq`` folded into the downstream state: the max of
     the init floor, the committed downstream delta tags, and the latest
     generation's ``max_tag``. Purely filesystem metadata — no data read."""
-    floor = 0
-    ffile = os.path.join(root, _FLOOR_FILE)
-    if os.path.exists(ffile):
-        with open(ffile) as fh:
-            floor = int(fh.read().strip() or 0)
     agg_root = _agg_root(root)
-    cands = [floor]
+    cands = [commit.read_int(os.path.join(root, _FLOOR_FILE))]
     if list_versions(agg_root):
         _, meta = _latest_gen(agg_root)
         if meta.get("max_tag") is not None:
@@ -161,32 +145,6 @@ def downstream_watermark(root: str) -> int:
         if t is not None:
             cands.append(t)
     return max(cands)
-
-
-def _log_compaction_floor(view_log: str) -> int:
-    """Highest Kafka-style compaction floor committed to a PURE-DELTA
-    change log: ``changelog.compact_change_log`` tags its floor-image
-    delta ``compacted-<floor>-<uuid>``, so the floor is recoverable from
-    the retained dir names alone — no data read. 0 when never compacted.
-
-    This is the deltas-only twin of the base ``max(__seq)`` probe: a
-    consumer whose watermark sits BELOW the floor has lost the tombstones
-    the fold dropped (the documented ``compact_change_log`` consumer
-    contract) and must rebuild."""
-    import re
-
-    from dbt_decodable_spark.streaming.changelog import log_compaction_floor
-
-    # the durable record first (compact_change_log writes it under the
-    # compaction lock — survives the marker delta being folded away or
-    # holding zero live rows, ADVICE r11), max-ed with the dir-name scan
-    # for logs compacted before the record existed
-    floor = log_compaction_floor(view_log)
-    for p in list_deltas(view_log):
-        m = re.search(r"compacted-(\d+)-", os.path.basename(p))
-        if m:
-            floor = max(floor, int(m.group(1)))
-    return floor
 
 
 def _base_max_seq(view_log: str) -> int | None:
@@ -375,7 +333,7 @@ def init_view(
         floor = int(floor_row["m"]) if floor_row["m"] is not None else 0
     else:
         floor = max((int(v) for v in (fmax, bmax) if v is not None), default=0)
-    return snap, max(floor, _log_compaction_floor(view_log))
+    return snap, max(floor, log_compaction_floor(view_log))
 
 
 def init_downstream(
@@ -540,7 +498,7 @@ def pending_changes(
     else:
         # the durable floor record survives zero retained deltas, so the
         # guard runs before the empty-log no-op below
-        log_floor = _log_compaction_floor(view_log)
+        log_floor = log_compaction_floor(view_log)
         if log_floor > w:
             raise DownstreamLagError(
                 f"change log {view_log!r} was compacted to floor "
@@ -635,7 +593,7 @@ def maintain_downstream(
     ):
         try:
             ivm_log_compact(spark, root, spec)
-        except CompactionLockHeld:
+        except commit.LockHeld:
             # another process is compacting (or a crashed one's lock is
             # not yet stale): skip the cycle, never stall the step — the
             # state append above already landed

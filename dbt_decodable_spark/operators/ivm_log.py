@@ -70,11 +70,11 @@ import json
 import os
 import shutil
 import time
-import uuid
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from dbt_decodable_spark import commit
 from dbt_decodable_spark.operators.ivm import (
     GKEY,
     SKEY,
@@ -87,15 +87,11 @@ from dbt_decodable_spark.operators.ivm import (
     init_state,
 )
 from dbt_decodable_spark.operators.versions import (
+    _publish,
     _vdir,
     list_versions,
-    require_success_marker,
 )
-from dbt_decodable_spark.streaming.changelog import (
-    _compaction_lock,
-    append_delta,
-    list_deltas,
-)
+from dbt_decodable_spark.streaming.changelog import append_delta, list_deltas
 
 META_NAME = "_ivm_meta.json"
 BUCKET = "__gbucket"
@@ -149,46 +145,22 @@ def _delta_seq(path: str) -> int:
 # ------------------------------------------------- generation commit/read
 
 
-def _publish_gen(
-    df: DataFrame, table_root: str, meta: dict, stale_stage_seconds: float = 3600.0
-) -> int:
-    """Stage-then-rename generation commit (the ``versions.publish_version``
-    protocol) with two IVM extras: the data is directory-partitioned by
-    ``__gbucket`` (append-time slice pruning) and ``_ivm_meta.json`` is
-    written INTO the stage so meta commits atomically with the data."""
-    import errno
-
+def _publish_gen(df: DataFrame, table_root: str, meta: dict) -> int:
+    """Generation commit (the ``versions.publish_version`` protocol) with
+    two IVM extras: the data is directory-partitioned by ``__gbucket``
+    (append-time slice pruning) and ``_ivm_meta.json`` is written INTO the
+    stage so meta commits atomically with the data."""
     table_root = table_root.rstrip("/")
-    os.makedirs(table_root, exist_ok=True)
-    now = time.time()
-    for d in os.listdir(table_root):
-        p = os.path.join(table_root, d)
-        if d.startswith("v=") and not os.path.exists(os.path.join(p, "_SUCCESS")):
-            shutil.rmtree(p, ignore_errors=True)
-        elif d.startswith("stage-"):
-            try:
-                if now - os.path.getmtime(p) > stale_stage_seconds:
-                    shutil.rmtree(p, ignore_errors=True)
-            except OSError:
-                pass
-    stage = os.path.join(table_root, f"stage-{uuid.uuid4().hex}")
-    df.repartition(BUCKET).write.partitionBy(BUCKET).parquet(stage)
-    require_success_marker(stage)
-    # a zero-row partitioned write leaves no part files and hence no
-    # parquet schema (the empty-view init case) — persist the schema in
-    # the meta document so readers can materialize the empty table
-    with open(os.path.join(stage, META_NAME), "w") as fh:
-        json.dump({**meta, "schema": df.schema.json()}, fh)
-    while True:
-        versions = list_versions(table_root)
-        n = (versions[-1] + 1) if versions else 0
-        try:
-            os.rename(stage, _vdir(table_root, n))
-            return n
-        except OSError as e:
-            if e.errno not in (errno.EEXIST, errno.ENOTEMPTY):
-                shutil.rmtree(stage, ignore_errors=True)
-                raise
+
+    def write(stage: str) -> None:
+        df.repartition(BUCKET).write.partitionBy(BUCKET).parquet(stage)
+        # a zero-row partitioned write leaves no part files and hence no
+        # parquet schema (the empty-view init case) — persist the schema in
+        # the meta document so readers can materialize the empty table
+        with open(os.path.join(stage, META_NAME), "w") as fh:
+            json.dump({**meta, "schema": df.schema.json()}, fh)
+
+    return _publish(table_root, write)
 
 
 def _latest_gen(table_root: str) -> tuple[str, dict]:
@@ -882,7 +854,6 @@ def maintain_view_batch(
     """The ``foreachBatch`` handler behind :func:`stream_maintain_view`,
     for callers that run the bounded stream themselves."""
     from dbt_decodable_spark.streaming.changelog import (
-        CompactionLockHeld,
         compact_and_vacuum,
         read_merged,
     )
@@ -919,7 +890,7 @@ def maintain_view_batch(
                     sp, root, spec,
                     vacuum_horizon_seconds=vacuum_horizon_seconds,
                 )
-            except CompactionLockHeld:
+            except commit.LockHeld:
                 pass
         if len(list_deltas(snapshot_path)) >= compact_every:
             try:
@@ -928,7 +899,7 @@ def maintain_view_batch(
                     n_buckets=snapshot_n_buckets,
                     partition_expr=snapshot_partition_expr,
                 )
-            except CompactionLockHeld:
+            except commit.LockHeld:
                 pass
 
     return _handle
@@ -944,7 +915,7 @@ def ivm_log_compact(
     """Fold each state table's pending deltas into a new generation, then
     reclaim folded deltas and old generations past the retention horizon.
     The one amortized O(|state|) step; appends stay O(|batch|). Takes the
-    view's compaction lock (raises ``CompactionLockHeld`` if another
+    view's compaction lock (raises ``commit.LockHeld`` if another
     process is compacting — callers skip the cycle, never stall a batch).
 
     Crash-safety by ordering: the new generation (data + watermark meta)
@@ -957,7 +928,7 @@ def ivm_log_compact(
         (_sup_root(root, c), SKEY, ["__cnt"], []) for c in spec.support_cols()
     ]
     out: dict = {"tables": {}, "vacuumed": []}
-    with _compaction_lock(agg_root + ".__deltas__"):
+    with commit.lock(agg_root + ".__deltas__"):
         for table_root, key, counters, exts in tables:
             _, tmeta = _latest_gen(table_root)
             pend = _pending(table_root, tmeta["watermark"])

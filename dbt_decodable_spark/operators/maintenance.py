@@ -21,6 +21,8 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from dbt_decodable_spark import commit
+
 
 def write_compacted(
     df: DataFrame,
@@ -70,17 +72,15 @@ def compact_path(
     while any job still needs them (executor loss or block eviction can
     discard checkpoint blocks, which would have destroyed data in the
     old overwrite-in-place form)."""
-    tmp = path.rstrip("/") + ".__compact_tmp__"
-    old = path.rstrip("/") + ".__compact_old__"
+    path = path.rstrip("/")
+    tmp = path + ".__compact_tmp__"
+    old = path + ".__compact_old__"
     # crash recovery FIRST: if a prior run died between the two renames,
     # `path` is gone and `old` holds the only full copy — restore it before
     # any cleanup (a blind rmtree of the leftovers here would destroy every
     # surviving copy of the table)
-    if not os.path.exists(path.rstrip("/")) and os.path.exists(old):
-        os.rename(old, path.rstrip("/"))
-    for leftover in (tmp, old):
-        if os.path.exists(leftover):
-            shutil.rmtree(leftover)
+    commit.restore(old, path)
+    shutil.rmtree(tmp, ignore_errors=True)
     # a zone map (operators/zonemap.py) lives INSIDE the directory being
     # swapped out — without this it would vanish silently with the old
     # layout. Capture its tracked columns now and rebuild it after the
@@ -92,7 +92,7 @@ def compact_path(
     from dbt_decodable_spark.operators.zonemap import MANIFEST_NAME
 
     stats_cols: list | None = None
-    mpath = os.path.join(path.rstrip("/"), MANIFEST_NAME)
+    mpath = os.path.join(path, MANIFEST_NAME)
     if os.path.exists(mpath):
         try:
             with open(mpath) as fh:
@@ -109,13 +109,11 @@ def compact_path(
             f"compaction row count changed ({n_before} -> {n_after}); "
             f"aborted, original untouched at {path}"
         )
-    os.rename(path.rstrip("/"), old)
-    os.rename(tmp, path.rstrip("/"))
-    shutil.rmtree(old)
+    commit.swap_dir(tmp, path, old)
     if stats_cols is not None and fmt == "parquet":
         from dbt_decodable_spark.operators.zonemap import write_zonemap
 
-        write_zonemap(spark, path.rstrip("/"), stats_cols)
+        write_zonemap(spark, path, stats_cols)
 
 
 def expire_partitions(
@@ -218,14 +216,15 @@ def delete_rows_partitioned(
     # its surviving rows. Restore any such orphan BEFORE the locate scan
     # (so its rows are visible again) and BEFORE any stage cleanup (which
     # would otherwise destroy the copy — silent loss on a purge path).
-    _stage = base + ".__del_stage__"
-    if os.path.isdir(_stage):
-        for _entry in os.listdir(_stage):
-            if _entry.endswith(".old"):
-                _dst = os.path.join(base, _entry.removesuffix(".old"))
-                if not os.path.exists(_dst):
-                    os.rename(os.path.join(_stage, _entry), _dst)
-        shutil.rmtree(_stage, ignore_errors=True)
+    stage = base + ".__del_stage__"
+    if os.path.isdir(stage):
+        for entry in os.listdir(stage):
+            if entry.endswith(".old"):
+                commit.restore(
+                    os.path.join(stage, entry),
+                    os.path.join(base, entry.removesuffix(".old")),
+                )
+        shutil.rmtree(stage, ignore_errors=True)
     # dedupe by the CANONICAL STRING form (what the doomed frame is built
     # from): a repeated id — including 4 vs "4", or a mixed-type list that
     # plain sorted(set(...)) would crash on — must count once
@@ -275,7 +274,6 @@ def delete_rows_partitioned(
     )
     # staging lives in a SIBLING of the table root — never inside it, where
     # partition discovery would surface half-swapped data as extra partitions
-    stage = base + ".__del_stage__"
     deleted: dict = {}
     rewritten: list[str] = []
     for row in located:
@@ -297,10 +295,6 @@ def delete_rows_partitioned(
         kept = part.join(F.broadcast(doomed), on=[id_col], how="left_anti")
         os.makedirs(stage, exist_ok=True)
         tmp = os.path.join(stage, pname + ".tmp")
-        old = os.path.join(stage, pname + ".old")
-        for leftover in (tmp, old):
-            if os.path.exists(leftover):
-                shutil.rmtree(leftover)
         kept.write.mode("overwrite").format(fmt).save(tmp)
         n_after = spark.read.format(fmt).load(tmp).count()
         if n_after != n_before - n_doomed:
@@ -309,9 +303,7 @@ def delete_rows_partitioned(
                 f"partition {pval}: expected {n_before - n_doomed} rows "
                 f"after delete, wrote {n_after}; aborted, original untouched"
             )
-        os.rename(pdir, old)
-        os.rename(tmp, pdir)
-        shutil.rmtree(old)
+        commit.swap_dir(tmp, pdir, os.path.join(stage, pname + ".old"))
         deleted[pval] = n_doomed
         rewritten.append(pdir)
     # stage dir removed last — a crash mid-loop leaves any half-swapped

@@ -16,9 +16,9 @@ Design — the same filesystem commit contract the delta log and the CDC
 snapshot use, applied to whole generations:
 
 - each publish lands in ``<root>/v=<N>`` (N = max committed + 1, no
-  clock); the COMMIT is Spark's own ``_SUCCESS`` marker, so a crashed
-  publish leaves an invisible partial that the next publish sweeps and
-  numbers past;
+  clock); the COMMIT is the rename of a ``_SUCCESS``-marked private
+  stage (``dbt_decodable_spark/commit.py``), so a crashed publish leaves
+  only debris that the next publish sweeps;
 - readers resolve ``latest`` (or an explicit N) against committed
   generations only, so publication is atomic from their point of view:
   until ``_SUCCESS`` exists the new generation does not exist;
@@ -46,42 +46,27 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
+from dbt_decodable_spark import commit
+
 
 def _vdir(root: str, n: int) -> str:
     return os.path.join(root.rstrip("/"), f"v={n:08d}")
 
 
-def require_success_marker(stage: str) -> None:
-    """Every commit protocol in this layer treats ``_SUCCESS`` as the
-    proof of commit: uncommitted ``v=``/``delta-`` dirs are swept as
-    crash debris and invisible to readers. On a cluster that disables
-    Spark's markers (``mapreduce.fileoutputcommitter.marksuccessfuljobs``
-    false — a common production setting) every commit would be both
-    unreadable and destroyed by the next writer's sweep; fail LOUDLY at
-    the first stage write instead."""
-    if not os.path.exists(os.path.join(stage, "_SUCCESS")):
-        shutil.rmtree(stage, ignore_errors=True)
-        raise RuntimeError(
-            "stage write produced no _SUCCESS marker — this table's commit "
-            "protocol requires Spark's success markers (set "
-            "mapreduce.fileoutputcommitter.marksuccessfuljobs=true); "
-            "without them committed data would be invisible to readers "
-            "and swept as crash debris by the next writer"
-        )
-
-
 def list_versions(root: str) -> list[int]:
     """Committed (``_SUCCESS``-marked) generation numbers, ascending."""
-    root = root.rstrip("/")
-    if not os.path.isdir(root):
-        return []
-    out = []
-    for d in os.listdir(root):
-        if d.startswith("v=") and os.path.exists(
-            os.path.join(root, d, "_SUCCESS")
-        ):
-            out.append(int(d.split("=")[1]))
-    return sorted(out)
+    return sorted(int(d[2:]) for d in commit.committed(root.rstrip("/"), "v="))
+
+
+def _publish(root: str, write) -> int:
+    """Commit ``write(stage)`` as the next ``v=<N>`` generation of
+    ``root`` (:func:`dbt_decodable_spark.commit.publish_dir`); returns N."""
+
+    def next_name() -> str:
+        versions = list_versions(root)
+        return f"v={(versions[-1] + 1 if versions else 0):08d}"
+
+    return int(os.path.basename(commit.publish_dir(root, write, next_name))[2:])
 
 
 def publish_version(
@@ -91,22 +76,16 @@ def publish_version(
     cluster_by: list | None = None,
     stats_cols: list | None = None,
     n_files: int | None = None,
-    stale_stage_seconds: float = 3600.0,
 ) -> int:
     """Write ``df`` as the next committed generation of ``root`` and
-    return its number. Safe under CONCURRENT publishers since late r9 —
-    the same stage-then-atomic-rename commit the delta log uses: the
-    generation is written to a private ``stage-<uuid>`` dir, then
-    ``os.rename``d to ``v=<N>`` (put-if-absent — POSIX rename onto a
-    non-empty directory fails). A publisher that loses its slot re-lists
-    and claims the next one, so two uncoordinated publishers serialize
-    into consecutive generations with commit order deciding which is
-    "latest" — exactly the semantics wholesale republication wants.
-    Crashed publishers leave only invisible stages, reaped past
-    ``stale_stage_seconds`` so a live concurrent stage is never at risk;
-    legacy ``v=`` dirs without ``_SUCCESS`` (pre-rename-era crashes —
-    impossible to create now, the rename happens after Spark finishes)
-    are swept immediately.
+    return its number. Safe under CONCURRENT publishers: the generation
+    is staged privately, then claimed as ``v=<N>`` by rename
+    (:func:`dbt_decodable_spark.commit.publish_dir`, the delta log's
+    commit). A publisher that loses its slot re-lists and claims the next
+    one, so two uncoordinated publishers serialize into consecutive
+    generations with commit order deciding which is "latest" — exactly
+    the semantics wholesale republication wants. Crashed publishers leave
+    only debris the next publish sweeps.
 
     The layout layers compose here: ``cluster_by`` range-sorts the
     generation across ``n_files`` files and ``stats_cols`` attaches a
@@ -115,54 +94,26 @@ def publish_version(
     so every generation is independently clustered and file-skippable
     (``read_pruned(spark, _vdir(root, n), …)``), and vacuuming a
     generation removes its map with it. Parquet-only options."""
-    import errno
-    import time
-    import uuid
-
     root = root.rstrip("/")
-    os.makedirs(root, exist_ok=True)
     if (cluster_by or stats_cols) and fmt != "parquet":
         raise ValueError("cluster_by/stats_cols require parquet")
-    now = time.time()
-    for d in os.listdir(root):
-        p = os.path.join(root, d)
-        if d.startswith("v=") and not os.path.exists(
-            os.path.join(p, "_SUCCESS")
-        ):
-            shutil.rmtree(p, ignore_errors=True)
-        elif d.startswith("stage-"):
-            try:
-                if now - os.path.getmtime(p) > stale_stage_seconds:
-                    shutil.rmtree(p, ignore_errors=True)
-            except OSError:
-                pass  # racing its owner's commit-rename: leave it
-    stage = os.path.join(root, f"stage-{uuid.uuid4().hex}")
-    if stats_cols:
-        from dbt_decodable_spark.operators.zonemap import write_with_zonemap
 
-        write_with_zonemap(
-            df, stage, stats_cols, cluster_by=cluster_by, n_files=n_files,
+    def write(stage: str) -> None:
+        from dbt_decodable_spark.operators.zonemap import (
+            clustered,
+            write_with_zonemap,
         )
-    else:
-        out = df
-        if cluster_by:
-            from dbt_decodable_spark.operators.zonemap import clustered
 
-            out = clustered(df, cluster_by, n_files)
-        out.write.format(fmt).save(stage)
-    require_success_marker(stage)
-    while True:
-        versions = list_versions(root)
-        n = (versions[-1] + 1) if versions else 0
-        try:
-            os.rename(stage, _vdir(root, n))
-            return n
-        except OSError as e:
-            if e.errno not in (errno.EEXIST, errno.ENOTEMPTY):
-                shutil.rmtree(stage, ignore_errors=True)
-                raise
-            # another publisher claimed v=<n> between our listing and the
-            # rename — re-list and take the next slot
+        if stats_cols:
+            write_with_zonemap(
+                df, stage, stats_cols, cluster_by=cluster_by, n_files=n_files,
+            )
+        elif cluster_by:
+            clustered(df, cluster_by, n_files).write.format(fmt).save(stage)
+        else:
+            df.write.format(fmt).save(stage)
+
+    return _publish(root, write)
 
 
 def read_version(
@@ -241,19 +192,13 @@ def diff_versions(
     return j.select(*keys, status.alias("status"), "old", "new")
 
 
-def vacuum_versions(
-    root: str, keep_last: int = 2, stale_stage_seconds: float = 3600.0
-) -> list[int]:
+def vacuum_versions(root: str, keep_last: int = 2) -> list[int]:
     """Delete committed generations beyond the newest ``keep_last``
     (which must be ≥ 1 — the latest generation is never deleted), plus
-    any uncommitted leftovers: legacy ``v=`` dirs without ``_SUCCESS``
-    immediately, crashed publishers' ``stage-*`` dirs only past
-    ``stale_stage_seconds`` (a live concurrent publisher's stage is
-    never at risk). Returns the deleted generation numbers. Crash
-    mid-vacuum is benign: deletion is idempotent and ordering is
-    oldest-first, so the retained window is never violated."""
-    import time
-
+    the crash debris :func:`dbt_decodable_spark.commit.sweep` reaps.
+    Returns the deleted generation numbers. Crash mid-vacuum is benign:
+    deletion is idempotent and ordering is oldest-first, so the retained
+    window is never violated."""
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
     root = root.rstrip("/")
@@ -262,17 +207,5 @@ def vacuum_versions(
     for n in doomed:
         shutil.rmtree(_vdir(root, n), ignore_errors=True)
     if os.path.isdir(root):
-        now = time.time()
-        for d in os.listdir(root):
-            p = os.path.join(root, d)
-            if d.startswith("v=") and not os.path.exists(
-                os.path.join(p, "_SUCCESS")
-            ):
-                shutil.rmtree(p, ignore_errors=True)
-            elif d.startswith("stage-"):
-                try:
-                    if now - os.path.getmtime(p) > stale_stage_seconds:
-                        shutil.rmtree(p, ignore_errors=True)
-                except OSError:
-                    pass  # racing its owner's commit-rename: leave it
+        commit.sweep(root)
     return doomed

@@ -23,7 +23,7 @@ Design (Spark-first):
   has drifted (compaction, merge, manual edits) the reader detects the
   mismatch and falls back to the full listing instead of silently missing
   rows.
-- **Crash-safe manifest write**: temp file + ``os.replace`` — a reader never
+- **Crash-safe manifest write**: ``commit.write_atomic`` — a reader never
   sees a half-written manifest; a crash mid-write leaves the old manifest
   (stale → inventory mismatch → full-scan fallback).
 - **NULL semantics**: min/max are computed over non-NULL values (Spark
@@ -71,12 +71,13 @@ import math as _math
 import json
 import os
 import re as _re
-import tempfile
 from typing import Any, Sequence
 from urllib.parse import unquote as _unquote, urlparse as _urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from dbt_decodable_spark import commit
 
 MANIFEST_NAME = "_zonemap.json"
 
@@ -230,8 +231,7 @@ def _stats_pass(
             # (name, size) identity alone cannot see a rewrite that
             # happens to preserve the byte count, and stale min/max would
             # then prune wrongly — the one failure the advisory layer
-            # must never have. Legacy entries without it fall back to
-            # size-only identity.
+            # must never have. None (unreadable) means re-stat next time.
             "mtime": mtime,
             "cols": {},
         }
@@ -276,17 +276,9 @@ def clustered(
 
 
 def _write_manifest(path: str, manifest: dict) -> None:
-    """Atomic manifest persist: temp file + ``os.replace`` — a reader never
-    observes a torn manifest; a crash leaves the previous one (stale →
-    inventory mismatch → full-scan fallback)."""
-    fd, tmp = tempfile.mkstemp(dir=path, prefix="._zonemap_", suffix=".tmp")
-    try:
-        with os.fdopen(fd, "w") as fh:
-            json.dump(manifest, fh)
-        os.replace(tmp, os.path.join(path, MANIFEST_NAME))
-    finally:
-        if os.path.exists(tmp):
-            os.unlink(tmp)
+    """A reader never observes a torn manifest; a crash leaves the
+    previous one (stale → inventory mismatch → full-scan fallback)."""
+    commit.write_atomic(os.path.join(path, MANIFEST_NAME), json.dumps(manifest))
 
 
 def write_zonemap(
@@ -358,13 +350,13 @@ def refresh_zonemap_appended(spark: SparkSession, path: str) -> dict | None:
     sink's manifest maintenance (e.g. call it from ``foreachBatch`` after
     the batch's ``mode("append")`` write, or on a periodic trigger).
 
-    Appends never rewrite existing bytes, so entries whose (name, size)
-    still match the old inventory carry over and only the manifest-unseen
-    files are statted — O(|appended|) per call, one bounded pass. A file
-    whose SIZE changed for the same name (not an append — someone rewrote
-    in place) is re-statted too, so the refresh is also a general
-    catch-up. Returns the new manifest, or ``None`` when there is no
-    manifest to maintain (write one with :func:`write_zonemap` first).
+    Appends never rewrite existing bytes, so entries whose (name, size,
+    mtime) still match carry over and only the manifest-unseen files are
+    statted — O(|appended|) per call, one bounded pass. A file rewritten
+    in place (size or mtime changed, or no mtime recorded) is re-statted
+    too, so the refresh is also a general catch-up. Returns the new
+    manifest, or ``None`` when there is no manifest to maintain (write one
+    with :func:`write_zonemap` first).
     """
     path = path.rstrip("/")
     mpath = os.path.join(path, MANIFEST_NAME)
@@ -378,22 +370,15 @@ def refresh_zonemap_appended(spark: SparkSession, path: str) -> dict | None:
     disk = _list_data_files(path)
 
     def _same(n: str, s: int) -> bool:
-        if (n, s) not in old_inv:
-            return False
+        # size alone cannot see a same-size in-place rewrite, so the mtime
+        # must match too; an entry whose mtime could not be read is re-statted
         e = old_entries.get(n)
-        if e is None:
+        if (n, s) not in old_inv or e is None or e.get("mtime") is None:
             return False
-        if e.get("mtime") is not None:
-            # size alone cannot see a same-size in-place rewrite; when
-            # the entry recorded an mtime, require it to match too
-            try:
-                return (
-                    abs(os.path.getmtime(os.path.join(path, n)) - e["mtime"])
-                    < 1e-6
-                )
-            except OSError:
-                return False
-        return True  # legacy entry: size-only identity (old behavior)
+        try:
+            return abs(os.path.getmtime(os.path.join(path, n)) - e["mtime"]) < 1e-6
+        except OSError:
+            return False
 
     unchanged = {n for n, s in disk if _same(n, s)}
     kept = [e for e in manifest["files"] if e["file"] in unchanged]

@@ -950,7 +950,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     "per-merge shuffle cost is O(|batch|), not O(|state|+|batch|); each "
     "generation is written as a new bucketed table version and older "
     "versions dropped — crash-safe because an interrupted write leaves no "
-    "_SUCCESS marker and is swept on the next merge, and a replayed batch "
+    "success marker and is swept on the next merge, and a replayed batch "
     "re-folds idempotently.",
 )
 def stream_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -959,6 +959,7 @@ def stream_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     import uuid
 
+    from dbt_decodable_spark import commit
     from dbt_decodable_spark.operators.bucketing import materialize_bucketed
     from dbt_decodable_spark.streaming.changelog import merge_changes_keyed
 
@@ -984,16 +985,11 @@ def stream_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def _valid_versions(sp) -> list[int]:
-        """Snapshot generations with a completed write (_SUCCESS present);
-        anything else is a crashed write, swept by the caller."""
-        out = []
-        for d in os.listdir(state_root):
-            if d.startswith("snap_v"):
-                if os.path.exists(os.path.join(state_root, d, "_SUCCESS")):
-                    out.append(int(d.removeprefix("snap_v")))
-                else:
-                    shutil.rmtree(os.path.join(state_root, d))
-        return sorted(out)
+        """Snapshot generations with a completed write; a crashed write
+        (no success marker) is swept here."""
+        commit.sweep(state_root, ("snap_v",))
+        names = commit.committed(state_root, "snap_v")
+        return sorted(int(d.removeprefix("snap_v")) for d in names)
 
     def _table(sp, version: int):
         """Read generation ``version`` AS A BUCKETED TABLE — re-registering

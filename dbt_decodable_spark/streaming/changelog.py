@@ -17,11 +17,13 @@ Spark-first mapping:
 
 from __future__ import annotations
 
+import os
+import shutil
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
-from dbt_decodable_spark.operators.versions import require_success_marker
+from dbt_decodable_spark import commit
 
 
 def fold_last_image(
@@ -389,9 +391,6 @@ def merge_into_hash_partitioned(
     (``handler.py:89-94``, ``schema.py:109-111``) — this is the
     storage-layout-aware execution for high-frequency merges.
     """
-    import os
-    import shutil
-
     base = path.rstrip("/")
     stage = base + ".__merge_stage__"
     # crash recovery FIRST (review r9 — same lesson as compact_path r8): a
@@ -403,9 +402,10 @@ def merge_into_hash_partitioned(
     if os.path.isdir(stage):
         for entry in os.listdir(stage):
             if entry.endswith(".old"):
-                dst = os.path.join(base, entry.removesuffix(".old"))
-                if not os.path.exists(dst):
-                    os.rename(os.path.join(stage, entry), dst)
+                commit.restore(
+                    os.path.join(stage, entry),
+                    os.path.join(base, entry.removesuffix(".old")),
+                )
     shutil.rmtree(stage, ignore_errors=True)
 
     _reject_bucket_column(changes, "changes")
@@ -473,16 +473,11 @@ def merge_into_hash_partitioned(
     out: dict = {}
     for b in touched:
         pname = f"__bucket={b}"
-        src = os.path.join(stage, pname)
-        dst = os.path.join(base, pname)
-        old = os.path.join(stage, pname + ".old")
         # a batch can create a bucket that had no rows before (no dst dir)
-        if os.path.exists(dst):
-            os.rename(dst, old)
-            os.rename(src, dst)
-            shutil.rmtree(old)
-        else:
-            os.rename(src, dst)
+        commit.swap_dir(
+            os.path.join(stage, pname), os.path.join(base, pname),
+            os.path.join(stage, pname + ".old"),
+        )
         out[b] = want.get(b, 0)
     shutil.rmtree(stage, ignore_errors=True)
     # keep the optional zone map transactionally fresh: if the snapshot
@@ -620,19 +615,8 @@ def _deltas_root(base_path: str) -> str:
 
 def _committed_deltas(root: str) -> tuple[list[int], set[str]]:
     """(committed sequence numbers, committed tags) under ``root``."""
-    import os
-
-    seqs: list[int] = []
-    tags: set[str] = set()
-    for d in os.listdir(root):
-        if d.startswith("delta-") and os.path.exists(
-            os.path.join(root, d, "_SUCCESS")
-        ):
-            parts = d.split("-", 2)
-            seqs.append(int(parts[1]))
-            if len(parts) == 3:
-                tags.add(parts[2])
-    return seqs, tags
+    parts = [d.split("-", 2) for d in commit.committed(root, "delta-")]
+    return [int(p[1]) for p in parts], {p[2] for p in parts if len(p) == 3}
 
 
 def append_delta(
@@ -640,7 +624,6 @@ def append_delta(
     base_path: str,
     batch: DataFrame,
     tag: str | None = None,
-    stale_stage_seconds: float = 3600.0,
 ) -> str | None:
     """Durably append a micro-batch as the next delta of ``base_path``'s
     merge-on-read view. Safe under CONCURRENT writers: commit is an
@@ -653,15 +636,12 @@ def append_delta(
     so plain snapshot readers never see them. The write is two-phase:
 
     1. **Stage** — the batch is written to a private
-       ``stage-<uuid>`` directory no reader or sweeper touches (stale
-       stages from crashed writers are reaped only after
-       ``stale_stage_seconds``, so a live concurrent writer's stage is
-       never at risk).
-    2. **Commit** — ``os.rename(stage, delta-<seq>[-tag])``. POSIX
-       rename onto an existing non-empty directory fails, so the rename
-       IS the claim: a loser re-lists and retries with the next
-       sequence. Each retry implies another writer committed, so the
-       loop terminates.
+       ``stage-<uuid>`` directory no reader touches (a crashed writer's
+       stage is reaped only once stale, so a live concurrent writer's
+       stage is never at risk).
+    2. **Commit** — the stage is renamed to ``delta-<seq>[-tag]``; the
+       rename IS the claim, and a loser re-lists and retries with the
+       next sequence (:func:`dbt_decodable_spark.commit.publish_dir`).
 
     The sequence number is bookkeeping, not a serialization point:
     unlike Delta Lake's log — whose actions are order-dependent and must
@@ -684,140 +664,22 @@ def append_delta(
     harmless by the same fold-idempotence.)
 
     Returns the committed delta path, or ``None`` for a tag no-op."""
-    import os
-    import shutil
-    import time
-    import uuid
-
     root = _deltas_root(base_path)
-    os.makedirs(root, exist_ok=True)
-    now = time.time()
-    for d in os.listdir(root):
-        p = os.path.join(root, d)
-        if d.startswith("delta-") and not os.path.exists(
-            os.path.join(p, "_SUCCESS")
-        ):
-            # a committed delta always carries _SUCCESS (the rename
-            # happens after Spark finished writing the stage), so this
-            # can only be a crashed pre-rename-era append: sweep it
-            shutil.rmtree(p, ignore_errors=True)
-        elif d.startswith("stage-"):
-            # possibly a LIVE concurrent writer's stage — reap only
-            # when old enough that its writer is surely gone
-            try:
-                if now - os.path.getmtime(p) > stale_stage_seconds:
-                    shutil.rmtree(p, ignore_errors=True)
-            except OSError:
-                pass  # racing its owner's commit-rename: leave it
-    seqs, tags = _committed_deltas(root)
-    if tag is not None and str(tag) in tags:
-        return None  # this batch already landed
-    stage = os.path.join(root, f"stage-{uuid.uuid4().hex}")
-    batch.write.parquet(stage)
-    require_success_marker(stage)
-    while True:
+
+    def next_name() -> str | None:
+        seqs, tags = _committed_deltas(root)
+        if tag is not None and str(tag) in tags:
+            return None  # this batch already landed
         name = f"delta-{(max(seqs) + 1 if seqs else 0):08d}"
-        if tag is not None:
-            name += f"-{tag}"
-        path = os.path.join(root, name)
-        try:
-            os.rename(stage, path)
-            return path
-        except OSError as e:
-            import errno as _errno
+        return name if tag is None else f"{name}-{tag}"
 
-            if e.errno not in (_errno.EEXIST, _errno.ENOTEMPTY):
-                # not a losing claim (permissions, vanished root, …):
-                # re-raising beats spinning on a rename that can never
-                # succeed. Errno-based, not exists()-based — the winner
-                # could be compacted away before an exists() look.
-                shutil.rmtree(stage, ignore_errors=True)
-                raise
-            # another writer claimed this sequence between our listing
-            # and the rename — re-list and retry with the next slot
-            seqs, tags = _committed_deltas(root)
-            if tag is not None and str(tag) in tags:
-                shutil.rmtree(stage, ignore_errors=True)
-                return None  # a replay of this very batch beat us
-
-
-class CompactionLockHeld(RuntimeError):
-    """Another process holds the table's compaction lock."""
-
-
-class _compaction_lock:
-    """Mutual exclusion for the COMPACT step (appends need no lock — the
-    rename-commit protocol serializes them; but two concurrent
-    compactions would both rewrite snapshot partitions and vacuum each
-    other's inputs). Acquisition is an atomic ``os.mkdir`` of
-    ``<deltas>/.__compact_lock__`` — the same put-if-absent primitive the
-    append commit uses. Non-blocking by design: a held lock raises
-    :class:`CompactionLockHeld` so callers (the streaming handler) skip
-    this cycle and retry at the next threshold crossing, rather than
-    stalling a micro-batch behind another table's maintenance.
-
-    Crash-staleness: a compactor that died leaves the lock dir behind;
-    a lock older than ``stale_lock_seconds`` is broken and re-acquired.
-    Size the horizon above the longest plausible compaction (the default
-    1 h dwarfs any bounded merge) — the same recovery contract as the
-    stage sweep. The break-then-mkdir pair is itself racy between two
-    waiters, but the loser of the mkdir still fails and backs off, so
-    mutual exclusion holds; only the *breaking* is best-effort."""
-
-    def __init__(self, root: str, stale_lock_seconds: float = 3600.0):
-        import os
-
-        self.path = os.path.join(root, ".__compact_lock__")
-        self.stale = stale_lock_seconds
-
-    def __enter__(self):
-        import os
-        import shutil
-        import time
-
-        try:
-            os.makedirs(os.path.dirname(self.path), exist_ok=True)
-            os.mkdir(self.path)
-        except FileExistsError:
-            try:
-                held_for = time.time() - os.path.getmtime(self.path)
-            except OSError:
-                held_for = 0.0  # just released: not stale
-            if held_for <= self.stale:
-                raise CompactionLockHeld(
-                    f"compaction lock at {self.path} held for "
-                    f"{held_for:.0f}s (stale after {self.stale:.0f}s)"
-                ) from None
-            shutil.rmtree(self.path, ignore_errors=True)
-            try:
-                os.mkdir(self.path)  # two breakers race: loser backs off
-            except FileExistsError:
-                raise CompactionLockHeld(
-                    f"compaction lock at {self.path} re-acquired by "
-                    "another process while breaking a stale holder"
-                ) from None
-        return self
-
-    def __exit__(self, *exc):
-        import shutil
-
-        shutil.rmtree(self.path, ignore_errors=True)
-        return False
+    return commit.publish_dir(root, batch.write.parquet, next_name)
 
 
 def list_deltas(base_path: str) -> list[str]:
     """Committed (``_SUCCESS``-marked) delta paths in sequence order."""
-    import os
-
     root = _deltas_root(base_path)
-    if not os.path.isdir(root):
-        return []
-    return [
-        os.path.join(root, d)
-        for d in sorted(os.listdir(root))
-        if d.startswith("delta-")
-        and os.path.exists(os.path.join(root, d, "_SUCCESS"))
-    ]
+    return [os.path.join(root, d) for d in commit.committed(root, "delta-")]
 
 
 def read_merged(
@@ -867,19 +729,13 @@ def widen_snapshot_schema(
     to a sibling, verify row count, swap (re-using
     ``operators/maintenance.compact_path``'s pattern through a staged
     :func:`write_hash_partitioned` + rename)."""
-    import os
-    import shutil
-
     base = base_path.rstrip("/")
     tmp = base + ".__widen_tmp__"
     old = base + ".__widen_old__"
     # crash recovery first, same shape as compact_path: if a prior run
     # died between the two renames, `old` holds the only copy
-    if not os.path.exists(base) and os.path.exists(old):
-        os.rename(old, base)
-    for leftover in (tmp, old):
-        if os.path.exists(leftover):
-            shutil.rmtree(leftover)
+    commit.restore(old, base)
+    shutil.rmtree(tmp, ignore_errors=True)
     snap = spark.read.parquet(base)
     if "__bucket" in snap.columns:
         snap = snap.drop("__bucket")
@@ -899,9 +755,7 @@ def widen_snapshot_schema(
             f"widen rewrite changed row count ({n_before} -> {n_after}); "
             f"aborted, snapshot untouched at {base}"
         )
-    os.rename(base, old)
-    os.rename(tmp, base)
-    shutil.rmtree(old)
+    commit.swap_dir(tmp, base, old)
 
 
 def stream_append_deltas(
@@ -946,7 +800,7 @@ def stream_append_deltas(
                     sp, base_path, keys, order, n_buckets,
                     partition_expr=partition_expr,
                 )
-            except CompactionLockHeld:
+            except commit.LockHeld:
                 pass  # another stream is compacting; next crossing retries
 
     return stream_df.writeStream.foreachBatch(_handle)
@@ -955,41 +809,16 @@ def stream_append_deltas(
 _LOG_FLOOR_FILE = "_compaction_floor"
 
 
-def _record_log_floor(root: str, floor: int) -> None:
-    """Durably record a pure-delta log's compaction floor (monotonic) in a
-    plain file beside the deltas. Caller MUST hold the log's compaction
-    lock — the read/compare/replace is not otherwise atomic. This record
-    exists because the ``compacted-<floor>-`` delta name is NOT durable
-    evidence: a later compaction folds the marker away, and a fold whose
-    keys all ended tombstoned retains zero rows, so a floor derivable only
-    from retained dir names could silently regress to 0 and let a lagging
-    pure-delta consumer pass the ``DownstreamLagError`` guard after its
-    tombstones were dropped (ADVICE r11)."""
-    import os
-
-    ffile = os.path.join(root, _LOG_FLOOR_FILE)
-    cur = 0
-    if os.path.exists(ffile):
-        with open(ffile) as fh:
-            cur = int(fh.read().strip() or 0)
-    if floor <= cur:
-        return
-    with open(ffile + ".tmp", "w") as fh:
-        fh.write(str(floor))
-    os.replace(ffile + ".tmp", ffile)
-
-
 def log_compaction_floor(log_path: str) -> int:
     """The durable compaction-floor record of a pure-delta change log
-    (0 = never compacted / pre-record era). Consumers combine this with
-    the ``compacted-<floor>-`` dir-name scan for pre-record logs."""
-    import os
-
-    ffile = os.path.join(_deltas_root(log_path), _LOG_FLOOR_FILE)
-    if not os.path.exists(ffile):
-        return 0
-    with open(ffile) as fh:
-        return int(fh.read().strip() or 0)
+    (0 = never compacted). :func:`compact_change_log` raises it under the
+    log's compaction lock BEFORE deleting any folded delta, so it is the
+    floor: the ``compacted-<floor>-`` delta name is not durable evidence —
+    a later compaction folds the marker away, and a fold whose keys all
+    ended tombstoned retains zero rows, so a floor derived from retained
+    dirs could silently regress and let a lagging consumer pass the
+    ``DownstreamLagError`` guard after its tombstones were dropped."""
+    return commit.read_int(os.path.join(_deltas_root(log_path), _LOG_FLOOR_FILE))
 
 
 def compact_change_log(
@@ -1031,15 +860,13 @@ def compact_change_log(
     sequence — no retained file may hold rows at or below it — because
     folding past a retained older-seq upsert would drop the tombstone that
     supersedes it and resurrect the key. Takes the log's compaction lock;
-    raises :class:`CompactionLockHeld` if another process holds it.
+    raises ``commit.LockHeld`` if another process holds it.
 
     Returns ``{"floor": int|None, "folded": [paths], "live_rows": int}``
     (``floor=None`` = nothing to do)."""
-    import os
-    import shutil
     import uuid
 
-    with _compaction_lock(_deltas_root(log_path)):
+    with commit.lock(_deltas_root(log_path)):
         files = list_deltas(log_path)
         if len(files) < min_files:
             return {"floor": None, "folded": [], "live_rows": 0}
@@ -1133,9 +960,12 @@ def compact_change_log(
             live.unpersist(False)
         # durable floor record, written under the lock BEFORE any fold-set
         # delete: even if every later marker delta is itself folded away
-        # (or held zero rows), _log_compaction_floor-style consumers can
-        # still see how far tombstones were dropped.
-        _record_log_floor(_deltas_root(log_path), int(floor))
+        # (or held zero rows), consumers can still see how far tombstones
+        # were dropped. A crash before this line leaves every folded delta
+        # in place, so the record never trails a delete.
+        commit.advance_int(
+            os.path.join(_deltas_root(log_path), _LOG_FLOOR_FILE), int(floor)
+        )
         for p in fold_set:
             shutil.rmtree(p, ignore_errors=True)
     return {"floor": int(floor), "folded": fold_set, "live_rows": n_live}
@@ -1162,14 +992,12 @@ def compact_and_vacuum(
     retries the removal. Deltas appended AFTER the capture are untouched
     — concurrent appenders are safe (the capture bounds what is folded
     and vacuumed), but concurrent COMPACTIONS are not, so the call takes
-    the table's compaction lock and raises :class:`CompactionLockHeld`
+    the table's compaction lock and raises ``commit.LockHeld``
     (non-blocking) if another process holds it.
 
     Returns ``{"buckets": per-bucket rewrite map, "vacuumed": [paths]}``.
     """
-    import shutil
-
-    with _compaction_lock(_deltas_root(base_path)):
+    with commit.lock(_deltas_root(base_path)):
         pending = list_deltas(base_path)
         buckets = compact_deltas(
             spark, base_path, pending, keys, order, n_buckets,

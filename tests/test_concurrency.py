@@ -23,9 +23,8 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
+from dbt_decodable_spark import commit
 from dbt_decodable_spark.streaming.changelog import (
-    CompactionLockHeld,
-    _compaction_lock,
     _deltas_root,
     append_delta,
     compact_and_vacuum,
@@ -185,7 +184,6 @@ class TestConcurrentAppend:
             spark,
             base,
             spark.createDataFrame([(1, 1, 11, False)], DDL),
-            stale_stage_seconds=3600.0,
         )
         assert p is not None
         assert not os.path.exists(dead)
@@ -200,8 +198,8 @@ class TestCompactionLock:
             spark, base, spark.createDataFrame([(3, 1, 33, False)], DDL)
         )
         root = _deltas_root(base)
-        with _compaction_lock(root):
-            with pytest.raises(CompactionLockHeld):
+        with commit.lock(root):
+            with pytest.raises(commit.LockHeld):
                 compact_and_vacuum(
                     spark, base, ["k"], [F.col("seq")], 5,
                     partition_expr=F.expr("k div 20"),
@@ -272,7 +270,7 @@ class TestCompactionLock:
                                 spark, base, ["k"], [F.col("seq")], 5,
                                 partition_expr=F.expr("k div 20"),
                             )
-                        except CompactionLockHeld:
+                        except commit.LockHeld:
                             pass
             except Exception as e:  # pragma: no cover - surfaced below
                 errors.append(e)
@@ -330,7 +328,7 @@ class TestReviewFindings:
 
     def test_stale_break_loser_gets_lock_held(self, tmp_path):
         """Two processes breaking the same stale lock: the mkdir loser
-        must surface as CompactionLockHeld (the exception callers handle),
+        must surface as commit.LockHeld (the exception callers handle),
         not a bare FileExistsError."""
         root = str(tmp_path / "r")
         os.makedirs(root)
@@ -353,8 +351,8 @@ class TestReviewFindings:
             return real_mkdir(path, *a, **kw)
 
         with mock.patch("os.mkdir", side_effect=contended):
-            with pytest.raises(CompactionLockHeld, match="breaking a stale"):
-                with _compaction_lock(root):
+            with pytest.raises(commit.LockHeld, match="breaking a stale"):
+                with commit.lock(root):
                     pass  # pragma: no cover - never entered
 
 

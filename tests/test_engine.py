@@ -396,3 +396,29 @@ class TestSelfReferencingPipeline:
             assert sorted(r.id for r in eng.read_stream("t").collect()) == [2, 3]
         finally:
             eng.cleanup()
+
+    def test_crash_between_renames_recovers_on_next_run(self, spark, tmp_path):
+        # simulate a crash AFTER sink->old but BEFORE tmp->sink: the sink
+        # dir is gone; the rerun must restore old, not delete it
+        import os
+
+        from dbt_decodable_spark.catalog import Engine
+
+        wh = tmp_path / "wh"
+        eng = Engine(spark, namespace="sr", warehouse_dir=str(wh))
+        try:
+            src = spark.createDataFrame([(1,), (2,), (3,)], "id long")
+            eng.create_stream("t", data=src)
+            eng.create_pipeline(
+                "t", f"SELECT id FROM {eng.qualify('t')} WHERE id > 1",
+                activate=True,
+            )
+            siblings = sorted(p.name for p in wh.iterdir())
+            path = eng.streams[eng.qualify("t")].path
+            os.rename(path, path + ".__insert_old__")
+            os.makedirs(path + ".__insert_tmp__")  # half-written leftover
+            eng.activate_pipeline("t")
+            assert sorted(r.id for r in eng.read_stream("t").collect()) == [2, 3]
+            assert sorted(p.name for p in wh.iterdir()) == siblings
+        finally:
+            eng.cleanup()

@@ -274,11 +274,31 @@ class _CrashPlan:
     def __init__(self, crash_at):
         self.crash_at = crash_at
         self.n = 0
+        self.fired = False
 
     def tick(self):
         self.n += 1
         if self.crash_at is not None and self.n == self.crash_at:
+            self.fired = True
             raise SimulatedCrash(f"simulated crash at write #{self.n}")
+
+    def surface(self, run):
+        """A crash inside a foreachBatch handler reaches the caller wrapped
+        in Spark's streaming-query error; re-raise it as the crash."""
+
+        def wrapped(*a, **kw):
+            try:
+                return run(*a, **kw)
+            except SimulatedCrash:
+                raise
+            except Exception as e:
+                if not self.fired:
+                    raise
+                raise SimulatedCrash(
+                    f"simulated crash at write #{self.crash_at}"
+                ) from e
+
+        return wrapped
 
     def wrap(self, fn):
         def wrapped(*a, **kw):
@@ -289,24 +309,25 @@ class _CrashPlan:
 
 
 def _inject(monkeypatch, plan):
-    """Instrument every durable-write primitive the activation arms use.
-    write_hash_partitioned/append_delta are imported at call time inside
-    the activation functions, so patching their home module reaches them;
-    _advance_stream_offsets/_write_atomic/_publish_gen are module globals
-    at their call sites."""
-    from dbt_decodable_spark import catalog as cat
-    from dbt_decodable_spark.operators import ivm_dag as idg
-    from dbt_decodable_spark.operators import ivm_log as il
+    """Instrument every durable-write primitive the activation arms use:
+    the commit module's directory commit and record writer (every append,
+    generation publish, marker and floor record goes through one of the
+    two), plus the stream-offset pass and the snapshot writer. Callers
+    reach all four through their home module's attribute at call time,
+    so patching that module reaches every call site. Writes inside a
+    bounded run's foreachBatch handler are crash points too, so the run
+    surfaces their crash."""
+    from dbt_decodable_spark import catalog as cat, commit
     from dbt_decodable_spark.streaming import changelog as cl
 
+    monkeypatch.setattr(cat, "_run_available_now",
+                        plan.surface(cat._run_available_now))
     monkeypatch.setattr(cat, "_advance_stream_offsets",
                         plan.wrap(cat._advance_stream_offsets))
-    monkeypatch.setattr(cat, "_write_atomic", plan.wrap(cat._write_atomic))
     monkeypatch.setattr(cl, "write_hash_partitioned",
                         plan.wrap(cl.write_hash_partitioned))
-    monkeypatch.setattr(cl, "append_delta", plan.wrap(cl.append_delta))
-    monkeypatch.setattr(il, "_publish_gen", plan.wrap(il._publish_gen))
-    monkeypatch.setattr(idg, "_write_floor", plan.wrap(idg._write_floor))
+    monkeypatch.setattr(commit, "publish_dir", plan.wrap(commit.publish_dir))
+    monkeypatch.setattr(commit, "write_atomic", plan.wrap(commit.write_atomic))
 
 
 class TestInitCrashSweep:
@@ -547,9 +568,7 @@ class TestCommitProtocolHardening:
         and sweeps unmarked dirs as crash debris — on a cluster with
         success markers disabled that silently destroys committed data,
         so the first stage write must fail loudly instead."""
-        from dbt_decodable_spark.operators.versions import (
-            require_success_marker,
-        )
+        from dbt_decodable_spark.commit import require_success_marker
         from dbt_decodable_spark.streaming.changelog import append_delta
 
         d = tmp_path / "stage"

@@ -70,9 +70,7 @@ class TestFullyTombstonedCompactionFloor:
         log = self._tombstoned_log(spark, tmp_path)
         out = compact_change_log(spark, log, ["k"])
         assert out["floor"] == 2 and out["live_rows"] == 0
-        # the floor survives BOTH ways: the empty marker delta's name and
-        # the durable record file
-        assert ivm_dag._log_compaction_floor(log) == 2
+        # the floor survives in the durable record file
         assert log_compaction_floor(log) == 2
         retained = list_deltas(log)
         assert len(retained) == 1, "empty marker = the log's schema anchor"
@@ -103,7 +101,7 @@ class TestFullyTombstonedCompactionFloor:
         for p in list_deltas(log):
             shutil.rmtree(p)
         assert list_deltas(log) == []
-        assert ivm_dag._log_compaction_floor(log) == 2
+        assert log_compaction_floor(log) == 2
         root = str(tmp_path / "down")
         os.makedirs(root)
         ivm_dag._write_floor(root, 1)

@@ -965,6 +965,56 @@ class TestDeltaLogLifecycle:
         assert not os.path.exists(os.path.join(root, "delta-00000007"))
         assert p.endswith("delta-00000000")
 
+    def test_half_deleted_delta_at_claim_slot_is_swept(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """A crash while compaction deletes a log's only delta can remove
+        its _SUCCESS first (rmtree goes in directory-hash order) and leave
+        part files at delta-00000000 — the very slot the next untagged
+        append claims. The append's sweep must clear it; without it the
+        claim would fail with ENOTEMPTY, re-list, and pick slot 0 forever."""
+        import os
+        import shutil
+
+        from dbt_decodable_spark.streaming.changelog import (
+            append_delta,
+            compact_and_vacuum,
+            fold_last_image,
+            list_deltas,
+            read_merged,
+        )
+
+        class Crash(RuntimeError):
+            pass
+
+        base, init = self._snap(spark, tmp_path)
+        b1 = spark.createDataFrame(
+            [(1, 1, 11, False), (2, 1, 0, True)], self.DDL
+        )
+        p = append_delta(spark, base, b1)
+        assert p.endswith("delta-00000000")
+        real_rmtree = shutil.rmtree
+
+        def crashing_rmtree(path, *a, **kw):
+            if os.path.abspath(path) == os.path.abspath(p):
+                os.remove(os.path.join(path, "_SUCCESS"))
+                raise Crash("crash mid-delete of the newest delta")
+            return real_rmtree(path, *a, **kw)
+
+        with monkeypatch.context() as mp:
+            mp.setattr(shutil, "rmtree", crashing_rmtree)
+            with pytest.raises(Crash):
+                compact_and_vacuum(spark, base, ["k"], [F.col("seq")], 5,
+                                   partition_expr=F.expr("k div 20"))
+        assert os.listdir(p) and list_deltas(base) == []
+        b2 = spark.createDataFrame([(3, 2, 33, False)], self.DDL)
+        assert append_delta(spark, base, b2).endswith("delta-00000000")
+        want = fold_last_image(
+            init.unionByName(b1).unionByName(b2), ["k"], [F.col("seq")]
+        ).filter("NOT is_delete")
+        view = read_merged(spark, base, ["k"], [F.col("seq")])
+        assert self._rows(view) == self._rows(want)
+
     def test_replay_between_merge_and_vacuum_is_idempotent(self, spark, tmp_path):
         from dbt_decodable_spark.streaming.changelog import (
             append_delta,
@@ -1171,6 +1221,33 @@ class TestWidenSnapshotSchema:
         rows = {r["k"]: (r["v"], r["w"]) for r in view.collect()}
         assert rows[3] == (33, "new")
         assert rows[1] == (10, None)
+
+    def test_crash_between_renames_recovers_on_next_run(self, spark, tmp_path):
+        # simulate a crash AFTER base->old but BEFORE tmp->base: the
+        # snapshot dir is gone; the rerun must restore old, not delete it
+        import os
+
+        from dbt_decodable_spark.streaming.changelog import (
+            widen_snapshot_schema,
+            write_hash_partitioned,
+        )
+
+        base = str(tmp_path / "base")
+        write_hash_partitioned(
+            spark.createDataFrame(
+                [(i, 0, i * 10, False) for i in range(10)], self.DDL
+            ),
+            base, ["k"], 2,
+        )
+        os.rename(base, base + ".__widen_old__")
+        os.makedirs(base + ".__widen_tmp__")  # half-written leftover
+        with open(os.path.join(base + ".__widen_tmp__", "part-0"), "w") as fh:
+            fh.write("torn")
+        widen_snapshot_schema(spark, base, {"w": "string"}, ["k"], 2)
+        got = spark.read.parquet(base)
+        assert sorted(r["k"] for r in got.collect()) == list(range(10))
+        assert got.filter("w IS NOT NULL").count() == 0
+        assert sorted(p.name for p in tmp_path.iterdir()) == ["base"]
 
     def test_widen_rejects_existing_column(self, spark, tmp_path):
         import pytest as _pytest

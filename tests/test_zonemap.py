@@ -547,6 +547,39 @@ class TestZonemapAppendRefresh:
         spark.range(10).write.parquet(path)
         assert zm.refresh_zonemap_appended(spark, path) is None
 
+    def test_entry_without_mtime_is_restatted(self, spark, tmp_path):
+        """An entry whose mtime could not be read (recorded as None) has
+        no identity beyond (name, size), which a same-size in-place
+        rewrite keeps — so the refresh must re-stat it, never trust it."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        path = str(tmp_path / "t")
+        os.makedirs(path)
+        full = os.path.join(path, "part-0.parquet")
+
+        def write(lo):
+            # uncompressed, no dictionary: the byte count is independent
+            # of the values, so the rewrite keeps the file size
+            pq.write_table(
+                pa.table({"id": pa.array(range(lo, lo + 100), pa.int64())}),
+                full, compression="NONE", use_dictionary=False,
+            )
+
+        write(0)
+        zm.write_zonemap(spark, path, ["id"])
+        mpath = os.path.join(path, zm.MANIFEST_NAME)
+        with open(mpath) as fh:
+            manifest = json.load(fh)
+        manifest["files"][0]["mtime"] = None
+        with open(mpath, "w") as fh:
+            json.dump(manifest, fh)
+        size = os.path.getsize(full)
+        write(10_000)
+        assert os.path.getsize(full) == size
+        zm.refresh_zonemap_appended(spark, path)
+        assert zm.minmax_from_zonemap(path, "id") == (10_000, 10_099)
+
 
 class TestZonemapFailOpen:
     def _write(self, corpus, tmp_path):

@@ -1,10 +1,14 @@
 """Decompose ivm_dag_depth3's wall into (a) durable-commit filesystem time
-(the `_SUCCESS` checks, stage→final renames, meta writes the r13 verdict's
-"batch the per-stage _SUCCESS fsyncs into a single manifest write" idea
-could save), (b) the Spark write jobs inside the durable appends/publishes,
-and (c) everything else (folds, collects, planning). VERDICT r13 item 4
-gates the batching idea on this split: if (a) is microseconds, the idea
-cannot buy anything and the accepted protocol floor stands with evidence.
+(sweeps, `_SUCCESS` checks, stage→final renames, record writes, listings
+of committed dirs), (b) the Spark write jobs that fill the stages, and
+(c) everything else (folds, collects, planning). VERDICT r13 item 4 gates
+the idea of batching the per-stage `_SUCCESS` fsyncs into a single
+manifest write on this split: if (a) is milliseconds, the idea cannot buy
+anything and the accepted protocol floor stands with evidence.
+
+Every durable write goes through `dbt_decodable_spark/commit.py` and every
+caller looks its primitives up on that module at call time, so patching
+the module's attributes once times every call site.
 
 Usage: SPARK_GRAFT_SF_DIR=... python tools/commit_probe.py [repeat]
 """
@@ -22,97 +26,66 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     repeat = int(sys.argv[1]) if len(sys.argv) > 1 else 2
 
+    from dbt_decodable_spark import commit
     from dbt_decodable_spark.queries import load_all
     from dbt_decodable_spark.session import get_spark
-    from dbt_decodable_spark.operators import versions as V
-    from dbt_decodable_spark.streaming import changelog as CL
-    from dbt_decodable_spark.operators import ivm_log as IL
 
     registry = load_all()
     spark = get_spark(app_name="commit_probe")
 
-    stats = {
-        "fs_rename_s": 0.0, "fs_rename_n": 0,
-        "success_check_s": 0.0, "success_check_n": 0,
-        "append_delta_s": 0.0, "append_delta_n": 0,
-        "publish_gen_s": 0.0, "publish_gen_n": 0,
-        "list_versions_s": 0.0, "list_versions_n": 0,
-        "list_deltas_s": 0.0, "list_deltas_n": 0,
-    }
+    keys = ("publish_dir", "stage_write", "committed", "write_atomic",
+            "swap_dir")
+    stats = {k: [0.0, 0] for k in keys}
+    in_publish = [0]
 
-    real_rename = os.rename
-
-    def timed_rename(a, b):
-        t0 = time.perf_counter()
-        try:
-            return real_rename(a, b)
-        finally:
-            stats["fs_rename_s"] += time.perf_counter() - t0
-            stats["fs_rename_n"] += 1
-
-    def wrap(mod, name, key):
-        real = getattr(mod, name)
-
+    def timed(key, fn):
         def w(*a, **k):
             t0 = time.perf_counter()
             try:
-                return real(*a, **k)
+                return fn(*a, **k)
             finally:
-                stats[key + "_s"] += time.perf_counter() - t0
-                stats[key + "_n"] += 1
+                # listings inside a publish are already in its time
+                if key != "committed" or not in_publish[0]:
+                    stats[key][0] += time.perf_counter() - t0
+                    stats[key][1] += 1
 
         return w
 
-    os.rename = timed_rename
-    V.require_success_marker = wrap(V, "require_success_marker", "success_check")
-    # patch every importer's reference (from-imports bind at import time)
-    IL.require_success_marker = V.require_success_marker
-    real_append = CL.append_delta
+    real_publish = commit.publish_dir
 
-    def timed_append(*a, **k):
-        t0 = time.perf_counter()
+    def publish_dir(root, write, next_name):
+        in_publish[0] += 1
         try:
-            return real_append(*a, **k)
+            return real_publish(root, timed("stage_write", write), next_name)
         finally:
-            stats["append_delta_s"] += time.perf_counter() - t0
-            stats["append_delta_n"] += 1
+            in_publish[0] -= 1
 
-    CL.append_delta = timed_append
-    IL.append_delta = timed_append
-    from dbt_decodable_spark.operators import ivm_dag as ID
-    ID.append_delta = timed_append
-    import dbt_decodable_spark.queries.ivm_q as IQ  # noqa: F401 (uses CL import at call time)
-
-    IL._publish_gen = wrap(IL, "_publish_gen", "publish_gen")
-    V.list_versions = wrap(V, "list_versions", "list_versions")
-    IL.list_versions = V.list_versions
-    ID.list_versions = V.list_versions
-    CL.list_deltas = wrap(CL, "list_deltas", "list_deltas")
-    IL.list_deltas = CL.list_deltas
-    ID.list_deltas = CL.list_deltas
+    commit.publish_dir = timed("publish_dir", publish_dir)
+    for k in ("committed", "write_atomic", "swap_dir"):
+        setattr(commit, k, timed(k, getattr(commit, k)))
 
     q = registry["ivm_dag_depth3"]
     walls = []
     for i in range(repeat):
-        for k in stats:
-            stats[k] = 0 if k.endswith("_n") else 0.0
+        for v in stats.values():
+            v[:] = [0.0, 0]
         t0 = time.time()
         df = q.fn(spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()
         walls.append(time.time() - t0)
         print(f"run {i}: wall={walls[-1]:.2f}s")
-        for k in sorted(stats):
-            if k.endswith("_s"):
-                n = stats[k[:-2] + "_n"]
-                print(f"  {k[:-2]:>16}: {stats[k]*1000:9.1f} ms over {n} calls")
-        app_spark = stats["append_delta_s"]
-        pub_spark = stats["publish_gen_s"]
-        fs_only = stats["fs_rename_s"] + stats["success_check_s"] + \
-            stats["list_versions_s"] + stats["list_deltas_s"]
-        print(f"  durable-append wall (incl. Spark write jobs): "
-              f"{(app_spark+pub_spark):.2f}s; pure-fs commit/listing time: "
-              f"{fs_only*1000:.1f} ms; other (folds/collects/planning): "
-              f"{walls[-1]-app_spark-pub_spark:.2f}s")
+        for k in keys:
+            s, n = stats[k]
+            print(f"  {k:>16}: {s*1000:9.1f} ms over {n} calls")
+        spark_s = stats["stage_write"][0]
+        fs_only = (
+            stats["publish_dir"][0] - spark_s + stats["committed"][0]
+            + stats["write_atomic"][0] + stats["swap_dir"][0]
+        )
+        print(f"  stage writes (Spark jobs): {spark_s:.2f}s; pure-fs "
+              f"commit/listing time: {fs_only*1000:.1f} ms; other "
+              f"(folds/collects/planning): "
+              f"{walls[-1] - spark_s - fs_only:.2f}s")
 
 
 if __name__ == "__main__":
