@@ -358,9 +358,9 @@ def _contributions(
 def _counter_delta(contrib: DataFrame, spec: AggViewSpec) -> DataFrame:
     """Signed counter deltas per touched group — the one place the
     count/sum/non-null arithmetic lives. The in-memory maintain path and
-    both log paths (``ivm_log_append`` state append, ``ivm_log_batch_changes``
-    emission) MUST aggregate identically or state and emitted changes
-    silently diverge; they all call this."""
+    the log path (``ivm_log_append``, whose state delta and emitted post
+    image both derive from this one frame) MUST aggregate identically or
+    state and emitted changes silently diverge; they all call this."""
     delta_aggs: list[Column] = [F.sum("__mult").alias("__cnt")]
     for c in spec.delta_cols():
         delta_aggs.append(F.sum(F.col("__mult") * _sum0(c)).alias(f"__sum_{c}"))
@@ -374,8 +374,8 @@ def _counter_delta(contrib: DataFrame, spec: AggViewSpec) -> DataFrame:
 
 def _support_delta(contrib: DataFrame, c: str) -> DataFrame:
     """One support column's count-delta for a batch: (group, value) → Σ__mult,
-    keyed by the composite ``__k`` struct. Shared by the same three callers
-    as :func:`_counter_delta`, for the same reason."""
+    keyed by the composite ``__k`` struct. Shared by the same callers as
+    :func:`_counter_delta`, for the same reason."""
     return (
         contrib.filter(F.col(c).isNotNull())
         .groupBy(
@@ -417,7 +417,6 @@ def maintain(
     order: Sequence[Column | str],
     spec: AggViewSpec,
     delete_col: str | None = None,
-    broadcast_patches: bool = True,
 ) -> IvmState:
     """Advance the maintenance state by one micro-batch of keyed changes.
 
@@ -427,12 +426,9 @@ def maintain(
     advances it separately via the MERGE of its choice and feeds the merged
     snapshot to the next ``maintain`` call. Convergence under arbitrary
     micro-batch splits/reorders follows from the winner rule being the same
-    associative fold the MERGE uses (hypothesis-tested).
-
-    ``broadcast_patches`` hints the touched-group set and the recomputed
-    extremes as broadcast sides (both are ≤ |batch| groups); disable for
-    batches large enough to blow the broadcast budget and let AQE choose.
-    """
+    associative fold the MERGE uses (hypothesis-tested). The touched-group
+    set and the recomputed extremes are hinted as broadcast sides (both
+    are ≤ |batch| groups)."""
     snapshot_cols = list(snapshot_before.columns)
     pairs = change_pairs(snapshot_before, changes, keys, order)
     # the contributions subplan embeds the snapshot-probe LEFT join — the
@@ -444,9 +440,6 @@ def maintain(
     contrib = _contributions(pairs, snapshot_cols, spec, delete_col).localCheckpoint(
         eager=False
     )
-
-    def hint(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if broadcast_patches else df
 
     # 1. counter deltas → merged aggregate (extremes carried, patched below)
     agg_delta = _counter_delta(contrib, spec)
@@ -472,7 +465,7 @@ def maintain(
         ext: DataFrame | None = None
         for c in spec.support_cols():
             sup = new_supports[c]
-            probe = hint(touched)
+            probe = F.broadcast(touched)
             slice_c = sup.join(
                 probe,
                 on=sup[SKEY].getField("g") == probe[GKEY],
@@ -484,7 +477,7 @@ def maintain(
             ext = part if ext is None else ext.join(part, on=[GKEY], how="full_outer")
         marked = touched.withColumn("__touched", F.lit(True))
         patch = marked.join(ext, on=[GKEY], how="left")
-        a, p = new_agg.alias("__a"), hint(patch).alias("__p")
+        a, p = new_agg.alias("__a"), F.broadcast(patch).alias("__p")
         j = a.join(p, on=[GKEY], how="left")
         out_cols: list[Column] = [F.col(GKEY)] + [
             a[c].alias(c) for c in counter_cols

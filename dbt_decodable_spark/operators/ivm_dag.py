@@ -76,8 +76,10 @@ from dbt_decodable_spark.operators.ivm_log import (
 from dbt_decodable_spark.operators.versions import list_versions
 from dbt_decodable_spark.streaming.changelog import (
     fold_last_image,
+    int_tag,
     list_deltas,
     log_compaction_floor,
+    parse_delta_name,
 )
 
 SEQ = "__seq"
@@ -91,17 +93,6 @@ class DownstreamLagError(RuntimeError):
     so the as-of-watermark upstream state is no longer reconstructible.
     Rebuild the downstream root (drop it and re-init from the current
     view)."""
-
-
-def _delta_tag(path: str) -> int | None:
-    """Integer tag of a ``delta-<seq>-<tag>`` directory, else None."""
-    parts = os.path.basename(path).split("-", 2)
-    if len(parts) == 3:
-        try:
-            return int(parts[2])
-        except ValueError:
-            return None
-    return None
 
 
 def _write_floor(root: str, floor: int) -> None:
@@ -134,17 +125,9 @@ def downstream_watermark(root: str) -> int:
     agg_root = _agg_root(root)
     cands = [commit.read_int(os.path.join(root, _FLOOR_FILE))]
     if list_versions(agg_root):
-        _, meta = _latest_gen(agg_root)
-        if meta.get("max_tag") is not None:
-            try:
-                cands.append(int(meta["max_tag"]))
-            except (TypeError, ValueError):
-                pass
-    for p in list_deltas(agg_root):
-        t = _delta_tag(p)
-        if t is not None:
-            cands.append(t)
-    return max(cands)
+        cands.append(int_tag(_latest_gen(agg_root)[1].get("max_tag")))
+    cands += [int_tag(parse_delta_name(p)[1]) for p in list_deltas(agg_root)]
+    return max(c for c in cands if c is not None)
 
 
 def _base_max_seq(view_log: str) -> int | None:
@@ -553,29 +536,17 @@ def maintain_downstream(
         base, drows.filter(F.col(SEQ) <= F.lit(w)), keys, pending,
         broadcast_keys=broadcast_keys,
     )
-    if emit_log is not None:
-        # the downstream aggregate's OWN change stream (group-keyed
-        # upserts/tombstones) so the DAG composes one level further —
-        # emitted BEFORE the state append, from committed state + local
-        # delta, so a crash in between replays to bit-identical changes
-        # and the out-log append dedupes on the tag (the join arm's
-        # view-delta-before-state-delta order, one stage down). FUSED
-        # with the state append: one maintenance-shaped pass feeds both
-        # (r12 — the emitting stages' per-batch cost, halved).
-        from dbt_decodable_spark.operators.ivm_log import (
-            ivm_log_append_with_changes,
-        )
-
-        appended = ivm_log_append_with_changes(
-            spark, root, snap_before, pending,
-            list(keys), [F.col(SEQ)], spec, seq=new_w,
-            out_log=emit_log, tag=str(new_w),
-        )
-    else:
-        appended = ivm_log_append(
-            spark, root, snap_before, pending,
-            list(keys), [F.col(SEQ)], spec, tag=str(new_w),
-        )
+    # ``emit_log``: the downstream aggregate's OWN change stream
+    # (group-keyed upserts/tombstones) so the DAG composes one level
+    # further — emitted in the same pass, BEFORE the state appends, from
+    # committed state + local delta, so a crash in between replays to
+    # bit-identical changes and the out-log append dedupes on the tag (the
+    # join arm's view-delta-before-state-delta order, one stage down)
+    appended = ivm_log_append(
+        spark, root, snap_before, pending,
+        list(keys), [F.col(SEQ)], spec, tag=str(new_w),
+        out_log=emit_log, seq=new_w,
+    )
     if not appended:
         # the slice folded to ZERO contributions (e.g. the join arm's
         # redundant tombstones for keys dead on both sides of a batch) —

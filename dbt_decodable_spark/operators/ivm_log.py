@@ -53,6 +53,14 @@ tag and the snapshot merge is idempotent by its own contract; the reverse
 order would replay the batch against an already-merged snapshot and
 compute zero contributions, silently losing the batch from the view.
 
+One maintenance pass: :func:`ivm_log_append` is the whole per-batch step —
+change pairs, contributions, extremes, counter delta — and, given an
+``out_log``, also emits the view's own group-keyed change stream from the
+same frames. Every durable write follows the pass's computation, in the
+order out log → support logs → agg log, so a crash between any two
+replays against unchanged committed state and the landed writes dedupe on
+the tag.
+
 Concurrent readers vs vacuum: a reader resolves a generation and lazily
 opens delta files later, so deltas (and old generations) are reclaimed only
 past a retention horizon (``vacuum_horizon_seconds`` / ``keep_gens``) —
@@ -85,13 +93,19 @@ from dbt_decodable_spark.operators.ivm import (
     _support_delta,
     change_pairs,
     init_state,
+    project_view,
 )
 from dbt_decodable_spark.operators.versions import (
     _publish,
     _vdir,
     list_versions,
 )
-from dbt_decodable_spark.streaming.changelog import append_delta, list_deltas
+from dbt_decodable_spark.streaming.changelog import (
+    append_delta,
+    int_tag,
+    list_deltas,
+    parse_delta_name,
+)
 
 META_NAME = "_ivm_meta.json"
 BUCKET = "__gbucket"
@@ -136,10 +150,6 @@ def _with_bucket(df: DataFrame, meta: dict, key: str) -> DataFrame:
         .withColumn(BUCKET, expr)
         .drop(GKEY)
     )
-
-
-def _delta_seq(path: str) -> int:
-    return int(os.path.basename(path).split("-")[1])
 
 
 # ------------------------------------------------- generation commit/read
@@ -188,7 +198,7 @@ def _pending(table_root: str, watermark: int) -> list[tuple[int, str]]:
     return [
         (s, p)
         for p in list_deltas(table_root)
-        if (s := _delta_seq(p)) > watermark
+        if (s := parse_delta_name(p)[0]) > watermark
     ]
 
 
@@ -256,65 +266,60 @@ def _bucket_filter(tbuckets: list) -> Column:
     return bf
 
 
+def _tag_folded(meta: dict, tag) -> bool:
+    """True when an integer ``tag`` is at or below the generation's
+    ``max_tag`` — the batch was already folded into that generation (the
+    replay level that outlives compaction). Non-integer tags never match:
+    only the pending-delta dedup applies to them."""
+    t, folded = int_tag(tag), int_tag(meta["max_tag"])
+    return t is not None and folded is not None and t <= folded
+
+
 def _tag_in_log(table_root: str, tag) -> bool:
     """True when ``table_root`` already carries this batch's delta — folded
-    into the latest generation (integer ``tag`` ≤ ``max_tag``) or still
-    pending as a committed ``delta-<seq>-<tag>`` directory. The spliced
-    ``_ext_recompute`` paths use this to recognize a crash replay whose
-    support deltas already landed: ``_fold`` reads the landed delta, so
-    splicing the batch's support contributions in AGAIN would double them —
-    a doubled ``-1`` can drive a (group, value) support count from net 1 to
-    0 and drop a still-present value from the extreme recompute (ADVICE
-    r12)."""
+    into the latest generation (:func:`_tag_folded`) or still pending as a
+    committed ``delta-<seq>-<tag>`` directory. :func:`_ext_recompute` uses
+    this to recognize a crash replay whose support deltas already landed:
+    ``_fold`` reads the landed delta, so splicing the batch's support
+    contributions in AGAIN would double them — a doubled ``-1`` can drive a
+    (group, value) support count from net 1 to 0 and drop a still-present
+    value from the extreme recompute."""
     if tag is None:
         return False
-    _, tmeta = _latest_gen(table_root)
-    if tmeta["max_tag"] is not None:
-        try:
-            if int(tag) <= int(tmeta["max_tag"]):
-                return True
-        except (TypeError, ValueError):
-            pass
-    stag = str(tag)
-    for p in list_deltas(table_root):
-        parts = os.path.basename(p).split("-", 2)
-        if len(parts) == 3 and parts[2] == stag:
-            return True
-    return False
+    if _tag_folded(_latest_gen(table_root)[1], tag):
+        return True
+    return any(parse_delta_name(p)[1] == str(tag) for p in list_deltas(table_root))
 
 
 def _ext_recompute(
     spark: SparkSession,
     root: str,
     spec: AggViewSpec,
+    contrib: DataFrame,
     touched: DataFrame,
     bf: Column,
-    hint,
-    pending_delta=None,
-) -> DataFrame | None:
-    """Absolute extremes for the touched groups, recomputed from the support
-    state (committed fold, touched-bucket pruned). The append path calls this
-    AFTER landing the batch's support deltas (the fold reads them as pending);
-    the emission path writes nothing, so it passes ``pending_delta`` (a
-    ``col -> DataFrame | None`` of the batch's unwritten support delta) to
-    splice them in — unioning with the committed fold is equivalent because
-    dropped zero-count rows are the additive identity. A per-column ``None``
-    means the batch's delta is ALREADY in this column's log (crash replay —
-    see :func:`_tag_in_log`): the fold covers it, so nothing is spliced."""
+    tag,
+) -> DataFrame:
+    """Absolute extremes for the touched groups after the batch: the
+    committed support fold (touched-bucket pruned) spliced with the batch's
+    unwritten support delta — unioning is equivalent to folding after the
+    support append because dropped zero-count rows are the additive
+    identity, and it lets the emission run before any state write. A
+    column whose log already holds the batch's tag (crash replay — see
+    :func:`_tag_in_log`) is not spliced: the fold covers it."""
     ext: DataFrame | None = None
     for c in spec.support_cols():
         sup = _fold(
             spark, _sup_root(root, c), SKEY, ["__cnt"], [], base_filter=bf
         )
-        pd = pending_delta(c) if pending_delta is not None else None
-        if pd is not None:
+        if not _tag_in_log(_sup_root(root, c), tag):
             sup = (
-                sup.unionByName(pd)
+                sup.unionByName(_support_delta(contrib, c))
                 .groupBy(SKEY)
                 .agg(F.sum("__cnt").alias("__cnt"))
                 .filter(F.col("__cnt") > 0)
             )
-        probe = hint(touched)
+        probe = F.broadcast(touched)
         slice_c = sup.join(
             probe, on=sup[SKEY].getField("g") == probe[GKEY], how="left_semi"
         )
@@ -323,6 +328,72 @@ def _ext_recompute(
         ).agg(*_ext_aggs(spec, c, F.col(SKEY).getField("v")))
         ext = part if ext is None else ext.join(part, on=[GKEY], how="full_outer")
     return ext
+
+
+def _with_extremes(
+    counters: DataFrame, ext: DataFrame | None, spec: AggViewSpec
+) -> DataFrame:
+    """Per-group counter rows with the recomputed absolute extremes riding
+    on the same row (a count-distinct of a group with no live value is 0,
+    not NULL) — the agg delta's and the emitted post image's shape."""
+    if ext is None:
+        return counters
+    a, e = counters.alias("__a"), F.broadcast(ext).alias("__e")
+    sel: list[Column] = [a[GKEY]] + [a[c].alias(c) for c in _counter_cols(spec)]
+    for x in _ext_state_cols(spec):
+        col = F.coalesce(e[x], F.lit(0)) if x.startswith("__cd_") else e[x]
+        sel.append(col.alias(x))
+    return a.join(e, on=[GKEY], how="left").select(*sel)
+
+
+def _emission(
+    spark: SparkSession,
+    agg_root: str,
+    spec: AggViewSpec,
+    touched: DataFrame,
+    bf: Column,
+    agg_delta: DataFrame,
+    ext: DataFrame | None,
+    seq: int,
+) -> DataFrame:
+    """The group-level change rows one batch induces on the view: per
+    touched group the post-batch view row (``__deleted`` false), or a
+    tombstone with NULL aggregate outputs when the group's live count
+    reaches zero. The post image is the committed pre-image (pruned fold)
+    plus the signed counter delta, with the recomputed extremes — nothing
+    is read back after a write, so it is computed before any state
+    append."""
+    counter_cols = _counter_cols(spec)
+    pre = _fold(
+        spark, agg_root, GKEY, counter_cols, [], base_filter=bf
+    ).join(F.broadcast(touched), on=[GKEY], how="left_semi")
+    d, p = agg_delta.alias("__d"), F.broadcast(pre).alias("__p")
+    post = _with_extremes(
+        d.join(p, on=[GKEY], how="left").select(
+            d[GKEY],
+            *[(F.coalesce(p[c], F.lit(0)) + d[c]).alias(c) for c in counter_cols],
+        ),
+        ext,
+        spec,
+    )
+    out_cols = list(spec.outputs())
+    img = project_view(post.filter(F.col("__cnt") > 0), spec).withColumn(
+        "__deleted", F.lit(False)
+    )
+    img_types = {f.name: f.dataType for f in img.schema.fields}
+    gone = post.filter(F.col("__cnt") <= 0).select(
+        *[F.col(GKEY).getField(g).alias(g) for g in spec.group_cols],
+        *[
+            F.lit(None).cast(img_types[c]).alias(c)
+            for c in out_cols
+            if c not in spec.group_cols
+        ],
+    ).select(*out_cols).withColumn("__deleted", F.lit(True))
+    return (
+        img.unionByName(gone)
+        .withColumn("__seq", F.lit(seq).cast("long"))
+        .select(*out_cols, "__seq", "__deleted")
+    )
 
 
 # ------------------------------------------------------------- operations
@@ -374,393 +445,81 @@ def ivm_log_append(
     order: Sequence[Column | str],
     spec: AggViewSpec,
     tag: str | None = None,
-    broadcast_patches: bool = True,
+    out_log: str | None = None,
+    seq: int | None = None,
 ) -> bool:
     """Land one micro-batch's maintenance as delta appends — O(|batch| +
     touched groups' support slice) work, no state rewrite. Returns False
-    for a recognized replay (nothing appended). MUST be called with the
-    snapshot image the batch merges into, BEFORE the snapshot advances
-    (see the module ordering contract)."""
+    for a recognized replay or a batch with no contribution (nothing
+    appended). MUST be called with the snapshot image the batch merges
+    into, BEFORE the snapshot advances (see the module ordering contract).
+
+    ``out_log`` also emits the view's OWN group-keyed change stream into
+    that log (:func:`_emission`, ``__seq`` = ``seq``) — the
+    retraction-bearing output that lets another maintained stage consume
+    this view, as a GROUP BY pipeline's sink is itself a change stream
+    keyed by the group (``decodable/client/schema.py:109-111``).
+
+    One pass: change pairs and contributions once, then the extremes
+    (committed support + the batch's unwritten support delta), the
+    counter delta, the emission, and the durable writes in the order
+    out log → support logs → agg log, each tagged with ``tag``. A crash
+    anywhere replays against unchanged committed state: the emission
+    recomputes bit-identical rows and its append dedupes on the tag,
+    landed support deltas dedupe (pending) or are skipped (folded into a
+    generation), and the agg append proceeds. A replay of a batch already
+    folded into the agg generation returns False without re-emitting — its
+    emission landed first."""
+    if out_log is not None and seq is None:
+        raise ValueError("out_log needs the emitted __seq (seq=)")
     agg_root = _agg_root(root)
     _, meta = _latest_gen(agg_root)
-    delete_col = meta["delete_col"]
-    if tag is not None and meta["max_tag"] is not None:
-        try:
-            if int(tag) <= int(meta["max_tag"]):
-                return False  # replay of a batch already folded into a gen
-        except (TypeError, ValueError):
-            pass  # non-integer tags: only the pending-delta dedup applies
+    if _tag_folded(meta, tag):
+        return False  # replay of a batch already folded into a generation
 
-    snapshot_cols = list(snapshot_before.columns)
-    pairs = change_pairs(
-        snapshot_before, changes, keys, order,
-        prune_target=broadcast_patches,
-    )
-    contrib = _contributions(pairs, snapshot_cols, spec, delete_col).persist()
+    pairs = change_pairs(snapshot_before, changes, keys, order, prune_target=True)
+    contrib = _contributions(
+        pairs, list(snapshot_before.columns), spec, meta["delete_col"]
+    ).persist()
     try:
-        # the emptiness probe: support specs fold it into the touched-bucket
-        # collect (one action serves both); counter-only specs keep the
-        # plain isEmpty (nothing consumes buckets)
-        tbuckets: list | None = None
-        if spec.support_cols():
-            touched = contrib.select(GKEY).distinct()
+        touched = contrib.select(GKEY).distinct()
+        # the emptiness probe: when the extremes or the emission consume
+        # the touched buckets, their collect is the probe (one action
+        # serves both); a counter-only, non-emitting spec keeps the plain
+        # isEmpty
+        bf: Column | None = None
+        if spec.support_cols() or out_log is not None:
             tbuckets = _collect_touched_buckets(touched, meta)
             if not tbuckets:
                 return False
+            bf = _bucket_filter(tbuckets)
         elif contrib.isEmpty():
             return False
 
-        # 1. support deltas FIRST (replay after a crash here no-ops them by
-        # tag, then recomputes identical extremes from the committed state).
-        # Each table checks its OWN generation's max_tag: after a crash
-        # between the support and agg appends, an external compaction may
-        # fold the support deltas away (their pending-tag dedup with them) —
-        # the agg-level check at the top still passes, so without this
-        # per-table guard the replay would re-land the folded support rows
-        # and double-count multiplicities.
-        def _tag_folded(table_root: str) -> bool:
-            if tag is None:
-                return False
-            _, tmeta = _latest_gen(table_root)
-            if tmeta["max_tag"] is None:
-                return False
-            try:
-                return int(tag) <= int(tmeta["max_tag"])
-            except (TypeError, ValueError):
-                return False
-
-        for c in spec.support_cols():
-            if _tag_folded(_sup_root(root, c)):
-                continue
+        ext = (
+            _ext_recompute(spark, root, spec, contrib, touched, bf, tag)
+            if spec.support_cols()
+            else None
+        )
+        agg_delta = _counter_delta(contrib, spec)
+        if out_log is not None:
             append_delta(
-                spark, _sup_root(root, c), _support_delta(contrib, c), tag=tag
+                spark, out_log,
+                _emission(spark, agg_root, spec, touched, bf, agg_delta, ext, seq),
+                tag=tag,
             )
-
-        def hint(df: DataFrame) -> DataFrame:
-            return F.broadcast(df) if broadcast_patches else df
-
-        # 2. extremes for the touched groups, from the COMMITTED support
-        # state (base slice pruned to the touched partition directories +
-        # the pending deltas, this batch's included). Counter-only specs
-        # skip the touched/bucket collection entirely — nothing consumes it.
-        ext: DataFrame | None = None
-        if spec.support_cols():
-            ext = _ext_recompute(
-                spark, root, spec, touched, _bucket_filter(tbuckets), hint
-            )
-
-        # 3. the aggregate delta: signed counters per touched group, plus
-        # the absolute recomputed extremes riding on the same row
-        agg_delta = _counter_delta(contrib, spec)
-        if ext is not None:
-            a, e = agg_delta.alias("__a"), hint(ext).alias("__e")
-            sel: list[Column] = [a[GKEY]] + [
-                a[c].alias(c) for c in _counter_cols(spec)
-            ]
-            for c in spec.support_cols():
-                for x in spec.ext_cols(c):
-                    col = F.coalesce(e[x], F.lit(0)) if x.startswith("__cd_") else e[x]
-                    sel.append(col.alias(x))
-            agg_delta = a.join(e, on=[GKEY], how="left").select(*sel)
-        return append_delta(spark, agg_root, agg_delta, tag=tag) is not None
-    finally:
-        contrib.unpersist(False)
-
-
-def ivm_log_batch_changes(
-    spark: SparkSession,
-    root: str,
-    snapshot_before: DataFrame,
-    changes: DataFrame,
-    keys: Sequence[str],
-    order: Sequence[Column | str],
-    spec: AggViewSpec,
-    seq: int,
-    broadcast_patches: bool = True,
-    tag: str | None = None,
-) -> DataFrame:
-    """The GROUP-LEVEL change stream one source micro-batch induces on the
-    maintained aggregate view — the view's own keyed upsert/tombstone
-    stream (user-facing view columns + ``__seq`` + ``__deleted``), so
-    maintained aggregates COMPOSE downstream exactly like the join arm's
-    views do (``maintain_join_with_changes``): a further MERGE, an SCD2
-    history, an alerting sink. This is the retraction-bearing output the
-    reference platform's change streams carry for aggregating pipelines
-    (``decodable/client/schema.py:109-111`` — a GROUP BY pipeline's sink
-    is itself a change stream keyed by the group).
-
-    PURE — writes nothing. The crash-safe composition is emit-THEN-append,
-    mirroring the join arm's view-delta-before-state-delta order::
-
-        out = ivm_log_batch_changes(spark, root, snap, batch, k, o, spec,
-                                    seq, tag=str(seq))
-        append_delta(spark, out_log, out, tag=str(seq))   # dedupes replays
-        ivm_log_append(spark, root, snap, batch, k, o, spec, tag=str(seq))
-
-    A crash between the two replays the batch against UNCHANGED committed
-    state — this function recomputes bit-identical changes, the out-log
-    append no-ops on its tag, and the state append proceeds. (Computing
-    the post-image from committed-state + local delta instead of from a
-    post-append read is what makes the pre-append emission possible.)
-    Pass the SAME ``tag`` the state append will use: a replay after the
-    support appends landed must not splice the batch's support delta on
-    top of a fold that already reads it (see :func:`_tag_in_log`).
-
-    Emitted per touched group: the post-batch view row (``__deleted``
-    false), or a tombstone with NULL aggregate outputs when the group's
-    live count reaches zero. Cost: one extra batch-sized maintenance-shaped
-    pass (change pairs + contributions + touched-bucket pruned folds) on
-    top of the append that follows — O(|batch| + touched support slices),
-    never O(|state|)."""
-    from dbt_decodable_spark.operators.ivm import project_view
-
-    agg_root = _agg_root(root)
-    _, meta = _latest_gen(agg_root)
-    delete_col = meta["delete_col"]
-    snapshot_cols = list(snapshot_before.columns)
-    pairs = change_pairs(
-        snapshot_before, changes, keys, order,
-        prune_target=broadcast_patches,
-    )
-    contrib = _contributions(pairs, snapshot_cols, spec, delete_col).persist()
-    try:
-        counter_cols = _counter_cols(spec)
-        ext_state = _ext_state_cols(spec)
-        out_schema_cols = list(spec.outputs())
-
-        def _empty() -> DataFrame:
-            probe = _fold(spark, agg_root, GKEY, counter_cols, ext_state,
-                          base_filter=F.lit(False))
-            img = project_view(probe, spec)
-            return (
-                img.withColumn("__seq", F.lit(seq).cast("long"))
-                .withColumn("__deleted", F.lit(False))
-                .limit(0)
-            )
-
-        touched = contrib.select(GKEY).distinct()
-        # one action: emptiness probe + the touched-bucket collect
-        tbuckets = _collect_touched_buckets(touched, meta)
-        if not tbuckets:
-            return _empty()
-        bf = _bucket_filter(tbuckets)
-
-        def hint(df: DataFrame) -> DataFrame:
-            return F.broadcast(df) if broadcast_patches else df
-
-        # absolute extremes for the touched groups — the same recompute
-        # ivm_log_append rides on its delta rows, from COMMITTED support
-        # state plus this batch's (unwritten) support contributions; on a
-        # crash replay whose support deltas already landed (recognized by
-        # ``tag``), the committed fold covers them and nothing is spliced
-        ext = _ext_recompute(
-            spark, root, spec, touched, bf, hint,
-            pending_delta=lambda c: (
-                None
-                if _tag_in_log(_sup_root(root, c), tag)
-                else _support_delta(contrib, c)
-            ),
-        )
-
-        # signed counter deltas per touched group (identical arithmetic to
-        # the append path — both call _counter_delta)
-        agg_delta = _counter_delta(contrib, spec)
-
-        # committed pre-images of the touched groups (pruned fold)
-        pre = _fold(spark, agg_root, GKEY, counter_cols, ext_state,
-                    base_filter=bf).join(
-            hint(touched), on=[GKEY], how="left_semi"
-        )
-        d, p = agg_delta.alias("__d"), hint(pre).alias("__p")
-        post_cols: list[Column] = [d[GKEY]] + [
-            (F.coalesce(p[c], F.lit(0)) + d[c]).alias(c) for c in counter_cols
-        ]
-        if ext is not None:
-            e = hint(ext).alias("__e")
-            joined = d.join(p, on=[GKEY], how="left").join(e, on=[GKEY], how="left")
-            for c in spec.support_cols():
-                for x in spec.ext_cols(c):
-                    col = (
-                        F.coalesce(e[x], F.lit(0)) if x.startswith("__cd_") else e[x]
-                    )
-                    post_cols.append(col.alias(x))
-            post = joined.select(*post_cols)
-        else:
-            post = d.join(p, on=[GKEY], how="left").select(*post_cols)
-
-        alive = post.filter(F.col("__cnt") > 0)
-        img = project_view(alive, spec).withColumn("__deleted", F.lit(False))
-        img_types = {f.name: f.dataType for f in img.schema.fields}
-        gone = post.filter(F.col("__cnt") <= 0).select(
-            *[F.col(GKEY).getField(g).alias(g) for g in spec.group_cols],
-            *[
-                F.lit(None).cast(img_types[c]).alias(c)
-                for c in out_schema_cols
-                if c not in spec.group_cols
-            ],
-        ).select(*out_schema_cols).withColumn("__deleted", F.lit(True))
-        return (
-            img.unionByName(gone)
-            .withColumn("__seq", F.lit(seq).cast("long"))
-            .select(*out_schema_cols, "__seq", "__deleted")
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        contrib.unpersist(False)
-
-
-def ivm_log_append_with_changes(
-    spark: SparkSession,
-    root: str,
-    snapshot_before: DataFrame,
-    changes: DataFrame,
-    keys: Sequence[str],
-    order: Sequence[Column | str],
-    spec: AggViewSpec,
-    seq: int,
-    out_log: str,
-    tag: str | None = None,
-    broadcast_patches: bool = True,
-) -> bool:
-    """Fused :func:`ivm_log_batch_changes` → out-log append →
-    :func:`ivm_log_append`: ONE maintenance-shaped pass (change pairs,
-    contributions, touched-bucket pruned folds) shared between the
-    emission and the state append, instead of the two passes the separate
-    calls pay — the emitting stages' per-batch fixed cost, halved (VERDICT
-    r11 item 4). The crash contract is unchanged: the out-log delta
-    commits BEFORE any state delta, replays dedupe on ``tag`` on every
-    log, and a replay of an already-folded batch returns False without
-    re-emitting (its original emission necessarily landed — emission and
-    state append are non-empty for exactly the same batches).
-
-    The extremes reuse is sound both ways: the emission path computes
-    them from committed support state SPLICED with the batch's unwritten
-    support delta, which is exactly the post-support-append committed
-    fold the append path would recompute."""
-    from dbt_decodable_spark.operators.ivm import project_view
-
-    agg_root = _agg_root(root)
-    _, meta = _latest_gen(agg_root)
-    delete_col = meta["delete_col"]
-    if tag is not None and meta["max_tag"] is not None:
-        try:
-            if int(tag) <= int(meta["max_tag"]):
-                return False  # replay of a fully-folded batch
-        except (TypeError, ValueError):
-            pass
-    snapshot_cols = list(snapshot_before.columns)
-    pairs = change_pairs(
-        snapshot_before, changes, keys, order,
-        prune_target=broadcast_patches,
-    )
-    contrib = _contributions(pairs, snapshot_cols, spec, delete_col).persist()
-    try:
-        counter_cols = _counter_cols(spec)
-        ext_state = _ext_state_cols(spec)
-        out_schema_cols = list(spec.outputs())
-        touched = contrib.select(GKEY).distinct()
-        # one action: emptiness probe + the touched-bucket collect
-        tbuckets = _collect_touched_buckets(touched, meta)
-        if not tbuckets:
-            return False
-        bf = _bucket_filter(tbuckets)
-
-        def hint(df: DataFrame) -> DataFrame:
-            return F.broadcast(df) if broadcast_patches else df
-
-        ext: DataFrame | None = None
-        if spec.support_cols():
-            # crash replay guard: after a crash BETWEEN the support appends
-            # and the agg append, the committed support fold already reads
-            # this batch's delta (tag-landed) — splicing it again would
-            # double the support contributions and corrupt the recomputed
-            # extremes the replayed agg delta then lands durably
-            ext = _ext_recompute(
-                spark, root, spec, touched, bf, hint,
-                pending_delta=lambda c: (
-                    None
-                    if _tag_in_log(_sup_root(root, c), tag)
-                    else _support_delta(contrib, c)
-                ),
-            )
-        agg_delta = _counter_delta(contrib, spec)
-
-        # ---- emission (the ivm_log_batch_changes body, on the shared
-        # frames): committed pre-images + signed deltas → post images
-        pre = _fold(spark, agg_root, GKEY, counter_cols, ext_state,
-                    base_filter=bf).join(
-            hint(touched), on=[GKEY], how="left_semi"
-        )
-        d, p = agg_delta.alias("__d"), hint(pre).alias("__p")
-        post_cols: list[Column] = [d[GKEY]] + [
-            (F.coalesce(p[c], F.lit(0)) + d[c]).alias(c) for c in counter_cols
-        ]
-        if ext is not None:
-            e = hint(ext).alias("__e")
-            joined = d.join(p, on=[GKEY], how="left").join(
-                e, on=[GKEY], how="left"
-            )
-            for c in spec.support_cols():
-                for x in spec.ext_cols(c):
-                    col = (
-                        F.coalesce(e[x], F.lit(0))
-                        if x.startswith("__cd_")
-                        else e[x]
-                    )
-                    post_cols.append(col.alias(x))
-            post = joined.select(*post_cols)
-        else:
-            post = d.join(p, on=[GKEY], how="left").select(*post_cols)
-        alive = post.filter(F.col("__cnt") > 0)
-        img = project_view(alive, spec).withColumn("__deleted", F.lit(False))
-        img_types = {f.name: f.dataType for f in img.schema.fields}
-        gone = post.filter(F.col("__cnt") <= 0).select(
-            *[F.col(GKEY).getField(g).alias(g) for g in spec.group_cols],
-            *[
-                F.lit(None).cast(img_types[c]).alias(c)
-                for c in out_schema_cols
-                if c not in spec.group_cols
-            ],
-        ).select(*out_schema_cols).withColumn("__deleted", F.lit(True))
-        out = (
-            img.unionByName(gone)
-            .withColumn("__seq", F.lit(seq).cast("long"))
-            .select(*out_schema_cols, "__seq", "__deleted")
-        )
-        append_delta(spark, out_log, out, tag=tag)
-
-        # ---- state append (the ivm_log_append tail, on the same frames)
-        def _tag_folded(table_root: str) -> bool:
-            if tag is None:
-                return False
-            _, tmeta = _latest_gen(table_root)
-            if tmeta["max_tag"] is None:
-                return False
-            try:
-                return int(tag) <= int(tmeta["max_tag"])
-            except (TypeError, ValueError):
-                return False
-
+        # support deltas before the agg delta. Each table checks its OWN
+        # generation's max_tag: after a crash between the support and agg
+        # appends, a compaction may fold the support deltas away (their
+        # pending-tag dedup with them) while the agg-level check above
+        # still passes — without this guard the replay would re-land the
+        # folded support rows and double-count multiplicities
         for c in spec.support_cols():
-            if _tag_folded(_sup_root(root, c)):
-                continue
-            append_delta(
-                spark, _sup_root(root, c), _support_delta(contrib, c), tag=tag
-            )
-        if ext is not None:
-            a, e = agg_delta.alias("__a"), hint(ext).alias("__e")
-            sel: list[Column] = [a[GKEY]] + [
-                a[c].alias(c) for c in _counter_cols(spec)
-            ]
-            for c in spec.support_cols():
-                for x in spec.ext_cols(c):
-                    col = (
-                        F.coalesce(e[x], F.lit(0))
-                        if x.startswith("__cd_")
-                        else e[x]
-                    )
-                    sel.append(col.alias(x))
-            agg_delta = a.join(e, on=[GKEY], how="left").select(*sel)
+            if not _tag_folded(_latest_gen(_sup_root(root, c))[1], tag):
+                append_delta(
+                    spark, _sup_root(root, c), _support_delta(contrib, c), tag=tag
+                )
+        agg_delta = _with_extremes(agg_delta, ext, spec)
         return append_delta(spark, agg_root, agg_delta, tag=tag) is not None
     finally:
         contrib.unpersist(False)
@@ -773,13 +532,10 @@ def ivm_log_read(spark: SparkSession, root: str, spec: AggViewSpec) -> DataFrame
     folded = _fold(
         spark, _agg_root(root), GKEY, _counter_cols(spec), _ext_state_cols(spec)
     )
-    from dbt_decodable_spark.operators.ivm import project_view
-
     return project_view(folded, spec)
 
 
-def stream_maintain_view(
-    stream_df: DataFrame,
+def maintain_view_batch(
     root: str,
     snapshot_path: str,
     keys: Sequence[str],
@@ -791,8 +547,10 @@ def stream_maintain_view(
     snapshot_partition_expr: Column | None = None,
     emit_log: str | None = None,
 ):
-    """Structured-Streaming front door: a continuously-maintained GROUP BY
-    view of a CDC stream, end to end. Per micro-batch the handler
+    """Structured-Streaming front door: the ``foreachBatch`` handler that
+    keeps a GROUP BY view of a CDC stream continuously maintained — run it
+    as ``stream_df.writeStream.foreachBatch(maintain_view_batch(...))``,
+    picking trigger and checkpoint. Per micro-batch the handler
 
     1. maintains the view FIRST (:func:`ivm_log_append`, tagged with the
        batch id — the module's ordering contract), reading the pre-merge
@@ -808,8 +566,7 @@ def stream_maintain_view(
 
     The snapshot must already be laid out by ``write_hash_partitioned``
     and the view initialized by :func:`ivm_log_init` (one-time setup, like
-    every managed table here). Returns a ``DataStreamWriter`` — the caller
-    picks trigger/checkpoint and ``start()``s.
+    every managed table here).
 
     This is the reference's pipeline model made literal: a SQL aggregate
     over a change stream that stays current forever without a recompute
@@ -817,42 +574,11 @@ def stream_maintain_view(
     the dbt adapter's rejected ``incremental`` materialization).
 
     ``emit_log`` maintains the rollup's OWN group-keyed change log
-    alongside the state — the composition surface that lets ANOTHER
-    maintained stage consume this rollup (the reference allows any model's
-    sink to source the next model, ``impl.py:419-447``). Per batch the
-    group-level changes are emitted BEFORE the state append (the
-    :func:`ivm_log_batch_changes` crash contract: a replay before the
-    state advanced recomputes bit-identical rows and dedupes on the tag;
-    a replay after can only happen when the original emit landed, because
-    the state append and the emission are non-empty for exactly the same
-    batches). Emitted ``__seq`` is ``batch_id + 1`` so the init image's
-    floor seq 0 sorts strictly below every batch."""
-    return stream_df.writeStream.foreachBatch(
-        maintain_view_batch(
-            root, snapshot_path, keys, order, spec,
-            compact_every=compact_every,
-            vacuum_horizon_seconds=vacuum_horizon_seconds,
-            snapshot_n_buckets=snapshot_n_buckets,
-            snapshot_partition_expr=snapshot_partition_expr,
-            emit_log=emit_log,
-        )
-    )
-
-
-def maintain_view_batch(
-    root: str,
-    snapshot_path: str,
-    keys: Sequence[str],
-    order: Sequence[Column | str],
-    spec: AggViewSpec,
-    compact_every: int = 4,
-    vacuum_horizon_seconds: float = 600.0,
-    snapshot_n_buckets: int = 64,
-    snapshot_partition_expr: Column | None = None,
-    emit_log: str | None = None,
-):
-    """The ``foreachBatch`` handler behind :func:`stream_maintain_view`,
-    for callers that run the bounded stream themselves."""
+    alongside the state (``ivm_log_append``'s ``out_log``) — the
+    composition surface that lets ANOTHER maintained stage consume this
+    rollup (the reference allows any model's sink to source the next
+    model, ``impl.py:419-447``). Emitted ``__seq`` is ``batch_id + 1`` so
+    the init image's floor seq 0 sorts strictly below every batch."""
     from dbt_decodable_spark.streaming.changelog import (
         compact_and_vacuum,
         read_merged,
@@ -866,17 +592,10 @@ def maintain_view_batch(
             sp, snapshot_path, keys, order, include_tombstones=True,
             prune_fold=True,
         ).select(*batch_df.columns)
-        if emit_log is not None:
-            # fused emission + state append: one maintenance-shaped pass
-            ivm_log_append_with_changes(
-                sp, root, snapshot_before, batch_df, keys, order, spec,
-                seq=batch_id + 1, out_log=emit_log, tag=str(batch_id),
-            )
-        else:
-            ivm_log_append(
-                sp, root, snapshot_before, batch_df, keys, order, spec,
-                tag=str(batch_id),
-            )
+        ivm_log_append(
+            sp, root, snapshot_before, batch_df, keys, order, spec,
+            tag=str(batch_id), out_log=emit_log, seq=batch_id + 1,
+        )
         append_delta(sp, snapshot_path, batch_df, tag=str(batch_id))
         # count PENDING (seq > watermark) deltas, not every committed file:
         # folded deltas are retained for vacuum_horizon_seconds plus the
@@ -934,14 +653,7 @@ def ivm_log_compact(
             pend = _pending(table_root, tmeta["watermark"])
             if pend:
                 max_seq = max(s for s, _ in pend)
-                tags = []
-                for _, p in pend:
-                    parts = os.path.basename(p).split("-", 2)
-                    if len(parts) == 3:
-                        try:
-                            tags.append(int(parts[2]))
-                        except ValueError:
-                            pass
+                tags = [int_tag(parse_delta_name(p)[1]) for _, p in pend]
                 new_tag = max(
                     [t for t in [tmeta["max_tag"], *tags] if t is not None],
                     default=None,
@@ -964,11 +676,12 @@ def ivm_log_compact(
             # keep_gens (same horizon)
             now = time.time()
             all_deltas = list_deltas(table_root)
-            floor = max(all_deltas, key=_delta_seq, default=None)
+            seq_of = {p: parse_delta_name(p)[0] for p in all_deltas}
+            floor = max(all_deltas, key=seq_of.get, default=None)
             for p in all_deltas:
                 if (
                     p != floor
-                    and _delta_seq(p) <= watermark
+                    and seq_of[p] <= watermark
                     and now - os.path.getmtime(p) > vacuum_horizon_seconds
                 ):
                     shutil.rmtree(p, ignore_errors=True)

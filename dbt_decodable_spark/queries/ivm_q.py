@@ -164,8 +164,8 @@ def ivm_agg_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     "stream is the next model's source), ROOTED at an "
     "aggregate-over-raw-stream node (r12 — the last N-node shape gap: "
     "a chain with no join anywhere): GROUP-BY-custkey rollup over the "
-    "raw orders change stream, EMITTING its own out log via the FUSED "
-    "single-pass ivm_log_append_with_changes → a cohort rollup "
+    "raw orders change stream, EMITTING its own out log from the same "
+    "single maintenance pass (ivm_log_append(out_log=)) → a cohort rollup "
     "consuming that log (the PURE-DELTA upstream shape ivm_dag "
     "auto-detects, guarded by the durable Kafka compaction floor), "
     "itself emitting → a band rollup consuming the cohort log. Three "
@@ -191,7 +191,7 @@ def ivm_dag_depth3(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dbt_decodable_spark.operators import ivm_dag
     from dbt_decodable_spark.operators.ivm import AggViewSpec
     from dbt_decodable_spark.operators.ivm_log import (
-        ivm_log_append_with_changes,
+        ivm_log_append,
         ivm_log_init,
         ivm_log_read,
     )
@@ -283,7 +283,7 @@ def ivm_dag_depth3(spark: SparkSession, sf_dir: str) -> DataFrame:
         # ver=0 inserts — customer groups DIE and the deaths retract
         # through both downstream stages) and key migrations (orders
         # moving between stage-1 groups). Stage 1 emits + appends in ONE
-        # fused maintenance pass; stages 2 and 3 CONSUME, each from the
+        # maintenance pass; stages 2 and 3 CONSUME, each from the
         # upstream's log, never a recompute.
         f_rest = orders.filter(F.pmod("o_orderkey", F.lit(3)) != 0)
         f_tomb = orders.filter(
@@ -301,9 +301,9 @@ def ivm_dag_depth3(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
         batch = f_rest.unionByName(f_tomb).unionByName(f_move)
-        ivm_log_append_with_changes(
+        ivm_log_append(
             spark, root1, snap0, batch, keys, ford, spec1,
-            seq=1, out_log=out1, tag="1",
+            tag="1", out_log=out1, seq=1,
         )
         ivm_dag.maintain_downstream(
             spark, droot2, out1, ["o_custkey"], spec2, emit_log=out2,

@@ -613,10 +613,29 @@ def _deltas_root(base_path: str) -> str:
     return base_path.rstrip("/") + ".__deltas__"
 
 
+def parse_delta_name(path: str) -> tuple[int, str | None]:
+    """``(seq, tag)`` of a ``delta-<seq>[-<tag>]`` directory written by
+    :func:`append_delta` (a path or a bare name); ``tag`` is None for an
+    untagged delta. A tag may itself contain dashes
+    (``compacted-<floor>-<id>``)."""
+    _, seq, *tag = os.path.basename(path).split("-", 2)
+    return int(seq), (tag[0] if tag else None)
+
+
+def int_tag(tag) -> int | None:
+    """A batch tag as an integer (Structured Streaming batch ids and view
+    ``__seq`` watermarks), or None for an absent or non-integer tag such
+    as ``compacted-<floor>-<id>``."""
+    try:
+        return int(tag)
+    except (TypeError, ValueError):
+        return None
+
+
 def _committed_deltas(root: str) -> tuple[list[int], set[str]]:
     """(committed sequence numbers, committed tags) under ``root``."""
-    parts = [d.split("-", 2) for d in commit.committed(root, "delta-")]
-    return [int(p[1]) for p in parts], {p[2] for p in parts if len(p) == 3}
+    names = [parse_delta_name(d) for d in commit.committed(root, "delta-")]
+    return [s for s, _ in names], {t for _, t in names if t is not None}
 
 
 def append_delta(

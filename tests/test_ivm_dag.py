@@ -20,6 +20,7 @@ import pytest as _pytest_tier
 pytestmark = _pytest_tier.mark.slow
 
 import os
+import shutil
 
 import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
@@ -32,6 +33,8 @@ from dbt_decodable_spark.streaming.changelog import (
     append_delta,
     compact_and_vacuum,
     fold_last_image,
+    list_deltas,
+    parse_delta_name,
     write_hash_partitioned,
 )
 
@@ -393,12 +396,19 @@ class TestWatermarkProtocol:
 
 class TestAggChangeStream:
     """The maintained aggregate's OWN change stream
-    (ivm_log.ivm_log_batch_changes + maintain_downstream(emit_log=...)):
+    (ivm_log.ivm_log_append(out_log=, seq=) + maintain_downstream(emit_log=...)):
     group-keyed upserts/tombstones that compose one level further — the
     depth-3 DAG (join view → rollup → rollup consumers). The folded
     emission must equal the maintained view after every batch, tombstones
     must appear exactly when a group empties, and the pre-append emission
     must be replay-stable (the crash-ordering contract)."""
+
+    @staticmethod
+    def _emitted(spark, out_log, tag):
+        """The rows the pass tagged ``tag`` emitted into ``out_log`` ([]
+        when it emitted nothing)."""
+        paths = [p for p in list_deltas(out_log) if parse_delta_name(p)[1] == tag]
+        return [tuple(r) for r in spark.read.parquet(*paths).collect()] if paths else []
 
     def _fold_emitted(self, spark, emitted_rows, schema):
         df = spark.createDataFrame(emitted_rows, schema)
@@ -409,14 +419,13 @@ class TestAggChangeStream:
     def test_emission_folds_to_view_and_tombstones(self, spark, tmp_path):
         from dbt_decodable_spark.operators.ivm_log import (
             ivm_log_append,
-            ivm_log_batch_changes,
             ivm_log_init,
         )
 
         keys, order = ["pk"], [F.col("__seq")]
         base = [(1, "a", 10, 0, False), (2, "b", 5, 0, False),
                 (3, None, 7, 0, False)]
-        root = str(tmp_path / "state")
+        root, out_log = str(tmp_path / "state"), str(tmp_path / "out")
         ivm_log_init(
             spark, root, _vdf(spark, base), SPEC, delete_col="__deleted"
         )
@@ -434,19 +443,21 @@ class TestAggChangeStream:
         for k, rows in enumerate(batches, start=1):
             b = _vdf(spark, rows)
             snap_before = fold_last_image(_vdf(spark, seen), keys, order)
-            out = ivm_log_batch_changes(
-                spark, root, snap_before, b, keys, order, SPEC, seq=k * 10
+            # replay stability: the same pass over an identical copy of the
+            # pre-append state emits identical rows
+            twin = str(tmp_path / f"twin{k}")
+            shutil.copytree(root, twin)
+            for r, log in ((root, out_log), (twin, twin + "_out")):
+                assert ivm_log_append(
+                    spark, r, snap_before, b, keys, order, SPEC,
+                    tag=str(k), out_log=log, seq=k * 10,
+                )
+            out = self._emitted(spark, out_log, str(k))
+            assert sorted(out, key=repr) == sorted(
+                self._emitted(spark, twin + "_out", str(k)), key=repr
             )
-            # replay stability: recomputing BEFORE the append is identical
-            out2 = ivm_log_batch_changes(
-                spark, root, snap_before, b, keys, order, SPEC, seq=k * 10
-            )
-            assert _rows(out) == _rows(out2)
-            ivm_log_append(
-                spark, root, snap_before, b, keys, order, SPEC, tag=str(k)
-            )
-            out_schema = out.schema
-            emitted += [tuple(r) for r in out.collect()]
+            out_schema = spark.read.parquet(*list_deltas(out_log)).schema
+            emitted += out
             seen += rows
             got = _rows(self._fold_emitted(spark, emitted, out_schema))
             want = _rows(_expected(spark, seen))
@@ -468,7 +479,6 @@ class TestAggChangeStream:
         resurrections and stale no-ops included."""
         from dbt_decodable_spark.operators.ivm_log import (
             ivm_log_append,
-            ivm_log_batch_changes,
             ivm_log_init,
         )
 
@@ -514,15 +524,11 @@ class TestAggChangeStream:
             n = data.draw(st.integers(1, len(rest)))
             batch, rest = rest[:n], rest[n:]
             snap_before = fold_last_image(_vdf(spark, seen), keys, order)
-            out = ivm_log_batch_changes(
-                spark, root, snap_before, _vdf(spark, batch), keys, order,
-                SPEC, seq=batch[-1][3],
-            )
             ivm_log_append(
                 spark, root, snap_before, _vdf(spark, batch), keys, order,
-                SPEC, tag=str(k),
+                SPEC, tag=str(k), out_log=str(tmp / "out"), seq=batch[-1][3],
             )
-            emitted += [tuple(r) for r in out.collect()]
+            emitted += self._emitted(spark, str(tmp / "out"), str(k))
             seen += batch
             got = _rows(self._fold_emitted(spark, emitted, out_schema))
             assert got == _rows(_expected(spark, seen))
@@ -535,7 +541,6 @@ class TestAggChangeStream:
         from the post-image recompute."""
         from dbt_decodable_spark.operators.ivm_log import (
             ivm_log_append,
-            ivm_log_batch_changes,
             ivm_log_init,
         )
 
@@ -551,17 +556,15 @@ class TestAggChangeStream:
         # retract from the NULL-bucketed base, not from nothing
         b = [(1, None, 3, 10, True)]
         snap_before = fold_last_image(_vdf(spark, base), keys, order)
-        out = ivm_log_batch_changes(
+        out_log = str(tmp_path / "out")
+        ivm_log_append(
             spark, root, snap_before, _vdf(spark, b), keys, order, SPEC,
-            seq=10,
+            tag="1", out_log=out_log, seq=10,
         )
+        out = spark.read.parquet(*list_deltas(out_log))
         got = _rows(out.drop("__seq", "__deleted"))
         assert got == _rows(
             _expected(spark, base + b).filter(F.col("grp").isNull())
-        )
-        ivm_log_append(
-            spark, root, snap_before, _vdf(spark, b), keys, order, SPEC,
-            tag="1",
         )
         assert _rows(ivm_log_read(spark, root, SPEC)) == _rows(
             _expected(spark, base + b)
@@ -572,11 +575,6 @@ class TestAggChangeStream:
         emitted change log: folding the emitted stream equals the rollup
         view after every consumption step, and a same-tag replay of the
         emission dedupes in the out log."""
-        from dbt_decodable_spark.streaming.changelog import (
-            list_deltas,
-            write_hash_partitioned,
-        )
-
         view_log = str(tmp_path / "view")
         root = str(tmp_path / "down")
         out_log = str(tmp_path / "out")

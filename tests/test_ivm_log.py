@@ -207,7 +207,7 @@ class TestIvmLogStreaming:
     def test_stream_maintains_view_end_to_end(self, spark, tmp_path):
         """The full front door: a real bounded Structured-Streaming run
         (maxFilesPerTrigger=1 → one micro-batch per file) through
-        stream_maintain_view; afterwards the view equals the recompute
+        maintain_view_batch; afterwards the view equals the recompute
         over the snapshot's merged state, and both logs compacted."""
         from dbt_decodable_spark.streaming.changelog import (
             read_merged,
@@ -238,10 +238,12 @@ class TestIvmLogStreaming:
             .parquet(src)
         )
         q = (
-            il.stream_maintain_view(
-                stream, root, snap_path, KEYS, ORDER, SPEC,
-                compact_every=3, vacuum_horizon_seconds=0.0,
-                snapshot_n_buckets=4,
+            stream.writeStream.foreachBatch(
+                il.maintain_view_batch(
+                    root, snap_path, KEYS, ORDER, SPEC,
+                    compact_every=3, vacuum_horizon_seconds=0.0,
+                    snapshot_n_buckets=4,
+                )
             )
             .option("checkpointLocation", str(tmp_path / "ckpt"))
             .trigger(availableNow=True)
@@ -741,8 +743,10 @@ class TestReviewRound10:
         )
         # default vacuum horizon (600 s): folded deltas stay on disk
         q = (
-            il.stream_maintain_view(
-                stream, root, snap_path, KEYS, ORDER, SPEC, compact_every=2
+            stream.writeStream.foreachBatch(
+                il.maintain_view_batch(
+                    root, snap_path, KEYS, ORDER, SPEC, compact_every=2
+                )
             )
             .option("checkpointLocation", str(tmp_path / "ckpt"))
             .trigger(availableNow=True)

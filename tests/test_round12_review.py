@@ -410,12 +410,13 @@ class TestChangePairsPruneTarget:
 
 
 class TestFusedEmitAppendEquivalence:
-    """r12: ivm_log_append_with_changes (one maintenance pass feeding both
-    the emission and the state append) must land EXACTLY what the separate
-    ivm_log_batch_changes + append_delta + ivm_log_append calls land —
-    same emitted rows, same folded state — including on a spec with
-    support tables (min/max/count-distinct), where the extremes-reuse
-    argument does the heavy lifting."""
+    """r12: emitting the view's change stream is one optional step inside
+    the one maintenance pass (``ivm_log_append(out_log=, seq=)``). With and
+    without the emission the pass must land the SAME folded state, and the
+    emitted rows must equal the diff of the declarative recompute before
+    and after the batch — on a spec with support tables
+    (min/max/count-distinct), where the spliced-extremes argument does the
+    heavy lifting."""
 
     VDDL = "pk long, grp string, val long, __seq long, __deleted boolean"
     SPEC = AggViewSpec(
@@ -433,69 +434,87 @@ class TestFusedEmitAppendEquivalence:
     BATCH = [(1, "a", 11, 5, False), (4, "c", 5, 5, True),
              (5, "d", 7, 5, False), (6, "b", 30, 5, False)]
 
-    def _run(self, spark, root, out_log, fused: bool):
+    def _run(self, spark, root, out_log):
         from dbt_decodable_spark.operators.ivm_log import (
             ivm_log_append,
-            ivm_log_append_with_changes,
-            ivm_log_batch_changes,
             ivm_log_init,
             ivm_log_read,
         )
-        from dbt_decodable_spark.streaming.changelog import append_delta
 
         base = spark.createDataFrame(self.BASE, self.VDDL)
         batch = spark.createDataFrame(self.BATCH, self.VDDL)
         ivm_log_init(spark, root, base, self.SPEC, delete_col="__deleted")
-        if fused:
-            appended = ivm_log_append_with_changes(
-                spark, root, base, batch, ["pk"], [F.col("__seq")],
-                self.SPEC, seq=5, out_log=out_log, tag="5",
-            )
-        else:
-            out = ivm_log_batch_changes(
-                spark, root, base, batch, ["pk"], [F.col("__seq")],
-                self.SPEC, seq=5,
-            )
-            append_delta(spark, out_log, out, tag="5")
-            appended = ivm_log_append(
-                spark, root, base, batch, ["pk"], [F.col("__seq")],
-                self.SPEC, tag="5",
-            )
-        assert appended
-        emitted = spark.read.parquet(
-            *list_deltas(out_log)
+        assert ivm_log_append(
+            spark, root, base, batch, ["pk"], [F.col("__seq")],
+            self.SPEC, tag="5", out_log=out_log, seq=5,
         )
-        return _rows(emitted), _rows(ivm_log_read(spark, root, self.SPEC))
+        emitted = (
+            _rows(spark.read.parquet(*list_deltas(out_log)))
+            if out_log is not None
+            else None
+        )
+        return emitted, _rows(ivm_log_read(spark, root, self.SPEC))
 
-    def test_fused_equals_separate(self, spark, tmp_path):
-        e1, s1 = self._run(
-            spark, str(tmp_path / "r1"), str(tmp_path / "o1"), fused=True
+    def _view(self, spark, rows):
+        from dbt_decodable_spark.operators.ivm import compute_agg_view
+
+        snap = fold_last_image(
+            spark.createDataFrame(rows, self.VDDL), ["pk"], [F.col("__seq")]
         )
-        e2, s2 = self._run(
-            spark, str(tmp_path / "r2"), str(tmp_path / "o2"), fused=False
-        )
-        assert e1 == e2, "emitted change rows diverge"
-        assert s1 == s2, "folded state diverges"
+        return {
+            r[0]: tuple(r)
+            for r in compute_agg_view(snap, self.SPEC, delete_col="__deleted")
+            .select(*self.SPEC.outputs())
+            .collect()
+        }
+
+    def test_emit_equals_recompute_diff(self, spark, tmp_path):
+        e1, s1 = self._run(spark, str(tmp_path / "r1"), str(tmp_path / "o1"))
+        _, s2 = self._run(spark, str(tmp_path / "r2"), None)
+        assert s1 == s2, "emitting changes the folded state"
+        # the recompute diff: changed/new groups as upserts, emptied groups
+        # as NULL-aggregate tombstones
+        before = self._view(spark, self.BASE)
+        after = self._view(spark, self.BASE + self.BATCH)
+        n_aggs = len(self.SPEC.outputs()) - 1
+        want = [(*r, 5, False) for g, r in after.items() if before.get(g) != r]
+        want += [(g, *[None] * n_aggs, 5, True) for g in before if g not in after]
+        assert e1 == sorted(want, key=lambda t: tuple((v is None, v) for v in t))
         # the tombstoned group c is emitted as a NULL-agg tombstone
         dead = [r for r in e1 if r[0] == "c"]
         assert len(dead) == 1 and dead[0][-1] is True
+
+    def test_same_tag_replay_adds_no_out_delta(self, spark, tmp_path):
+        from dbt_decodable_spark.operators.ivm_log import ivm_log_append
+
+        root, out_log = str(tmp_path / "r"), str(tmp_path / "o")
+        e1, s1 = self._run(spark, root, out_log)
+        deltas = list_deltas(out_log)
+        base = spark.createDataFrame(self.BASE, self.VDDL)
+        batch = spark.createDataFrame(self.BATCH, self.VDDL)
+        assert not ivm_log_append(
+            spark, root, base, batch, ["pk"], [F.col("__seq")],
+            self.SPEC, tag="5", out_log=out_log, seq=5,
+        )
+        assert list_deltas(out_log) == deltas
+        assert _rows(spark.read.parquet(*deltas)) == e1
 
     def test_fused_replay_noops(self, spark, tmp_path):
         """A replay of an already-folded batch must return False and leave
         both logs untouched."""
         from dbt_decodable_spark.operators.ivm_log import (
-            ivm_log_append_with_changes,
+            ivm_log_append,
             ivm_log_compact,
         )
 
         root, out_log = str(tmp_path / "r"), str(tmp_path / "o")
-        e1, s1 = self._run(spark, root, out_log, fused=True)
+        e1, s1 = self._run(spark, root, out_log)
         ivm_log_compact(spark, root, self.SPEC)  # fold the tag into the gen
         base = spark.createDataFrame(self.BASE, self.VDDL)
         batch = spark.createDataFrame(self.BATCH, self.VDDL)
-        assert not ivm_log_append_with_changes(
+        assert not ivm_log_append(
             spark, root, base, batch, ["pk"], [F.col("__seq")],
-            self.SPEC, seq=5, out_log=out_log, tag="5",
+            self.SPEC, tag="5", out_log=out_log, seq=5,
         )
         emitted = spark.read.parquet(*list_deltas(out_log))
         assert _rows(emitted) == e1

@@ -7,8 +7,9 @@
    set missing the winner's fk, and the LEFT as-of emitted a NULL-payload
    upsert at a higher ``__seq`` that overwrote the correct view row. The
    prune now unions the current winners' fks for the batch's pks.
-2. (high) ``ivm_log_append_with_changes`` spliced the batch's unwritten
-   support delta into the extreme recompute unconditionally; on a crash
+2. (high) the emitting maintenance pass (now ``ivm_log_append`` with an
+   ``out_log``) spliced the batch's unwritten support delta into the
+   extreme recompute unconditionally; on a crash
    replay AFTER the support appends landed (before the agg append) the
    committed fold already reads that delta, so the splice doubled it — a
    doubled ``-1`` drove a (group, value) support count from net 1 to 0
@@ -214,9 +215,9 @@ class TestSupportSpliceCrashReplay:
 
         monkeypatch.setattr(il, "append_delta", crashing)
         with pytest.raises(RuntimeError, match="simulated crash"):
-            il.ivm_log_append_with_changes(
+            il.ivm_log_append(
                 spark, root, base, batch, ["pk"], [F.col("__seq")],
-                spec, seq=5, out_log=out_log, tag="5",
+                spec, tag="5", out_log=out_log, seq=5,
             )
         monkeypatch.setattr(il, "append_delta", real)
         # the crash landed the out-log delta and every support delta
@@ -227,9 +228,9 @@ class TestSupportSpliceCrashReplay:
             )
         # replay: same batch, same tag — must complete the agg append with
         # extremes identical to a crash-free run
-        assert il.ivm_log_append_with_changes(
+        assert il.ivm_log_append(
             spark, root, base, batch, ["pk"], [F.col("__seq")],
-            spec, seq=5, out_log=out_log, tag="5",
+            spec, tag="5", out_log=out_log, seq=5,
         )
         return _rows(il.ivm_log_read(spark, root, spec)), spec
 
@@ -251,9 +252,9 @@ class TestSupportSpliceCrashReplay:
         base = spark.createDataFrame(self.BASE, self.VDDL)
         batch = spark.createDataFrame(self.BATCH, self.VDDL)
         il.ivm_log_init(spark, root, base, spec, delete_col="__deleted")
-        assert il.ivm_log_append_with_changes(
+        assert il.ivm_log_append(
             spark, root, base, batch, ["pk"], [F.col("__seq")],
-            spec, seq=5, out_log=out_log, tag="5",
+            spec, tag="5", out_log=out_log, seq=5,
         )
         assert _rows(il.ivm_log_read(spark, root, spec)) == [
             ("a", 2, 10, 20, 2)

@@ -1132,6 +1132,20 @@ class TestDeltaTagIdempotence:
         assert p3 is not None and p3.endswith("delta-00000001-43")
         assert len(list_deltas(base)) == 2
 
+    def test_delta_name_parser(self):
+        from dbt_decodable_spark.streaming.changelog import (
+            int_tag,
+            parse_delta_name,
+        )
+
+        assert parse_delta_name("delta-00000003") == (3, None)
+        assert parse_delta_name("/t/x.__deltas__/delta-00000004-17") == (4, "17")
+        assert int_tag("17") == 17
+        compacted = parse_delta_name("delta-00000012-compacted-9-1a2b3c4d")
+        assert compacted == (12, "compacted-9-1a2b3c4d")
+        assert int_tag(compacted[1]) is None
+        assert int_tag(None) is None
+
 
 class TestDeltaSchemaEvolution:
     """Additive delta columns: readable via allow_schema_evolution with
